@@ -70,28 +70,15 @@ object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val threads = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[n,c,memMB] runs the SAME probe over
     // real executor processes — the full production cell of the execution
-    // matrix: many tenants × many JVMs (same executor wiring as Verify)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.scheduler.mode", "FAIR") // round-robin across tenants
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    if (master.startsWith("local-cluster")) {
-      builder
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "8g"))
-        .config("spark.executor.extraClassPath", T.absClassPath)
-        .config("spark.executor.extraJavaOptions",
-          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-    }
-    val root = builder.getOrCreate()
+    // matrix: many tenants × many JVMs (the factory wires the executors;
+    // SPARK_GRAFT_EXEC_MEM overrides their 8g, which is inert under local[n])
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      s"local[${Graft.defaultCores}]")
+    val root = Graft.session("concurrencyprobe", master = Some(master),
+      conf = Map("spark.scheduler.mode" -> "FAIR", // round-robin across tenants
+        "spark.executor.memory" -> "8g"))
     root.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_KILL=1 (local-cluster only): kill one REAL executor JVM

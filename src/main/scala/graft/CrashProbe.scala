@@ -128,12 +128,7 @@ object CrashProbe {
 
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val s = SparkSession.builder()
-      .master("local[8]").appName("graft-crashprobe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("graft-crashprobe", 8)
     s.sparkContext.setLogLevel("WARN")
 
     // one replay per scenario family: plain for dedup/upsert, flushTail for
@@ -206,25 +201,13 @@ object CrashProbeChild {
     // executor JVMs) with a DIFFERENT shuffle-partitions conf to prove a
     // checkpoint survives a topology change; default stays local[8]
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val builder = SparkSession.builder()
-      .master(master).appName(s"graft-crash-child-$scenarioName")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (master.startsWith("local-cluster")) {
-      // same executor-launch notes as Verify: forked executor JVMs need the
-      // graft classes and JDK-17 --add-opens explicitly
-      builder
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "3g"))
-        .config("spark.executor.extraClassPath", T.absClassPath)
-        .config("spark.executor.extraJavaOptions",
-          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-    }
-    val s = builder.getOrCreate()
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt
+    // executor memory is inert under local[n]; under local-cluster the
+    // factory wires the executor JVMs and SPARK_GRAFT_EXEC_MEM overrides it
+    val s = Graft.session(s"graft-crash-child-$scenarioName", shuffle,
+      Some(master), Map("spark.executor.memory" -> "3g",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     s.sparkContext.setLogLevel("WARN")
 
     val src = Streams.readReplay(s, chunkDir)

@@ -14,19 +14,47 @@ object Graft {
   val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Recommended local session: UTC, AQE on (default), shuffle partitions
-    * sized to cores — on a real cluster, size to 2-3x total executor cores
-    * and let AQE coalesce. */
-  def session(appName: String = "graft",
-              cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+  /** Cores of a local session: `SPARK_GRAFT_CPUS` when set, else every
+    * processor of this machine. The only place that variable is read. */
+  lazy val defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The conf `session` builds from: master (default `local[cores]`), UTC,
+    * shuffle partitions = `cores`, UI off, a fresh temp warehouse, then
+    * `conf` on top. A `local-cluster` master launches executor JVMs
+    * from SPARK_HOME that know nothing of this JVM's classpath or JDK-17
+    * `--add-opens` (neither WorkerCommandBuilder nor
+    * StandaloneSchedulerBackend injects JavaModuleOptions in 4.1.2), so
+    * both are forwarded; the classpath must be absolute because executors
+    * run in `$SPARK_HOME/work/...`. `SPARK_GRAFT_EXEC_MEM`, when set,
+    * sizes those executors over any `spark.executor.memory` in `conf`. */
+  private[graft] def sessionConf(appName: String, cores: Int,
+      master: Option[String], conf: Map[String, String]): Seq[(String, String)] = {
+    val m = master.getOrElse(s"local[$cores]")
+    val cluster =
+      if (!m.startsWith("local-cluster")) Nil
+      else Seq("spark.executor.extraClassPath" -> T.absClassPath,
+        "spark.executor.extraJavaOptions" ->
+          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()) ++
+        sys.env.get("SPARK_GRAFT_EXEC_MEM").map("spark.executor.memory" -> _)
+    Seq("spark.master" -> m,
+      "spark.app.name" -> appName,
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_wh_").toString) ++
+      conf ++ cluster
+  }
+
+  /** The one session factory (see `sessionConf`), with graft's functions
+    * registered. On a real cluster, size `cores` to 2-3x total executor
+    * cores and let AQE coalesce. */
+  def session(appName: String = "graft", cores: Int = defaultCores,
+              master: Option[String] = None,
+              conf: Map[String, String] = Map.empty): SparkSession = {
+    val s = sessionConf(appName, cores, master, conf)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     functions.GraftFunctions.register(s)
     s

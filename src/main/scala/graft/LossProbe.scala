@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * and exits non-zero.
   *
   * usage (SPARK_HOME and SPARK_SCALA_VERSION required for the worker to
-  * launch executor JVMs; the graft classes dir must be on the executor
-  * classpath — this main forwards its own java.class.path):
+  * launch executor JVMs; Graft.session forwards this JVM's classpath to
+  * them):
   *
   *   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   *   java <add-opens> -cp "target/scala-2.13/classes:/opt/spark/jars/＊" \
@@ -133,14 +133,8 @@ object LossProbe {
     val res = work
     killer.join(130000)
     // drain the async listener bus before reading the removal counter
-    var quiet = 0
-    var prev = removedExec.get()
-    val dl = System.currentTimeMillis() + 10000
-    while (quiet < 2 && System.currentTimeMillis() < dl) {
-      Thread.sleep(100)
-      val cur = removedExec.get()
-      if (cur == prev) quiet += 1 else { quiet = 0; prev = cur }
-    }
+    if (!T.settle(10000L, pollMs = 100L)(removedExec.get()))
+      System.err.println("[lossprobe] drain=timeout: removal count may be short")
     (res, removedExec.get() - before)
   }
 
@@ -256,20 +250,8 @@ object LossProbe {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,6144]")
     require(master.startsWith("local-cluster"),
       s"LossProbe needs separate executor processes, got master=$master")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.executor.memory", "4g")
-      // executors need the graft classes; same host, so the driver's own
-      // classpath works verbatim
-      .config("spark.executor.extraClassPath", T.absClassPath)
-      .config("spark.executor.extraJavaOptions",
-        org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("lossprobe", 8, Some(master),
+      Map("spark.executor.memory" -> "4g"))
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =

@@ -36,22 +36,14 @@ object LshSweep {
     val threshold = if (args.length > 2) args(2).toDouble else 0.9
     val plantMod = if (args.length > 3) args(3).toInt else 100
     val reps = if (args.length > 4) args(4).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the ×100 corpus (202k × 64 floats ≈ 52 MB) must still broadcast
-      // into the vector-attach stage — a noise-dense sweep point otherwise
-      // shuffles the pair stream with vectors attached; and past any
-      // broadcast budget the attach must be hash, never an SMJ sort
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    // the ×100 corpus (202k × 64 floats ≈ 52 MB) must still broadcast
+    // into the vector-attach stage — a noise-dense sweep point otherwise
+    // shuffles the pair stream with vectors attached; and past any
+    // broadcast budget the attach must be hash, never an SMJ sort
+    val spark = Graft.session("lshsweep", conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "256m",
+      "spark.sql.join.preferSortMergeJoin" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val (all, nPlanted) = plantedCorpus(spark, srcDir, plantMod)
     println(s"LSHSWEEP corpus n=${all.count()} planted_pairs=$nPlanted " +
       s"threshold=$threshold src=$srcDir")

@@ -46,22 +46,15 @@ object MinHashSweep {
     val threshold = if (args.length > 3) args(3).toDouble else 0.8
     val plantMod = if (args.length > 4) args(4).toInt else 20
     val reps = if (args.length > 5) args(5).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the verify stage must never SMJ-sort the candidate-restricted
-      // shingle stream (the unhinted-attach contract). Candidate pair sets
-      // here are small (true-pair-dominated — the sweep's own finding), so
-      // a modest broadcast budget serves them; 256m (the cosine sweep's
-      // setting) tips the corpus-sized BANDED relation itself over the
-      // broadcast-build heap at 500k docs
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    // the verify stage must never SMJ-sort the candidate-restricted
+    // shingle stream (the unhinted-attach contract). Candidate pair sets
+    // here are small (true-pair-dominated — the sweep's own finding), so
+    // a modest broadcast budget serves them; 256m (the cosine sweep's
+    // setting) tips the corpus-sized BANDED relation itself over the
+    // broadcast-build heap at 500k docs
+    val spark = Graft.session("minhashsweep", conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "32m",
+      "spark.sql.join.preferSortMergeJoin" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     val (all, nPlanted) = plantedCorpus(spark, srcDir, copies, plantMod)
     println(s"MINHASHSWEEP corpus n=${all.count()} copies=$copies " +

@@ -58,16 +58,9 @@ object NgramSweep {
     val plantMod = if (args.length > 4) args(4).toInt else 20
     val reps = if (args.length > 5) args(5).toInt else 2
     val maxFull = if (args.length > 6) args(6).toDouble else 2e8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("ngramsweep", conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "32m",
+      "spark.sql.join.preferSortMergeJoin" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     val (all, nPlanted) = viralCorpus(spark, srcDir, copies, plantMod)
     println(s"NGRAMSWEEP corpus n=${all.count()} copies=$copies " +

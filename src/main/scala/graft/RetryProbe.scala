@@ -164,20 +164,15 @@ object RetryProbe {
 
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus,4]") // 4 task-failure budget: retries allowed
-      .config("spark.sql.shuffle.partitions", cpus)
-      // speculation ON for the whole run: the throw-based scenarios must
-      // stay exact WITH speculative duplicates enabled too, and the
-      // straggler twin below needs it to actually clone attempts
-      .config("spark.speculation", "true")
-      .config("spark.speculation.multiplier", "1.5")
-      .config("spark.speculation.quantile", "0.3")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val cpus = Graft.defaultCores
+    // local[cpus,4]: 4 task-failure budget, so retries are allowed.
+    // Speculation ON for the whole run: the throw-based scenarios must
+    // stay exact WITH speculative duplicates enabled too, and the
+    // straggler twin below needs it to actually clone attempts
+    val spark = Graft.session("retryprobe", cpus, Some(s"local[$cpus,4]"),
+      Map("spark.speculation" -> "true",
+        "spark.speculation.multiplier" -> "1.5",
+        "spark.speculation.quantile" -> "0.3"))
     spark.sparkContext.setLogLevel("WARN")
     val results = Seq(
       partitionedWrite(spark, srcDir, T.tempDir("graft_retry_pw_"), flaky(_)),

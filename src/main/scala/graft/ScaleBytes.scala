@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -38,13 +37,15 @@ import java.util.concurrent.atomic.AtomicLong
   *    attribute to staging, not to whichever key alphabetically touches
   *    them first; the measured pass then prices steady reuse — the same
   *    discipline BenchSteady uses for wall time.
-  *  - Each snapshot spins until totals are stable for 100 ms (the
-  *    listener bus is async and its public API has no drain call).
+  *  - Each snapshot waits (T.settle, 5 s cap) until totals are stable
+  *    for 100 ms (the listener bus is async and its public API has no
+  *    drain call); `drain_timeouts` counts keys that never settled.
   *  - Task retries/speculation would double-count bytes; local[32] runs
   *    have none in practice and n_tasks makes any such run visible.
   *
   * usage: runMain graft.ScaleBytes <outJson> [keyFilter,comma,separated]
-  * env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32)
+  * env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default:
+  *        every processor)
   * Pair two runs (sf0.01 vs sf0.1) with tools/scalebytes_diff.py.
   */
 object ScaleBytes {
@@ -62,14 +63,8 @@ object ScaleBytes {
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val cpus = Graft.defaultCores
+    val spark = Graft.session("scalebytes", cpus)
     spark.sparkContext.setLogLevel("WARN")
     val perKey = new ConcurrentHashMap[String, M]()
     def bucket(k: String): M = perKey.computeIfAbsent(k, _ => new M)
@@ -100,20 +95,10 @@ object ScaleBytes {
         }
       }
     })
-    // per-key totals stable for 100 ms = this key's async task events have
-    // drained (public API only; the bus itself is private). Group
+    // keys whose counters did not settle within the drain's 5 s. Group
     // attribution already prevents cross-key bleed for batch keys; the
     // drain keeps the currentKey FALLBACK fair for streaming keys.
-    def stabilize(key: String): Unit = {
-      var prev = bucket(key).snap
-      var quiet = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (quiet < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val cur = bucket(key).snap
-        if (cur == prev) quiet += 1 else { quiet = 0; prev = cur }
-      }
-    }
+    var drainTimeouts = 0
     val board = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // untimed warm pass: staging, codegen, page cache
@@ -133,7 +118,7 @@ object ScaleBytes {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
-      stabilize(name)
+      if (!T.settle(5000L)(bucket(name).snap)) drainTimeouts += 1
       val m = bucket(name)
       val d = m.snap
       f"""  "$name": {"shuf_w": ${d(0)}, "shuf_r": ${d(1)}, "spill_d": ${
@@ -144,7 +129,8 @@ object ScaleBytes {
     currentKey = "late_unattributed"
     val late = bucket("late_unattributed").snap
     val json = s"""{"sf": "$sfDir", "cpus": $cpus, "n_errors": ${
-      errors.size}, "late_unattributed_cpu_ms": ${late(5) / 1000000},
+      errors.size}, "drain_timeouts": $drainTimeouts, "late_unattributed_cpu_ms": ${
+      late(5) / 1000000},
 "keys": {
 ${rows.mkString(",\n")}
 }}

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Band-width economics sweep for the SimHash dedup family
@@ -49,18 +49,10 @@ object SimHashSweep {
     val plantMod = if (args.length > 3) args(3).toInt else 20
     val reps = if (args.length > 4) args(4).toInt else 2
     val maxFull = if (args.length > 5) args(5).toDouble else 2e8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "32m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("simhashsweep", conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "32m",
+      "spark.sql.join.preferSortMergeJoin" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val (all, nPlanted) = MinHashSweep.plantedCorpus(spark, srcDir, copies, plantMod)
     val sig = signatures(all).localCheckpoint()
     val n = sig.count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-longevity soak: a production tenant driver is a LONG-LIVED
   * process that runs the same workload all day — it must not degrade
   * round over round. Single-shot benches cannot see slow leaks (pinned
@@ -28,15 +26,7 @@ object SoakProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val rounds = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val s = Graft.session("soakprobe")
     s.sparkContext.setLogLevel("WARN")
     val keys = SparkEntry.queries.keys.toSeq.sorted
     val wall = Array.fill(rounds)(

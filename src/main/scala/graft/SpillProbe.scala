@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Tight-heap spill exactness probe — the memory-pressure sibling of
   * RetryProbe (task retries) and StateRestore (checkpoint economics): on a
@@ -69,15 +68,7 @@ object SpillProbe {
     val sfDir = args(1)
     val refDir = args(2)
     val keys = if (args.length > 3) args.drop(3).toSeq else defaultKeys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("spillprobe")
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -93,22 +84,16 @@ object SpillProbe {
     System.err.println(s"SPILLPROBE mode=$mode heapMb=$heapMb keys=${keys.size}")
 
     // The listener bus is async: without a drain, late task-end events from
-    // key N land in key N+1's delta (ScaleBytes.stabilize exists for exactly
-    // this). Counters stable for 2×50 ms = this key's events have drained.
-    // Per-key attribution stays APPROXIMATE even so — probe mode executes
-    // the key's plan inside diffCounts' exceptAll jobs plus a ref.count(),
-    // which are charged to the key by construction; the exactness verdict
-    // and the non-vacuous total-spill check never depended on attribution.
-    def stabilize(): Unit = {
-      var prev = (diskSpill.get(), memSpill.get(), shufWrite.get())
-      var quiet = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (quiet < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val cur = (diskSpill.get(), memSpill.get(), shufWrite.get())
-        if (cur == prev) quiet += 1 else { quiet = 0; prev = cur }
-      }
-    }
+    // key N land in key N+1's delta. Counters stable for 2×50 ms = this
+    // key's events have drained; a key that never settles in 5 s is
+    // flagged on stderr. Per-key attribution stays APPROXIMATE even so —
+    // probe mode executes the key's plan inside diffCounts' exceptAll jobs
+    // plus a ref.count(), which are charged to the key by construction;
+    // the exactness verdict and the non-vacuous total-spill check never
+    // depended on attribution.
+    def stabilize(): Unit =
+      if (!T.settle(5000L)((diskSpill.get(), memSpill.get(), shufWrite.get())))
+        System.err.println("SPILLPROBE drain=timeout: per-key bytes may bleed")
 
     val results = keys.map { k =>
       val fn = SparkEntry.queries.getOrElse(k,

@@ -59,14 +59,7 @@ object StateRestore {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val buildWaves = if (args.length > 1) args(1).toInt else 4
     val probeReps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("staterestore")
     spark.sparkContext.setLogLevel("WARN")
     for ((changelog, retain) <- Seq((true, None), (false, None),
                                     (true, Some(2)))) {

@@ -71,14 +71,7 @@ object StateSweep {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val waves = if (args.length > 1) args(1).toInt else 5
     val cpw = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val spark = Graft.session("statesweep")
     spark.sparkContext.setLogLevel("WARN")
     val n = T.t(spark, srcDir, "events").count()
     println(s"STATESWEEP src=$srcDir wave_rows=$n waves=$waves " +

@@ -216,6 +216,26 @@ object T {
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
 
+  /** Wait, at most `timeoutMs`, until `read` returns the same value on
+    * `quietPolls` polls in a row, `pollMs` apart; true if it settled. The
+    * listener bus is asynchronous and its drain call is private[spark], so
+    * a listener's counters are read this way before a key's figures are
+    * taken. At the deadline it returns false rather than block; the
+    * caller reports that. */
+  def settle[A](timeoutMs: Long, pollMs: Long = 50L, quietPolls: Int = 2)
+               (read: => A): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var prev = read
+    var quiet = 0
+    while (quiet < quietPolls) {
+      if (System.nanoTime() >= deadline) return false
+      Thread.sleep(pollMs)
+      val cur = read
+      if (cur == prev) quiet += 1 else { quiet = 0; prev = cur }
+    }
+    true
+  }
+
   /** Stage a derived dataset once per (tag, sfDir) per JVM: the first call
     * creates the dir and runs `write`; later calls reuse the staged output
     * instead of re-materializing (ADVICE r2 — eager side effects at

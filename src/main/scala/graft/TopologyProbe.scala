@@ -132,12 +132,7 @@ object TopologyProbe {
       "SPARK_GRAFT_SHUFFLE" -> "4",
       "SPARK_HOME" -> sys.env("SPARK_HOME"),
       "SPARK_SCALA_VERSION" -> sys.env.getOrElse("SPARK_SCALA_VERSION", "2.13"))
-    val s = SparkSession.builder()
-      .master("local[8]").appName("graft-topologyprobe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("graft-topologyprobe", 8)
     s.sparkContext.setLogLevel("WARN")
 
     val chunksPlain = T.tempDir("graft_topo_chunks_")

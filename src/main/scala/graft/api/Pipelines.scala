@@ -268,8 +268,8 @@ object Pipelines {
   /** Exact interpolated PERCENTILE_CONT p25/p50/p75 per group via the
     * cent-bucket-spine order-statistic selection — the shipped
     * `agg_percentile_cont_interp` plan (r16), factored here (ADVICE r16)
-    * so the `graft.QuantAB` bit-equality/scaling harness measures the SAME
-    * code the key executes instead of a hand-inlined copy.
+    * so every caller runs the SAME code the key executes instead of a
+    * hand-inlined copy.
     *
     * Input: (rf: group key, p: DOUBLE values, non-null for every group
     * that should appear — see the precondition note at the key). Counts
@@ -280,7 +280,7 @@ object Pipelines {
     * interpolation reproduces Percentile.getPercentile term-for-term
     * (integral-position and equal-values short-circuits included) —
     * proved BIT-EQUAL to the single-aggregate Percentile plan at three
-    * fixtures and ×8 rows (QuantAB). */
+    * fixtures and ×8 rows; NineSpec pins the bit-equality at sf0.001. */
   def centSpinePercentiles(x: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -514,7 +514,7 @@ object Pipelines {
     * dot(q_m, r̂_m). Residual encoding wins when the corpus is CLUSTERED
     * (‖c − µ‖ ≪ ‖c‖ — the production case; pinned by EightSpec on a
     * synthetic clustered corpus); on isotropic data neither dominates
-    * (measured, DriveResProbe). At scale the codes+cells table is the
+    * (measured in round 9). At scale the codes+cells table is the
     * persisted index and everything joined to it is broadcast-sized. */
   def ivfpqTopK(queries: DataFrame, candidates: DataFrame,
                 qIdCol: String, cIdCol: String, vecCol: String,

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -133,26 +134,31 @@ case class VecDotInt(left: Expression, right: Expression)
 
 /** Registry for graft's native Catalyst expressions. */
 object GraftFunctions {
-  /** Idempotently register `vec_dot`/`vec_dot_int` on the session so
-    * `expr("vec_dot(a,b)")` resolves; safe to call at the top of every
-    * query builder. */
+  /** Every native expression as (SQL name, implementing class, builder):
+    * the one list both `register` and `GraftExtensions` install. */
+  val table: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], e => VecDot(e.head, e(1))),
+    ("vec_dot_int", classOf[VecDotInt], e => VecDotInt(e.head, e(1))),
+    ("poly_hash", classOf[PolyTokenHash], e => PolyTokenHash(e.head)),
+    ("lsh_bands", classOf[LshBands], e => CosineLsh.build(e)),
+    ("bigrams", classOf[TokenBigrams], e => TokenBigrams(e.head)),
+    ("sorted_intersect", classOf[SortedIntersect],
+      e => SortedIntersect(e.head, e(1))),
+    ("sorted_intersect_count", classOf[SortedIntersectCount],
+      e => SortedIntersectCount(e.head, e(1))))
+
+  private[functions] def info(name: String, cls: Class[_]): ExpressionInfo =
+    new ExpressionInfo(cls.getName, name)
+
+  /** Register every `table` entry the session does not already resolve
+    * (from an earlier call or from `GraftExtensions`), so `expr("vec_dot(a,b)")`
+    * works; safe to call at the top of every query builder. */
   def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_int", exprs => VecDotInt(exprs.head, exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyTokenHash(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bands", exprs => CosineLsh.build(exprs), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams", exprs => TokenBigrams(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect", exprs => SortedIntersect(exprs.head, exprs(1)),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "built-in")
+    val reg = s.sessionState.functionRegistry
+    table.foreach { case (name, cls, build) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info(name, cls), build)
+    }
   }
 }
 
@@ -164,41 +170,10 @@ object GraftFunctions {
   * Injection happens at session build, before any query parses. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot_int"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDotInt].getName, "vec_dot_int"),
-      (exprs: Seq[Expression]) => VecDotInt(exprs.head, exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("poly_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PolyTokenHash].getName, "poly_hash"),
-      (exprs: Seq[Expression]) => PolyTokenHash(exprs.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_bands"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshBands].getName, "lsh_bands"),
-      (exprs: Seq[Expression]) => CosineLsh.build(exprs)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bigrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TokenBigrams].getName, "bigrams"),
-      (exprs: Seq[Expression]) => TokenBigrams(exprs.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SortedIntersect].getName, "sorted_intersect"),
-      (exprs: Seq[Expression]) => SortedIntersect(exprs.head, exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs.head, exprs(1))))
+    GraftFunctions.table.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        GraftFunctions.info(name, cls), build))
+    }
     // whole-operator surface: the native per-group top-k and as-of join
     // strategies (graft.plans) ride the same cluster-wide injection point
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)

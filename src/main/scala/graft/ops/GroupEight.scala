@@ -143,8 +143,8 @@ object GroupEight {
     // ZERO codeword — "quantize or abstain"), and the inner-product ADC adds
     // the coarse term back: sim ≈ dot(q, µ) + Σ_m dot(q_m, r̂_m). NOTE the
     // ADC uses q itself, not q − µ: the query-residual form belongs to L2
-    // scoring and only injects a −dot(µ, r̂) bias here (measured — see
-    // DriveResProbe). Honest finding, same probe: the FIXTURE embeddings
+    // scoring and only injects a −dot(µ, r̂) bias here (measured in round
+    // 9). Honest finding, same measurement: the FIXTURE embeddings
     // are isotropic (no cluster structure), so ‖r‖ ≈ ‖c‖ and neither
     // encoding dominates on them; residual's recall advantage appears on
     // clustered corpora, which EightSpec pins via Pipelines.ivfpqTopK on a

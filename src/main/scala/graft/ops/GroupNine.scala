@@ -144,8 +144,9 @@ object GroupNine {
       // (N−1)·pct, (higher−pos)·v_lo + (pos−lower)·v_hi, with the
       // integral-position and equal-values short-circuits — proved
       // BIT-EQUAL to the old single-aggregate plan at sf0.001/0.01/0.1
-      // and at an ×8 replicated fixture (graft.QuantAB), then
-      // oracle-gated per round. No data-sized aggregation state remains.
+      // and at an ×8 replicated fixture (pinned at sf0.001 by NineSpec
+      // "agg_percentile_cont_interp is bit-equal to the exact Percentile
+      // plan"), then oracle-gated per round. No data-sized aggregation state remains.
       // PRECONDITION (ADVICE r16): the value column must be non-null for
       // every group that should appear — a group whose values are ALL
       // NULL has n=0, gets negative rank positions that match no spine
@@ -155,8 +156,7 @@ object GroupNine {
       // this machinery on nullable inputs requires a left join of tgt
       // back to the group spine to restore NULL-quantile rows.
       // body factored into Pipelines.centSpinePercentiles (ADVICE r16) so
-      // the QuantAB bit-equality/scaling harness measures the SAME code
-      // this key executes.
+      // library callers run the SAME code this key executes.
       val x = T.t(s, dir, "lineitem")
         .select(col("l_returnflag").as("rf"),
           col("l_extendedprice").cast(DoubleType).as("p"))

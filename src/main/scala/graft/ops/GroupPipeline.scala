@@ -99,8 +99,8 @@ object GroupPipeline {
     // per-candidate verification (O(kA+kB) each, however implemented —
     // replication joins 6.3 s, long-array intersects still 2-3× this
     // plan) costs more than the count-only stream it replaced at EVERY
-    // scale (sf0.1/sf1/sf10 = 2-3× slower; DedupStageProbe is the
-    // evidence tool, BASELINE.md the record). The library keeps the
+    // scale (sf0.1/sf1/sf10 = 2-3× slower; BASELINE.md has the record).
+    // The library keeps the
     // machinery behind Pipelines.nearDupPairs(prefixFilter = true) for
     // near-dup-dense corpora where candidates ≈ true pairs.
     // Self-join on the staged dense LONG surrogate (shid), not the 3-token

@@ -100,6 +100,12 @@ class CoreSpec extends AnyFunSuite {
         "array(cast(3.0 as float), cast(4.0 as float))) AS d")
       .collect().head.getDouble(0)
     assert(r == 11.0)
+    // every other entry of the shared function table resolves too
+    graft.functions.GraftFunctions.table.foreach { case (name, cls, _) =>
+      val info = fresh.sessionState.functionRegistry
+        .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+      assert(info.map(_.getClassName).contains(cls.getName), s"$name: $info")
+    }
   }
 
   test("decimal aggregates are partition-count independent (3 vs 32 shuffle partitions)") {

@@ -484,4 +484,24 @@ class NineSpec extends AnyFunSuite {
       assert(g.length <= 4)
     }
   }
+
+  test("agg_percentile_cont_interp is bit-equal to the exact Percentile plan") {
+    // the evidence OPTIMIZATION_r16/r17 cite for the cent-bucket-spine
+    // replan: raw IEEE bits, not a tolerance, against the single-aggregate
+    // `percentile` plan the key replaced
+    def bits(rows: Array[org.apache.spark.sql.Row]): Seq[(String, Seq[Long])] =
+      rows.toSeq.map(r => r.getString(0) -> (1 to 3).map(i =>
+        java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
+    val exact = T.t(s, sf, "lineitem")
+      .select(col("l_returnflag"),
+        col("l_extendedprice").cast("double").as("p"))
+      .groupBy("l_returnflag")
+      .agg(percentile(col("p"), lit(0.25)).as("p25"),
+        percentile(col("p"), lit(0.5)).as("p50"),
+        percentile(col("p"), lit(0.75)).as("p75"))
+      .orderBy("l_returnflag")
+    val got = bits(SparkEntry.queries("agg_percentile_cont_interp")(s, sf).collect())
+    assert(got.nonEmpty)
+    assert(got == bits(exact.collect()))
+  }
 }

@@ -31,7 +31,7 @@ P1=$!
 echo "== dump 2/2: local-cluster[2,8,8192] (multi-JVM) -> $OUT/cluster"
 SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
 SPARK_GRAFT_MASTER='local-cluster[2,8,8192]' SPARK_GRAFT_CPUS=4 \
-SPARK_GRAFT_EXEC_CP="$CLS" SPARK_GRAFT_EXEC_MEM=6g \
+SPARK_GRAFT_EXEC_MEM=6g \
   $JAVA graft.Verify "$SF" "$OUT/cluster" $ONLY \
   > "$OUT/cluster.log" 2>&1 &
 P2=$!
