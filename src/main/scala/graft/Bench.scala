@@ -8,7 +8,7 @@ object Bench {
     // untimed warmup: JIT + whole-stage-codegen compile + parquet reader
     // init land here instead of inside the first measured query
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = T.t(spark, sfDir, "lineitem")
       li.groupBy("l_returnflag").count().count()
       li.limit(1000).orderBy("l_orderkey").count()
     } catch { case _: Throwable => }

@@ -29,7 +29,7 @@ object BenchSteady {
       .getOperatingSystemMXBean.getSystemLoadAverage
     // untimed warmup (parquet reader init + first codegen)
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = T.t(spark, sfDir, "lineitem")
       li.groupBy("l_returnflag").count().count()
     } catch { case _: Throwable => }
     val loadStart = load

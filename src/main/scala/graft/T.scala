@@ -30,14 +30,61 @@ object T {
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = parquet(s, s"$dir/events.parquet")
       val ts = raw.schema("ts").dataType match {
         case LongType => expr("cast(timestamp_micros(ts DIV 1000) as timestamp_ntz)")
         case _        => expr("cast(ts as timestamp_ntz)")
       }
       raw.withColumn("ts", ts)
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else parquet(s, s"$dir/$name.parquet")
   }
+
+  /** `s.read.parquet(path)`, inferring the schema at most once per JVM for
+    * a frozen input. Inference reads a footer in a Spark job, so without
+    * this every DataFrame built over a fixture or a staged artifact paid
+    * one job. Frozen means a regular local file, keyed by its size and
+    * mtime so an in-place rewrite is re-inferred, or a path under a
+    * completed [[staged]] dir, which nothing rewrites in this JVM. The key
+    * also holds every parquet conf set in the session plus case
+    * sensitivity: they change what inference returns (nanosAsLong,
+    * inferTimestampNTZ, binaryAsString, ...). A memoized read passes the
+    * schema explicitly, so it still gets a fresh relation with fresh
+    * expression IDs. Anything else — another dir, a remote URI — is read
+    * exactly as `s.read.parquet`. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    frozenKey(s, path) match {
+      case None => s.read.parquet(path)
+      case Some(k) =>
+        val known = schemas.get(k)
+        if (known != null) s.read.schema(known).parquet(path)
+        else {
+          val df = s.read.parquet(path)
+          schemas.put(k, df.schema)
+          df
+        }
+    }
+
+  /** (absolute path, size, mtime nanos, set parquet confs, caseSensitive) */
+  private type SchemaKey = (String, Long, Long, Seq[(String, String)], String)
+
+  private def frozenKey(s: SparkSession, path: String): Option[SchemaKey] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    if (new org.apache.hadoop.fs.Path(path).toUri.getScheme != null) return None
+    val p = Paths.get(path).toAbsolutePath.normalize
+    val staged = stagedDirs.values.asScala.exists(d => p.startsWith(Paths.get(d)))
+    if (!staged && !Files.isRegularFile(p)) return None
+    scala.util.Try(Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes])).toOption.map { a =>
+      val confs = s.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.toSeq.sorted
+      (p.toString, a.size, a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
+        confs, s.conf.get("spark.sql.caseSensitive"))
+    }
+  }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
 
   val dec: DecimalType = DecimalType(18, 2)
 

@@ -515,7 +515,7 @@ object GroupAnalytics {
       val stagedDir = T.staged("part", dir) { o =>
         T.t(s, dir, "orders").write.mode("overwrite")
           .partitionBy("o_orderstatus").parquet(o) }
-      val fact = s.read.parquet(stagedDir)
+      val fact = T.parquet(s, stagedDir)
       // the qualifying partition (the least-frequent status, count-then-
       // status tie-break) is only knowable at runtime — a static filter
       // cannot express it, so the fact scan's PartitionFilters must carry a
@@ -581,10 +581,10 @@ object GroupAnalytics {
       val frag = T.staged("frag", dir) { o =>
         T.t(s, dir, "orders").repartition(64).write.mode("overwrite").parquet(o) }
       val compact = T.staged("compact", dir) { o =>
-        s.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(o) }
-      val before = s.read.parquet(frag)
+        T.parquet(s, frag).repartition(4).write.mode("overwrite").parquet(o) }
+      val before = T.parquet(s, frag)
         .agg(count(lit(1)).as("n_rows"), T.dsum(col("o_totalprice")).as("sum_price"))
-      val after = s.read.parquet(compact)
+      val after = T.parquet(s, compact)
         .agg(count(lit(1)).as("n_rows_compacted"),
           T.dsum(col("o_totalprice")).as("sum_price_compacted"))
       before.crossJoin(after)
@@ -905,8 +905,8 @@ object GroupAnalytics {
           .filter(col("rn") === 1).select("c_id", "m", "cid")
         enc0.write.parquet(s"$o/codes")
       }
-      val cents = s.read.parquet(s"$idx/cents")
-      val enc = s.read.parquet(s"$idx/codes")
+      val cents = T.parquet(s, s"$idx/cents")
+      val enc = T.parquet(s, s"$idx/codes")
       val qd = subs(T.t(s, dir, "embeddings").filter(col("vec_id") < 20), "q_id")
         .join(broadcast(cents), "m")
         .select(col("q_id"), col("m"), col("cid"),

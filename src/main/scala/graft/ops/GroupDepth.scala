@@ -249,7 +249,7 @@ object GroupDepth {
           .groupBy("doc_id", "sh").agg(count(lit(1)).as("c"))
           .write.mode("overwrite").parquet(o)
       }
-      val shc = s.read.parquet(stage)
+      val shc = T.parquet(s, stage)
       val lens = shc.groupBy("doc_id").agg(sum("c").as("n"))
       // df ∈ [2, dfCap]: singletons can't pair; the hot-shingle ceiling
       // bounds self-join fan-out at dfCap² per shingle (see
@@ -270,7 +270,7 @@ object GroupDepth {
       // (prefix filtering tried and measured out here in r15 — see
       // GroupPipeline.exactJaccardPairs; the index-agg stream wins on
       // this co-sharing geometry at every scale)
-      val idx = s.read.parquet(wIdx)
+      val idx = T.parquet(s, wIdx)
       // join on shid (the staged long surrogate), not the shingle string:
       // Σ min(wA,wB) is relabeling-invariant and the self-join exchange
       // ships longs instead of 3-token strings (the comment above built

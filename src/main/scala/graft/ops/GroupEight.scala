@@ -106,8 +106,8 @@ object GroupEight {
           .select("c_id", "m", "cid", "cell")
           .write.partitionBy("cell").parquet(s"$o/codes")
       }
-      val cents = s.read.parquet(s"$idx/cents")
-      val codes = s.read.parquet(s"$idx/codes")
+      val cents = T.parquet(s, s"$idx/cents")
+      val codes = T.parquet(s, s"$idx/codes")
         .select(col("c_id"), col("m"), col("cid"),
           col("cell").cast(LongType).as("cell"))
       val qs = e.filter(col("vec_id") < 20)
@@ -233,8 +233,8 @@ object GroupEight {
           .select("c_id", "m", "cid", "cell")
           .write.partitionBy("cell").parquet(s"$o/codes")
       }
-      val codebook = s.read.parquet(s"$idx/cents")
-      val codes = s.read.parquet(s"$idx/codes")
+      val codebook = T.parquet(s, s"$idx/cents")
+      val codes = T.parquet(s, s"$idx/codes")
         .select(col("c_id"), col("m"), col("cid"),
           col("cell").cast(LongType).as("cell"))
       val qs = e.filter(col("vec_id") < 20)

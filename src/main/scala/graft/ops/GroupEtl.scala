@@ -116,7 +116,7 @@ object GroupEtl {
               .when(col("l_discount") > 0.08, "reject_disc")
               .otherwise("ok"))
           .write.mode("overwrite").partitionBy("klass").parquet(o) }
-      s.read.parquet(out)
+      T.parquet(s, out)
         .groupBy("klass")
         .agg(count(lit(1)).as("cnt"), T.dsum(col("l_quantity")).as("sum_qty"))
         .orderBy("klass")
@@ -170,7 +170,7 @@ object GroupEtl {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("o_orderstatus").parquet(o)
       }
-      s.read.parquet(out)
+      T.parquet(s, out)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
           sum(col("price")).cast(DoubleType).as("sum_price"))

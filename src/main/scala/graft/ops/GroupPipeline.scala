@@ -54,7 +54,7 @@ object GroupPipeline {
         .withColumn("shid", monotonically_increasing_id())
       kept.join(dict, "sh").write.mode("overwrite").parquet(o)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   /** Per-doc FULL distinct-shingle counts (the similarity denominators —
@@ -65,7 +65,7 @@ object GroupPipeline {
         .groupBy("doc_id").agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(o)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   private[ops] def exactJaccardPairs(s: SparkSession, dir: String,
@@ -671,7 +671,7 @@ object GroupPipeline {
           .select(col("c_id"), col("ce"), col("cent_id").as("cell"))
           .write.partitionBy("cell").parquet(s"$o/assign")
       }
-      val assign = s.read.parquet(s"$idx/assign")
+      val assign = T.parquet(s, s"$idx/assign")
         .select(col("c_id"), col("ce"), col("cell").cast(LongType).as("cell"))
       val qs = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))

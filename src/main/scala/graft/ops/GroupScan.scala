@@ -99,7 +99,7 @@ object GroupScan {
         T.t(s, dir, "supplier")
           .select("s_suppkey", "s_name", "s_nationkey")
           .write.mode("overwrite").option("compression", "zstd").parquet(o) }
-      s.read.parquet(out).orderBy("s_suppkey")
+      T.parquet(s, out).orderBy("s_suppkey")
     },
 
     // Hive-style partitioned layout — the 100 TB at-rest story: downstream
@@ -110,7 +110,7 @@ object GroupScan {
       val out = T.staged("part", dir) { o =>
         T.t(s, dir, "orders").write.mode("overwrite")
           .partitionBy("o_orderstatus").parquet(o) }
-      s.read.parquet(out)
+      T.parquet(s, out)
         .groupBy("o_orderstatus").agg(count(lit(1)).as("cnt"))
         .orderBy("o_orderstatus")
     },
@@ -126,7 +126,7 @@ object GroupScan {
           .filter(col("l_quantity") > 0)
           .withColumn("l_year", year(col("l_shipdate")))
           .write.mode("overwrite").partitionBy("l_year").parquet(o) }
-      s.read.parquet(out)
+      T.parquet(s, out)
         .groupBy("l_year")
         .agg(count(lit(1)).as("cnt"), T.dsum(col("l_quantity")).as("sum_qty"))
         .select(col("l_year").cast(IntegerType).as("l_year"), col("cnt"), col("sum_qty"))

@@ -61,7 +61,7 @@ object GroupSeven {
         .groupBy("pa", "pb").agg(count(lit(1)).as("sup"))
         .write.mode("overwrite").parquet(o)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   /** Staged degree-oriented adjacency index over the full co-purchase
@@ -126,16 +126,16 @@ object GroupSeven {
         .agg(count(lit(1)).as("w"))
         .write.mode("overwrite").parquet(o)
     }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   /** The oriented out-neighbor arrays (src, nbrs) of [[orientedAdjDir]]. */
   private[ops] def orientedAdj(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"${orientedAdjDir(s, dir)}/adj")
+    T.parquet(s, s"${orientedAdjDir(s, dir)}/adj")
 
   /** The undirected full-graph degree table (node, d) of [[orientedAdjDir]]. */
   private[ops] def pairDegree(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"${orientedAdjDir(s, dir)}/degree")
+    T.parquet(s, s"${orientedAdjDir(s, dir)}/degree")
 
   /** The engine-portable polynomial string hash as a DuckDB fold — same
     * arithmetic as graft.functions.PolyTokenHash (h·257+c mod 2⁶¹−1, then a

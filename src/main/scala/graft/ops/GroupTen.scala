@@ -613,7 +613,7 @@ object GroupTen {
           .select(col("c_id"), col("ce"), col("cent_id").as("cell"))
           .write.partitionBy("cell").parquet(s"$o/assign")
       }
-      val assign = s.read.parquet(s"$idx/assign")
+      val assign = T.parquet(s, s"$idx/assign")
         .select(col("c_id"), col("ce"), col("cell").cast(LongType).as("cell"))
       val qs = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))

@@ -33,7 +33,7 @@ object GroupText {
       shingled(s, dir)
         .select(col("doc_id"), explode(col("sh")).as("sh"))
         .write.mode("overwrite").parquet(o) }
-    s.read.parquet(stage)
+    T.parquet(s, stage)
   }
 
   val defs: Seq[Q] = Seq(
