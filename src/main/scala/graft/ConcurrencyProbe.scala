@@ -145,8 +145,8 @@ object ConcurrencyProbe {
     }
     println(s"""{"probe":"concurrency","sf":"$sfDir","threads":$threads,""" +
       s""""n_keys":${keys.size},"n_diff":$nDiff,"n_errors":${concErr.size},""" +
-      s""""serial_sec":${f"$serialSec%.1f"},"concurrent_sec":${f"$concSec%.1f"},""" +
-      s""""speedup":${f"${serialSec / concSec}%.2f"},""" +
+      s""""serial_sec":${T.num(serialSec, 1)},"concurrent_sec":${T.num(concSec, 1)},""" +
+      s""""speedup":${T.num(serialSec / concSec, 2)},""" +
       (if (killMode) s""""kills":$kills,"executorsRemoved":${removedExec.get()},""" else "") +
       s""""diff_keys":${diffs.map(d => "\"" + d + "\"").mkString("[", ",", "]")},""" +
       s""""errors":${concErr.map { case (k, v) => "\"" + k + "\": \"" + v.replace("\"", "'") + "\"" }.mkString("{", ",", "}")}}""")

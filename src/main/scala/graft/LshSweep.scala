@@ -51,7 +51,7 @@ object LshSweep {
       val res = sweepOne(all, r, threshold, reps)
       println(s"LSHSWEEP r=$r bands=${res.bands} cand_raw=${res.candRaw} " +
         s"pairs=${res.pairs} planted_found=${res.plantedFound}/$nPlanted " +
-        s"pair_checksum=${res.checksum} t_full_min=${f2(res.tFull)}")
+        s"pair_checksum=${res.checksum} t_full_min=${T.num(res.tFull, 2)}")
     }
     spark.stop()
   }
@@ -123,7 +123,4 @@ object LshSweep {
     }
     SweepResult(bands, candRaw, pairs, plantedFound, checksum, times.min)
   }
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

@@ -64,7 +64,7 @@ object MinHashSweep {
       println(s"MINHASHSWEEP r=$r bands=${res.bands} " +
         s"hashes=${res.numHashes} cand_raw=${res.candRaw} " +
         s"pairs=${res.pairs} planted_found=${res.plantedFound}/$nPlanted " +
-        s"pair_checksum=${res.checksum} t_full_min=${f2(res.tFull)}")
+        s"pair_checksum=${res.checksum} t_full_min=${T.num(res.tFull, 2)}")
     }
     spark.stop()
   }
@@ -143,7 +143,4 @@ object MinHashSweep {
     SweepResult(bands, numHashes, candRaw, pairs, plantedFound,
       checksum, times.min)
   }
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

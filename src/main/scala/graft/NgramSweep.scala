@@ -86,7 +86,7 @@ object NgramSweep {
         println(s"NGRAMSWEEP cap=$cap cand_analytic=$candAnalytic " +
           s"dropped_shingles=$dropped pairs=${r._1} " +
           s"planted_found=${r._2}/$nPlanted pair_checksum=${r._3} " +
-          s"t_full_min=${f2(r._4)}")
+          s"t_full_min=${T.num(r._4, 2)}")
       } else
         println(s"NGRAMSWEEP cap=$cap cand_analytic=$candAnalytic " +
           s"dropped_shingles=$dropped SKIPPED_FULL (over maxFull=$maxFull)")
@@ -135,7 +135,4 @@ object NgramSweep {
     }
     (pairs, plantedFound, checksum, times.min)
   }
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

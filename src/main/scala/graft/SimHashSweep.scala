@@ -89,7 +89,7 @@ object SimHashSweep {
         val r = fullRun(banded, sig, reps)
         println(s"SIMHASHSWEEP bits=$bits bands=$bands " +
           s"cand_analytic=$candAnalytic banding_recall=$found/$t8 " +
-          s"pairs=${r._1} pair_checksum=${r._2} t_full_min=${f2(r._3)}")
+          s"pairs=${r._1} pair_checksum=${r._2} t_full_min=${T.num(r._3, 2)}")
       } else
         println(s"SIMHASHSWEEP bits=$bits bands=$bands " +
           s"cand_analytic=$candAnalytic banding_recall=$found/$t8 " +
@@ -140,7 +140,4 @@ object SimHashSweep {
     }
     (pairs, checksum, times.min)
   }
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

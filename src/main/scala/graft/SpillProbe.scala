@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Tight-heap spill exactness probe — the memory-pressure sibling of
   * RetryProbe (task retries) and StateRestore (checkpoint economics): on a
   * real cluster an executor core gets ~1–4 GB, not the 48 GB the local
@@ -21,7 +17,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *     staging artifacts (T.staged dirs are JVM-local, so the pair/shingle
   *     index builds run under pressure too), two-way `exceptAll` the
   *     result against the reference parquet, and record per-key
-  *     spill/shuffle bytes from TaskMetrics. The run FAILS if any diff is
+  *     spill/shuffle bytes (Bench.Collector). The run FAILS if any diff is
   *     non-empty — and, to stay non-vacuous, if the whole run spilled
   *     zero bytes (then the heap wasn't tight enough to prove anything).
   *
@@ -52,10 +48,6 @@ object SpillProbe {
                                 got: org.apache.spark.sql.DataFrame): (Long, Long) =
     (ref.exceptAll(got).count(), got.exceptAll(ref).count())
 
-  private val diskSpill = new AtomicLong(0)
-  private val memSpill = new AtomicLong(0)
-  private val shufWrite = new AtomicLong(0)
-
   final case class KeyResult(key: String, rows: Long, missing: Long,
                              extra: Long, diskSpilled: Long, memSpilled: Long,
                              shuffleWrite: Long, sec: Double) {
@@ -70,61 +62,47 @@ object SpillProbe {
     val keys = if (args.length > 3) args.drop(3).toSeq else defaultKeys
     val spark = Graft.session("spillprobe")
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          diskSpill.addAndGet(m.diskBytesSpilled)
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val sc = spark.sparkContext
+    val col = new Bench.Collector
+    sc.addSparkListener(col)
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     System.err.println(s"SPILLPROBE mode=$mode heapMb=$heapMb keys=${keys.size}")
 
-    // The listener bus is async: without a drain, late task-end events from
-    // key N land in key N+1's delta. Counters stable for 2×50 ms = this
-    // key's events have drained; a key that never settles in 5 s is
-    // flagged on stderr. Per-key attribution stays APPROXIMATE even so —
-    // probe mode executes the key's plan inside diffCounts' exceptAll jobs
-    // plus a ref.count(), which are charged to the key by construction;
-    // the exactness verdict and the non-vacuous total-spill check never
-    // depended on attribution.
-    def stabilize(): Unit =
-      if (!T.settle(5000L)((diskSpill.get(), memSpill.get(), shufWrite.get())))
-        System.err.println("SPILLPROBE drain=timeout: per-key bytes may bleed")
-
+    // Bytes are attributed by job group (Bench.Collector): every job the
+    // key runs — in probe mode that includes diffCounts' exceptAll jobs and
+    // the ref.count(), charged to the key by construction — lands on it,
+    // whenever its task events are delivered.
     val results = keys.map { k =>
       val fn = SparkEntry.queries.getOrElse(k,
         sys.error(s"unknown key $k — not in SparkEntry.queries"))
-      stabilize()
-      val d0 = diskSpill.get(); val m0 = memSpill.get(); val w0 = shufWrite.get()
+      col.begin(k)
       val t0 = System.nanoTime()
-      if (mode == "dump") {
-        fn(spark, sfDir).write.mode("overwrite").parquet(s"$refDir/$k.parquet")
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rows = spark.read.parquet(s"$refDir/$k.parquet").count()
-        stabilize()
-        KeyResult(k, rows, 0, 0, diskSpill.get() - d0, memSpill.get() - m0,
-          shufWrite.get() - w0, sec)
-      } else {
-        val got = fn(spark, sfDir)
-        val ref = spark.read.parquet(s"$refDir/$k.parquet")
-        val (missing, extra) = diffCounts(ref, got)
-        val rows = ref.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        stabilize()
-        val r = KeyResult(k, rows, missing, extra, diskSpill.get() - d0,
-          memSpill.get() - m0, shufWrite.get() - w0, sec)
+      val (rows, missing, extra) = Bench.inGroup(sc, Bench.Prefix + k) {
+        if (mode == "dump") {
+          fn(spark, sfDir).write.mode("overwrite").parquet(s"$refDir/$k.parquet")
+          (spark.read.parquet(s"$refDir/$k.parquet").count(), 0L, 0L)
+        } else {
+          val ref = spark.read.parquet(s"$refDir/$k.parquet")
+          val (missing, extra) = diffCounts(ref, fn(spark, sfDir))
+          (ref.count(), missing, extra)
+        }
+      }
+      val sec = (System.nanoTime() - t0) / 1e9
+      col.finish(expectPlan = false)
+      if (!col.drained) System.err.println(s"SPILLPROBE $k drain=timeout")
+      val m = col.sums(k)
+      val r = KeyResult(k, rows, missing, extra, m.spillD.get, m.spillM.get,
+        m.shufW.get, sec)
+      if (mode != "dump")
         System.err.println(f"SPILLPROBE ${r.key} rows=${r.rows} " +
           f"missing=${r.missing} extra=${r.extra} " +
           f"diskSpillMb=${r.diskSpilled / 1048576}%d " +
-          f"memSpillMb=${r.memSpilled / 1048576}%d sec=${r.sec}%.2f " +
+          f"memSpillMb=${r.memSpilled / 1048576}%d sec=${T.num(r.sec, 2)} " +
           (if (r.exact) "OK" else "MISMATCH"))
-        r
-      }
+      r
     }
+    sc.removeSparkListener(col)
+    val diskSpill = results.map(_.diskSpilled).sum
     val json = results.map { r =>
       f"""{"key":"${r.key}","rows":${r.rows},"missing":${r.missing},""" +
         f""""extra":${r.extra},"disk_spill_mb":${r.diskSpilled / 1048576},""" +
@@ -133,16 +111,16 @@ object SpillProbe {
         f""""sec":${math.round(r.sec * 100) / 100.0}}"""
     }.mkString("[", ",", "]")
     println(s"""{"probe":"spill","mode":"$mode","heap_mb":$heapMb,""" +
-      s""""per_key_bytes":"approximate (drained, but probe-mode deltas include diff jobs)",""" +
-      s""""total_disk_spill_mb":${diskSpill.get() / 1048576},""" +
-      s""""total_mem_spill_mb":${memSpill.get() / 1048576},"keys":$json}""")
+      s""""per_key_bytes":"by job group (probe mode includes the diff jobs)",""" +
+      s""""total_disk_spill_mb":${diskSpill / 1048576},""" +
+      s""""total_mem_spill_mb":${results.map(_.memSpilled).sum / 1048576},"keys":$json}""")
     spark.stop()
     if (mode == "probe") {
       if (!results.forall(_.exact)) {
         System.err.println("SPILLPROBE MISMATCH: a key diverged under memory pressure")
         sys.exit(1)
       }
-      if (diskSpill.get() == 0L) {
+      if (diskSpill == 0L) {
         System.err.println("SPILLPROBE vacuous: zero bytes spilled — heap not tight enough")
         sys.exit(2)
       }

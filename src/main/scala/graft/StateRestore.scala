@@ -71,12 +71,12 @@ object StateRestore {
         println(s"STATERESTORE $tag after_wave=${p.afterWave} " +
           s"state_rows=${p.stateRows} sst_bytes=${p.sstBytes} " +
           s"ckpt_files=${p.ckptFiles}(cl=${p.nChangelog},snap=${p.nSnap}) " +
-          s"warm_wall=${f2(p.warmWallSec)}s cold_wall=${f2(p.coldWallSec)}s")
+          s"warm_wall=${T.num(p.warmWallSec, 2)}s cold_wall=${T.num(p.coldWallSec, 2)}s")
       }
       println(s"STATERESTORE SUMMARY $tag " +
         s"state_rows=${pts.map(_.stateRows).mkString(",")} " +
-        s"warm=${pts.map(p => f2(p.warmWallSec)).mkString(",")} " +
-        s"cold=${pts.map(p => f2(p.coldWallSec)).mkString(",")} " +
+        s"warm=${pts.map(p => T.num(p.warmWallSec, 2)).mkString(",")} " +
+        s"cold=${pts.map(p => T.num(p.coldWallSec, 2)).mkString(",")} " +
         s"ckpt_files=${pts.map(_.ckptFiles).mkString(",")}")
     }
     spark.stop()
@@ -260,7 +260,4 @@ object StateRestore {
     rec(root)
     n
   }
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

@@ -86,7 +86,7 @@ object StateSweep {
           s"ckpt_changelog=${w.changelogBytes}(n=${w.nChangelog}) " +
           s"ckpt_snap=${w.snapBytes}(n=${w.nSnap}) ckpt_other=${w.otherBytes} " +
           s"files_copied=${w.filesCopied} files_reused=${w.filesReused} " +
-          s"t=${f2(w.wallSec)}s")
+          s"t=${T.num(w.wallSec, 2)}s")
       }
       val clDelta = deltas(r.waves.map(_.changelogBytes))
       val snapDelta = deltas(r.waves.map(_.snapBytes))
@@ -206,7 +206,4 @@ object StateSweep {
     xs.headOption.toSeq ++ xs.sliding(2).collect { case Seq(a, b) => b - a }
 
   private def onOff(b: Boolean): String = if (b) "on" else "off"
-
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

@@ -263,6 +263,12 @@ object T {
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
 
+  /** `v` with `digits` decimals and a '.' separator whatever the default
+    * locale: a plain `f"%.2f"` prints "1,50" under a German JVM, which is
+    * not a JSON number. */
+  def num(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   /** Wait, at most `timeoutMs`, until `read` returns the same value on
     * `quietPolls` polls in a row, `pollMs` apart; true if it settled. The
     * listener bus is asynchronous and its drain call is private[spark], so

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the shared harness pieces: the session factory's conf, the
-  * bounded listener drain and PlanSweep's plan-tree exchange count. */
+  * bounded listener drain and Bench's plan-tree exchange count. */
 class HarnessSpec extends AnyFunSuite {
   private val s = TestSpark.spark
 
@@ -53,7 +53,7 @@ class HarnessSpec extends AnyFunSuite {
     assert(ms >= 200L && ms < 2000L, s"returned after $ms ms")
   }
 
-  test("PlanSweep counts a reused exchange once, from the plan tree") {
+  test("Bench counts a reused exchange once, from the plan tree") {
     val sc = s.newSession()
     sc.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val agg = sc.range(0, 20000, 1, 4).selectExpr("id % 7 AS k", "id")
@@ -61,7 +61,7 @@ class HarnessSpec extends AnyFunSuite {
     val df = agg.join(agg.withColumnRenamed("count", "c2"), "k")
     assert(df.collect().length == 7)
     val plan = df.queryExecution.executedPlan
-    assert(PlanSweep.exchanges(plan) == ((1, 1, 0)), plan.toString)
+    assert(Bench.exchanges(plan) == ((1, 1, 0)), plan.toString)
     // the substring arithmetic this replaced over-counts the same plan
     val text = plan.toString
     def c(p: String) = p.r.findAllIn(text).length

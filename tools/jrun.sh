@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Run a graft main class directly on the Spark jars (no sbt in the loop), so
 # A/B runs can pin a PRESERVED classes dir while target/ keeps moving:
-#   CLASSES=/tmp/classes_before tools/jrun.sh graft.BenchSteady /tmp/steady.json 5 key1,key2
+#   CLASSES=/tmp/classes_before tools/jrun.sh graft.Bench /tmp/bench_before 5 key1,key2
 # Env: CLASSES (default target/scala-2.13/classes), SPARK_DRIVER_MEM
 # (default 8g), plus the usual SPARK_GRAFT_* knobs read by the mains.
 set -uo pipefail

@@ -1,12 +1,19 @@
-#!/usr/bin/env python3
-"""Pair two graft.ScaleBytes dumps (e.g. sf0.01 vs sf0.1) into per-key
+"""Pair two per-key byte records (e.g. sf0.01 vs sf0.1) into per-key
 DECADE EXPONENTS for shuffle volume and CPU, and flag super-linear keys.
+
+Each input is a graft.Bench run dir (or its keys.jsonl), or one of the
+committed SCALEBYTES_*.json files. The two are different eras and are
+never paired with each other (the script refuses): a Bench record's bytes
+come from the measured NOOP leg, a full materialization of every column
+of every row, while the committed SCALEBYTES files hold the retired
+ScaleBytes main's COUNT-leg bytes, where Catalyst pruned every column and
+expression the count did not need.
 
 exponent = log(metric_hi / metric_lo) / log(data_ratio)
   1.0 = linear in data, 2.0 = quadratic; < 0.05 absolute at the high SF is
   reported as 'bounded' (spines, scalars — scale-free by construction).
 
-Usage: scalebytes_diff.py <lo.json> <hi.json> [data_ratio]
+Usage: scalebytes_diff.py <lo> <hi> [data_ratio]
                           [--flag-exp=1.25] [--min-bytes=4194304]
                           [--min-cpu=10000] [--expect=k1,k2,...]
 All options take the `--name=value` form ONLY; a space-separated value
@@ -23,7 +30,7 @@ per-key CPU under ~10 s swings 2-6x between same-config runs (JIT, task
 constants, and cross-key attribution bleed in full-board passes — r15
 measured graph_common_neighbors at 11.4 CPU-s in a full-board pass vs
 7.6 s isolated, and sub-second keys read up to 6x inflated). Measure a
-key ISOLATED (pass it as the key filter to graft.ScaleBytes) before
+key ISOLATED (pass it as the key filter to graft.Bench) before
 believing any CPU exponent.
 
 --expect subtracts the DOCUMENTED super-linear keys (the exact-dedup
@@ -32,7 +39,7 @@ flags or an expected one stops flagging (drift both ways is signal).
 
 Exit 1 on unexpected flags, 0 otherwise.
 """
-import json, math, sys
+import json, math, os, sys
 
 KNOWN_OPTS = ("--flag-exp", "--min-bytes", "--min-cpu", "--expect", "--cpu-flag")
 
@@ -45,6 +52,17 @@ KNOWN_OPTS = ("--flag-exp", "--min-bytes", "--min-cpu", "--expect", "--cpu-flag"
 # the gate stays mechanical — this table only annotates the printed row so
 # a future byte-level diff doesn't chase compression noise as a regression.
 BYTE_VARYING = {"graph_transitive_closure": 0.10}
+
+def load(path):
+    """(era, {key: record}) of a Bench run dir / keys.jsonl or a committed
+    SCALEBYTES_*.json; failed keys carry no bytes and are skipped."""
+    if os.path.isdir(path):
+        path = os.path.join(path, "keys.jsonl")
+    if path.endswith(".jsonl"):
+        recs = (json.loads(line) for line in open(path))
+        return "noop", {r["key"]: r for r in recs if "error" not in r}
+    return "count", json.load(open(path))["keys"]
+
 
 def main():
     # Strict argv validation: options are --name=value ONLY. A bare
@@ -60,10 +78,12 @@ def main():
                          "a following value would be misread as data_ratio)")
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     if len(args) < 2 or len(args) > 3:
-        sys.exit("usage: scalebytes_diff.py <lo.json> <hi.json> [data_ratio] "
+        sys.exit("usage: scalebytes_diff.py <lo> <hi> [data_ratio] "
                  "[--flag-exp=F] [--min-bytes=N] [--min-cpu=N] [--expect=k1,k2]")
-    lo = json.load(open(args[0]))
-    hi = json.load(open(args[1]))
+    (lo_era, lo), (hi_era, hi) = load(args[0]), load(args[1])
+    if lo_era != hi_era:
+        sys.exit(f"cannot pair {lo_era}-leg bytes ({args[0]}) with "
+                 f"{hi_era}-leg bytes ({args[1]})")
     ratio = float(args[2]) if len(args) > 2 else 10.0
     def opt(name, dv):
         for a in sys.argv[1:]:
@@ -87,8 +107,8 @@ def main():
         return math.log(a / b) / ld
 
     rows, flags = [], []
-    for k, h in hi["keys"].items():
-        l = lo["keys"].get(k)
+    for k, h in hi.items():
+        l = lo.get(k)
         if l is None:
             continue
         es = expo(h["shuf_w"], max(l["shuf_w"], 1))
@@ -127,7 +147,7 @@ def main():
             unexpected.append(k)
     flagged = {k for k, _ in flags}
     for k in sorted(expect - flagged):
-        if k in hi["keys"]:
+        if k in hi:
             print(f"EXPECTED-GONE {k}: no longer flags (re-document or "
                   f"drop from --expect)")
             unexpected.append(k)
