@@ -305,7 +305,7 @@ object Bench {
     .getOperatingSystemMXBean.getSystemLoadAverage
 
   /** One JSON object; seconds and load averages with 3 decimals. */
-  private def obj(fields: Seq[(String, Any)]): String =
+  private[graft] def obj(fields: Seq[(String, Any)]): String =
     fields.map { case (k, v) => str(k) + ":" + json(v) }.mkString("{", ",", "}")
 
   private def json(v: Any): String = v match {

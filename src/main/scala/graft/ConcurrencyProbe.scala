@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Concurrent multi-tenant execution probe. A production deployment does
@@ -88,23 +90,8 @@ object ConcurrencyProbe {
     // commit exactly (FetchFailed → stage re-execution under FAIR).
     val killMode = sys.env.get("SPARK_GRAFT_KILL").contains("1") &&
       master.startsWith("local-cluster")
-    val removedExec = new java.util.concurrent.atomic.AtomicInteger(0)
-    if (killMode) root.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onExecutorRemoved(
-            e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-          removedExec.incrementAndGet()
-      })
-    def killOne(): Boolean = {
-      import scala.sys.process._
-      val appId = root.sparkContext.applicationId
-      val pids = Seq("bash", "-c", "ps -eo pid,args").!!.linesIterator
-        .filter(l => l.contains("CoarseGrainedExecutorBackend") && l.contains(appId))
-        .map(_.trim.split("\\s+")(0).toInt).toSeq.sorted
-      pids.headOption.exists { pid =>
-        Seq("kill", "-9", pid.toString).! == 0
-      }
-    }
+    val watch = new FaultProbe.ExecutorWatch
+    if (killMode) root.sparkContext.addSparkListener(watch)
     var kills = 0
 
     val keys = SparkEntry.queries.keys.toSeq.sorted
@@ -120,8 +107,10 @@ object ConcurrencyProbe {
         val dl = System.currentTimeMillis() + 180000
         while (dumped < threshold && System.currentTimeMillis() < dl)
           Thread.sleep(200)
-        if (killOne()) { kills += 1; System.err.println(
-          s"[concprobe] killed an executor at $dumped dumps") }
+        if (FaultProbe.killOneExecutor(root.sparkContext.applicationId).isDefined) {
+          kills += 1
+          System.err.println(s"[concprobe] killed an executor at $dumped dumps")
+        }
         Thread.sleep(3000) // let the master relaunch before the next wait
       }
     })
@@ -140,19 +129,20 @@ object ConcurrencyProbe {
         .selectExpr("to_json(struct(*)) AS js")
       val b = root.read.parquet(s"$base/conc/$k")
         .selectExpr("to_json(struct(*)) AS js")
-      val d = a.exceptAll(b).count() + b.exceptAll(a).count()
-      if (d > 0 || concErr.contains(k)) { nDiff += 1; diffs += k }
+      val (missing, extra) = FaultProbe.diffCounts(a, b)
+      if (missing + extra > 0 || concErr.contains(k)) { nDiff += 1; diffs += k }
     }
-    println(s"""{"probe":"concurrency","sf":"$sfDir","threads":$threads,""" +
-      s""""n_keys":${keys.size},"n_diff":$nDiff,"n_errors":${concErr.size},""" +
-      s""""serial_sec":${T.num(serialSec, 1)},"concurrent_sec":${T.num(concSec, 1)},""" +
-      s""""speedup":${T.num(serialSec / concSec, 2)},""" +
-      (if (killMode) s""""kills":$kills,"executorsRemoved":${removedExec.get()},""" else "") +
-      s""""diff_keys":${diffs.map(d => "\"" + d + "\"").mkString("[", ",", "]")},""" +
-      s""""errors":${concErr.map { case (k, v) => "\"" + k + "\": \"" + v.replace("\"", "'") + "\"" }.mkString("{", ",", "}")}}""")
+    println(Bench.obj(Seq("probe" -> "concurrency", "sf" -> sfDir,
+      "threads" -> threads, "n_keys" -> keys.size, "n_diff" -> nDiff,
+      "n_errors" -> concErr.size, "serial_sec" -> serialSec,
+      "concurrent_sec" -> concSec, "speedup" -> serialSec / concSec) ++
+      (if (killMode) Seq("kills" -> kills, "executorsRemoved" -> watch.removed.get())
+       else Nil) ++
+      Seq("diff_keys" -> diffs.toSeq,
+        "errors" -> ListMap(concErr.toSeq.sortBy(_._1): _*))))
     root.stop()
     if (nDiff > 0 || concErr.nonEmpty) sys.exit(1)
     // a kill run that never killed proves nothing — fail it loudly
-    if (killMode && (kills < 1 || removedExec.get() < 1)) sys.exit(2)
+    if (killMode && (kills < 1 || watch.removed.get() < 1)) sys.exit(2)
   }
 }

@@ -26,6 +26,8 @@ object SoakProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val rounds = if (args.length > 1) args(1).toInt else 4
+    // the verdict compares the last round against round 2 (round 1 warms up)
+    require(rounds >= 2, s"rounds must be at least 2, got $rounds")
     val s = Graft.session("soakprobe")
     s.sparkContext.setLogLevel("WARN")
     val keys = SparkEntry.queries.keys.toSeq.sorted
@@ -40,8 +42,8 @@ object SoakProbe {
       val rdds = s.sparkContext.getPersistentRDDs
       val storage = s.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum
-      println(f"SOAK round=${r + 1} total=${wall(r).values.sum}%.1f " +
-        f"pinnedRdds=${rdds.size} storageUsed=${storage / 1048576}%dMB")
+      println(s"SOAK round=${r + 1} total=${T.num(wall(r).values.sum, 1)} " +
+        s"pinnedRdds=${rdds.size} storageUsed=${storage / 1048576}MB")
     }
     // last-vs-round-2 per-key ratios (>= 2x AND >= +0.5s absolute — tiny
     // keys jitter); round 1 excluded as warmup
@@ -51,10 +53,10 @@ object SoakProbe {
       .filter { case (_, b, l) => l >= 2 * b && l - b >= 0.5 }
       .sortBy { case (_, b, l) => b - l }
     degraded.foreach { case (k, b, l) =>
-      println(f"SOAK DEGRADED $k round2=$b%.2f round$rounds=$l%.2f")
+      println(s"SOAK DEGRADED $k round2=${T.num(b, 2)} round$rounds=${T.num(l, 2)}")
     }
     println(s"SOAK DONE rounds=$rounds degraded=${degraded.size} " +
-      f"totalRound2=${base.values.sum}%.1f totalLast=${last.values.sum}%.1f")
+      s"totalRound2=${T.num(base.values.sum, 1)} totalLast=${T.num(last.values.sum, 1)}")
     s.stop()
     if (degraded.nonEmpty) sys.exit(1)
   }

@@ -1,10 +1,11 @@
 package graft
 
 /** Tight-heap spill exactness probe — the memory-pressure sibling of
-  * RetryProbe (task retries) and StateRestore (checkpoint economics): on a
-  * real cluster an executor core gets ~1–4 GB, not the 48 GB the local
-  * gate runs with, so at 100 TB the sort/agg/join spill paths are not an
-  * edge case — they are the steady state. Nothing on the board had proven
+  * FaultProbe (task, executor and driver death) and StateRestore
+  * (checkpoint economics): on a real cluster an executor core gets
+  * ~1–4 GB, not the 48 GB the local gate runs with, so at 100 TB the
+  * sort/agg/join spill paths are not an edge case — they are the steady
+  * state. Nothing on the board had proven
   * the graded plans (a) COMPLETE without OOM and (b) stay BIT-EXACT when
   * execution memory per task is ~100× tighter than the measurement
   * default, i.e. that no key silently relies on "everything fits".
@@ -42,12 +43,6 @@ object SpillProbe {
     "text_tfidf_top_terms", "agg_histogram_equidepth", "etl_scd2_intervals",
     "agg_distinct_rows")
 
-  /** Two-way multiset diff (RetryProbe's exactness criterion): both counts
-    * zero ⇔ the pressured run committed exactly the reference multiset. */
-  private[graft] def diffCounts(ref: org.apache.spark.sql.DataFrame,
-                                got: org.apache.spark.sql.DataFrame): (Long, Long) =
-    (ref.exceptAll(got).count(), got.exceptAll(ref).count())
-
   final case class KeyResult(key: String, rows: Long, missing: Long,
                              extra: Long, diskSpilled: Long, memSpilled: Long,
                              shuffleWrite: Long, sec: Double) {
@@ -69,7 +64,7 @@ object SpillProbe {
     System.err.println(s"SPILLPROBE mode=$mode heapMb=$heapMb keys=${keys.size}")
 
     // Bytes are attributed by job group (Bench.Collector): every job the
-    // key runs — in probe mode that includes diffCounts' exceptAll jobs and
+    // key runs — in probe mode that includes the diff's exceptAll jobs and
     // the ref.count(), charged to the key by construction — lands on it,
     // whenever its task events are delivered.
     val results = keys.map { k =>
@@ -83,7 +78,7 @@ object SpillProbe {
           (spark.read.parquet(s"$refDir/$k.parquet").count(), 0L, 0L)
         } else {
           val ref = spark.read.parquet(s"$refDir/$k.parquet")
-          val (missing, extra) = diffCounts(ref, fn(spark, sfDir))
+          val (missing, extra) = FaultProbe.diffCounts(ref, fn(spark, sfDir))
           (ref.count(), missing, extra)
         }
       }

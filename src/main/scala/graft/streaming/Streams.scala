@@ -165,8 +165,8 @@ object Streams {
     if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
     // crash-probe hook: a process death HERE (swap applied, marker absent)
     // is the adversarial point — on redelivery the merge must converge,
-    // which the deterministic latest-wins rewrite guarantees (CrashProbe
-    // scenario upsert_torn_marker; idempotence pinned in RetrySpec)
+    // which the deterministic latest-wins rewrite guarantees (FaultProbe
+    // crash scenario upsert_torn_marker; idempotence pinned in RetrySpec)
     beforeMarker(batchId)
     committed.createNewFile()
   }

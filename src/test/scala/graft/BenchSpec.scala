@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.Locale
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -80,6 +81,18 @@ class BenchSpec extends AnyFunSuite {
     assert(r.values.forall(_.get("noop_s").size == 2))
     val slow = r.collect { case (k, n) if n.get("noop_s").get(0).asDouble >= 0.3 => k }
     assert(slow.toSet == Set("planted_sleep"), r)
+  }
+
+  test("the JSON writer keeps quotes, backslashes and newlines of an error text parseable") {
+    // analysis errors routinely carry newlines; ConcurrencyProbe's line
+    // holds them verbatim in its "errors" map
+    val err = "AnalysisException: [UNRESOLVED_COLUMN] \"x\" not found\n  at C:\\tmp\t;"
+    val line = Bench.obj(Seq("probe" -> "concurrency", "n_errors" -> 1,
+      "diff_keys" -> Seq("k\"1"), "errors" -> ListMap("k\"1" -> err)))
+    assert(!line.contains("\n"), line)
+    val n = mapper.readTree(line)
+    assert(n.get("errors").get("k\"1").asText == err)
+    assert(n.get("diff_keys").get(0).asText == "k\"1" && n.get("n_errors").asInt == 1)
   }
 
   test("reps = 0 is rejected before anything runs") {

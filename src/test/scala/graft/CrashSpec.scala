@@ -5,9 +5,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** In-suite pins for the driver-crash probe's two fault-point contracts
-  * (the probe itself kills real JVMs — `graft.CrashProbe`, run out of
-  * band; these tests pin the pieces a unit suite CAN hold still).
+/** In-suite pins for the driver-crash and topology modes of
+  * `graft.FaultProbe` (the probe itself kills real JVMs and is run out of
+  * band; these tests pin the pieces a unit suite CAN hold still): the two
+  * fault-point contracts, the checkpoint readers behind the torn-batch and
+  * pinned-shuffle verdicts, and where each child runs.
   */
 class CrashSpec extends AnyFunSuite {
   private val s = TestSpark.spark
@@ -48,12 +50,71 @@ class CrashSpec extends AnyFunSuite {
     assert(s.read.parquet(s"$target/data").count() == 2)
   }
 
-  test("CrashProbeChild.poisoned is an exact pass-through when disarmed " +
+  test("FaultProbe.poisoned is an exact pass-through when disarmed " +
     "(haltAt < 0): same rows, same schema, and it composes under the " +
     "dedup pipeline unchanged") {
     val ev = T.t(s, sf, "events").limit(500)
-    val wrapped = CrashProbeChild.poisoned(ev, -1L)
+    val wrapped = FaultProbe.poisoned(ev, -1L)
     assert(wrapped.schema == ev.schema)
     assert(wrapped.exceptAll(ev).count() == 0 && ev.exceptAll(wrapped).count() == 0)
+  }
+
+  private def logEntry(ckpt: String, sub: String, id: Long, body: String = ""): Unit = {
+    val d = new java.io.File(ckpt, sub)
+    d.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(d, id.toString).toPath, body)
+    // Spark's checksum sidecars share the directory and must be ignored
+    new java.io.File(d, s".$id.crc").createNewFile()
+  }
+
+  test("maxBatch is -1 without a log, and offsets ahead of commits is a torn batch") {
+    val ckpt = T.tempDir("graft_ckpt_")
+    assert(FaultProbe.maxBatch(ckpt, "offsets") == -1L)
+    assert(FaultProbe.tornBatch(ckpt) == -1L)
+    new java.io.File(ckpt, "commits").mkdirs()
+    assert(FaultProbe.maxBatch(ckpt, "commits") == -1L)
+    // batches 0-2 started, 0-1 committed: the run died inside batch 2
+    Seq(0L, 1L, 2L).foreach(logEntry(ckpt, "offsets", _))
+    Seq(0L, 1L).foreach(logEntry(ckpt, "commits", _))
+    assert(FaultProbe.maxBatch(ckpt, "offsets") == 2L)
+    assert(FaultProbe.maxBatch(ckpt, "commits") == 1L)
+    assert(FaultProbe.tornBatch(ckpt) == 2L)
+    logEntry(ckpt, "commits", 2L)
+    assert(FaultProbe.tornBatch(ckpt) == -1L)
+    // batch ids compare as numbers, not names
+    Seq(9L, 10L).foreach(logEntry(ckpt, "offsets", _))
+    assert(FaultProbe.maxBatch(ckpt, "offsets") == 10L)
+  }
+
+  test("the pinned-shuffle check reads the latest offsets entry's conf snapshot") {
+    def entry(shuffle: Int): String =
+      s"""v1
+         |{"batchWatermarkMs":0,"batchTimestampMs":1700000000000,"conf":{"spark.sql.streaming.stateStore.providerClass":"x","spark.sql.shuffle.partitions":"$shuffle"}}
+         |{"logOffset":0}
+         |""".stripMargin
+    val ckpt = T.tempDir("graft_ckpt_")
+    assert(!FaultProbe.offsetsPinShuffle(ckpt, 8))
+    (0L to 9L).foreach(logEntry(ckpt, "offsets", _, entry(8)))
+    assert(FaultProbe.offsetsPinShuffle(ckpt, 8))
+    assert(!FaultProbe.offsetsPinShuffle(ckpt, 4))
+    // a resume that dropped the pinning logs the new session's width
+    logEntry(ckpt, "offsets", 10L, entry(4))
+    assert(!FaultProbe.offsetsPinShuffle(ckpt, 8))
+    assert(FaultProbe.offsetsPinShuffle(ckpt, 4))
+  }
+
+  test("children get master and shuffle width in argv: local[8]/8 for phase " +
+    "A, control and the crash phases, the cluster master/4 for phase B") {
+    val cluster = "local-cluster[2,4,3072]"
+    val (a, b, control) = FaultProbe.topologyPhases(cluster)
+    def argv(p: FaultProbe.Phase): Seq[String] =
+      FaultProbe.childCommand("session_rocksdb", "/c", "/s", "/k", -1L, p).takeRight(9)
+    val single = Seq("graft.FaultProbe", "child", "session_rocksdb", "/c", "/s",
+      "/k", "-1", "local[8]", "8")
+    assert(argv(a) == single)
+    assert(argv(control) == single)
+    assert(argv(FaultProbe.Phase("victim")) == single)
+    assert(argv(b).takeRight(2) == Seq(cluster, "4"))
+    assert(Set(a.name, b.name, control.name) == Set("phaseA", "phaseB", "control"))
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the shared harness pieces: the session factory's conf, the
-  * bounded listener drain and Bench's plan-tree exchange count. */
+  * bounded listener drain, Bench's plan-tree exchange count and SoakProbe's
+  * round check. */
 class HarnessSpec extends AnyFunSuite {
   private val s = TestSpark.spark
 
@@ -66,5 +67,12 @@ class HarnessSpec extends AnyFunSuite {
     val text = plan.toString
     def c(p: String) = p.r.findAllIn(text).length
     assert(c("Exchange") - c("ReusedExchange") - c("BroadcastExchange") > 1)
+  }
+
+  test("SoakProbe rejects fewer than 2 rounds before it runs a board") {
+    // its verdict compares the last round with round 2, which one round
+    // lacks; the check must fire before the board runs, not after
+    val e = intercept[IllegalArgumentException](SoakProbe.main(Array(TestSpark.sf, "1")))
+    assert(e.getMessage.contains("rounds must be at least 2"))
   }
 }

@@ -22,18 +22,18 @@ class SpillSpec extends AnyFunSuite {
   test("diffCounts is zero on identity and flags planted divergence both ways") {
     import org.apache.spark.sql.functions._
     val ref = s.range(100).select(col("id"), (col("id") * 2).as("v"))
-    assert(SpillProbe.diffCounts(ref, ref) == ((0L, 0L)))
+    assert(FaultProbe.diffCounts(ref, ref) == ((0L, 0L)))
     val mutated = ref.withColumn("v",
       when(col("id") === 42, lit(-1L)).otherwise(col("v")))
-    val (m1, e1) = SpillProbe.diffCounts(ref, mutated)
+    val (m1, e1) = FaultProbe.diffCounts(ref, mutated)
     assert(m1 == 1 && e1 == 1, s"value mutation not flagged: ($m1,$e1)")
     val dropped = ref.filter(col("id") =!= 7)
-    val (m2, e2) = SpillProbe.diffCounts(ref, dropped)
+    val (m2, e2) = FaultProbe.diffCounts(ref, dropped)
     assert(m2 == 1 && e2 == 0, s"dropped row not flagged: ($m2,$e2)")
     // duplicate-row divergence is invisible to a set diff — the multiset
     // exceptAll must flag it (the committed-twice failure mode)
     val doubled = ref.unionAll(ref.filter(col("id") === 3))
-    val (m3, e3) = SpillProbe.diffCounts(ref, doubled)
+    val (m3, e3) = FaultProbe.diffCounts(ref, doubled)
     assert(m3 == 0 && e3 == 1, s"duplicated row not flagged: ($m3,$e3)")
   }
 }
