@@ -424,24 +424,34 @@ object FaultProbe {
 
   /** Run one child, its output appended to `$logDir/<scenario>_<phase>.log`;
     * its exit code. A child without a poison (`haltAt < 0`) must exit 0. */
-  private def runChild(scenario: String, phase: Phase, chunkDir: String,
-                       sinkDir: String, ckptDir: String, logDir: String,
-                       haltAt: Long = -1L): Int = {
+  private[graft] def runChild(scenario: String, phase: Phase, chunkDir: String,
+                              sinkDir: String, ckptDir: String, logDir: String,
+                              haltAt: Long = -1L): Int = {
+    val log = new java.io.File(logDir, s"${scenario}_${phase.name}.log")
     val pb = new ProcessBuilder(
       childCommand(scenario, chunkDir, sinkDir, ckptDir, haltAt, phase): _*)
       .redirectErrorStream(true)
-      .redirectOutput(ProcessBuilder.Redirect.appendTo(
-        new java.io.File(logDir, s"${scenario}_${phase.name}.log")))
+      .redirectOutput(ProcessBuilder.Redirect.appendTo(log))
     // a local-cluster child's worker needs it to launch executors
     pb.environment().putIfAbsent("SPARK_SCALA_VERSION", "2.13")
     val p = pb.start()
     if (!p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) {
       p.destroyForcibly()
-      throw new IllegalStateException(s"$scenario/${phase.name} child hung")
+      throw new IllegalStateException(childFailure(scenario, phase, "hung", log))
     }
     require(haltAt >= 0 || p.exitValue() == 0,
-      s"$scenario/${phase.name} child exited ${p.exitValue()}")
+      childFailure(scenario, phase, s"exited ${p.exitValue()}", log))
     p.exitValue()
+  }
+
+  /** The error for a failed child, carrying the last 40 lines of its log:
+    * the log lives in a `T.tempDir` that is deleted when this JVM exits. */
+  private[graft] def childFailure(scenario: String, phase: Phase, what: String,
+                                  log: java.io.File): String = {
+    val tail = if (!log.isFile) Seq(s"(no log at $log)") else
+      new String(java.nio.file.Files.readAllBytes(log.toPath),
+        java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq.takeRight(40)
+    s"$scenario/${phase.name} child $what; last lines of $log:\n${tail.mkString("\n")}"
   }
 
   /** Max batch id in a checkpoint sub-log (`offsets` or `commits`), -1 if

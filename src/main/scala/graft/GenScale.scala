@@ -39,7 +39,7 @@ object GenScale {
     * separator: a salted token decomposes uniquely at its LAST 'x', making
     * cross-copy vocabularies disjoint for ANY copy count (the base-26
     * form collided once a suffix digit could be 'x' — "fox"+"xa" ==
-    * "fo"+"xxa" at copy 598; ADVICE r13). Shared with MinHashSweep's
+    * "fo"+"xxa" at copy 598; ADVICE r13). Shared with Sweep.MinHash's
     * in-memory ×N corpus. */
   private[graft] def letterSuffix(k: Int): String = {
     val digits = "abcdefghijklmnopqrstuvwyz" // 25 letters, no 'x'

@@ -1,7 +1,7 @@
 package graft
 
 /** Tight-heap spill exactness probe — the memory-pressure sibling of
-  * FaultProbe (task, executor and driver death) and StateRestore
+  * FaultProbe (task, executor and crash faults) and `Sweep restore`
   * (checkpoint economics): on a real cluster an executor core gets
   * ~1–4 GB, not the 48 GB the local gate runs with, so at 100 TB the
   * sort/agg/join spill paths are not an edge case — they are the steady

@@ -455,36 +455,6 @@ object Pipelines {
       rounds, changed == 0)
   }
 
-  /** LEGACY min-label propagation (O(diameter) rounds) — kept only so
-    * DedupSpec can demonstrate the failure mode pointer doubling fixes:
-    * a chain whose diameter exceeds the round budget never converges here.
-    * Returns (labels, converged). Not used by any query path. */
-  private[graft] def ccMinLabelLegacy(pairs: DataFrame,
-                                      maxIters: Int): (DataFrame, Boolean) = {
-    val edges = pairs.select(col("ia").as("a"), col("ib").as("b"))
-      .unionByName(pairs.select(col("ib").as("a"), col("ia").as("b")))
-      .distinct().localCheckpoint(false)
-    var lbl = edges.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(false)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val neigh = edges.join(lbl.select(col("id").as("b"), col("lbl").as("nl")),
-          Seq("b"))
-        .groupBy(col("a").as("id")).agg(min(col("nl")).as("minNl"))
-      val next = lbl.join(neigh, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("minNl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(false)
-      changed = next.join(lbl.withColumnRenamed("lbl", "old"), "id")
-        .filter(col("lbl") =!= col("old")).count()
-      lbl = next
-      iter += 1
-    }
-    (lbl.select(col("id").as("doc_id"), col("lbl").as("cluster_rep")),
-      changed == 0)
-  }
-
   /** Brute-force cosine top-k: for each query row, the k nearest candidate
     * rows by the codegen'd `vec_dot` (register GraftFunctions first, or use
     * Graft.session). Queries are broadcast — correct while the query set is

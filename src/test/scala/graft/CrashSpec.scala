@@ -117,4 +117,22 @@ class CrashSpec extends AnyFunSuite {
     assert(argv(b).takeRight(2) == Seq(cluster, "4"))
     assert(Set(a.name, b.name, control.name) == Set("phaseA", "phaseB", "control"))
   }
+
+  test("a failed child's error carries the last 40 lines of its log, which " +
+    "is deleted with its temp dir") {
+    val dir = T.tempDir("graft_crash_log_")
+    val log = new java.io.File(dir, "s_p.log")
+    java.nio.file.Files.writeString(log.toPath, (0 until 100).map(i => s"line $i").mkString("\n"))
+    val msg = FaultProbe.childFailure("s", FaultProbe.Phase("p"), "exited 1", log)
+    assert(msg.startsWith("s/p child exited 1;"), msg)
+    assert(msg.split("\n").toSeq.takeRight(40) == (60 until 100).map(i => s"line $i"), msg)
+    assert(!msg.contains("line 59"), msg)
+    assert(FaultProbe.childFailure("s", FaultProbe.Phase("p"), "hung",
+      new java.io.File(dir, "none.log")).contains("(no log at"))
+    // a real child: an unknown scenario throws after session start, exit 1
+    val e = intercept[IllegalArgumentException](FaultProbe.runChild("nope",
+      FaultProbe.Phase("p"), dir, s"$dir/sink", s"$dir/ckpt", dir))
+    assert(e.getMessage.contains("nope/p child exited 1;"), e.getMessage)
+    assert(e.getMessage.contains("unknown scenario nope"), e.getMessage)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,36 @@ class DedupSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   private val sf = TestSpark.sf
   private def run(key: String) = SparkEntry.queries(key)(s, sf)
+
+  /** LEGACY min-label propagation (O(diameter) rounds) — kept only so
+    * this suite can demonstrate the failure mode pointer doubling fixes:
+    * a chain whose diameter exceeds the round budget never converges here.
+    * Returns (labels, converged). */
+  private def ccMinLabelLegacy(pairs: DataFrame,
+                               maxIters: Int): (DataFrame, Boolean) = {
+    val edges = pairs.select(col("ia").as("a"), col("ib").as("b"))
+      .unionByName(pairs.select(col("ib").as("a"), col("ia").as("b")))
+      .distinct().localCheckpoint(false)
+    var lbl = edges.select(col("a").as("id")).distinct()
+      .withColumn("lbl", col("id")).localCheckpoint(false)
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIters) {
+      val neigh = edges.join(lbl.select(col("id").as("b"), col("lbl").as("nl")),
+          Seq("b"))
+        .groupBy(col("a").as("id")).agg(min(col("nl")).as("minNl"))
+      val next = lbl.join(neigh, Seq("id"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("minNl"), col("lbl"))).as("lbl"))
+        .localCheckpoint(false)
+      changed = next.join(lbl.withColumnRenamed("lbl", "old"), "id")
+        .filter(col("lbl") =!= col("old")).count()
+      lbl = next
+      iter += 1
+    }
+    (lbl.select(col("id").as("doc_id"), col("lbl").as("cluster_rep")),
+      changed == 0)
+  }
 
   test("agg_approx_distinct_hll: HLL error < 5% of exact (hll_ok flag set)") {
     val r = run("agg_approx_distinct_hll").collect().head
@@ -180,7 +211,7 @@ class DedupSpec extends AnyFunSuite {
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("ia", "ib")
     // the legacy min-label loop moves labels ONE hop per round — at the old
     // production cap of 15 rounds it provably cannot label this chain
-    val (oldLbl, oldConverged) = api.Pipelines.ccMinLabelLegacy(chain, 15)
+    val (oldLbl, oldConverged) = ccMinLabelLegacy(chain, 15)
     assert(!oldConverged, "legacy propagation should NOT converge in 15 rounds")
     val farEnd = oldLbl.filter(col("doc_id") === 63L).collect().head
     assert(farEnd.getAs[Long]("cluster_rep") > 0L,
