@@ -6,7 +6,7 @@ import graft.streaming.Streams
 import org.apache.spark.TaskContext
 import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved,
-  SparkListenerTaskEnd}
+  SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
@@ -25,7 +25,9 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   *    streaming foreachBatch upsert sink). Runs on `local[cores,4]` (a
   *    task-failure budget) with speculative execution on, plus the
   *    speculation twin: a straggling first attempt races its speculative
-  *    clone and only one may commit.
+  *    clone and only one may commit. The twin lands only if a clone
+  *    started, which Spark never does in local mode, so there it reads
+  *    `speculative=0 exact=MISMATCH` and the run exits 1.
   *  - `loss`: executor death. Under `local-cluster`, [[holdOpen]] holds the
   *    faulted stage open until a task has started, then one REAL executor
   *    JVM is `kill -9`ed. Same four scenarios plus `setop_intersect` with
@@ -181,9 +183,29 @@ object FaultProbe {
     }
   }
 
+  /** The speculation twin: [[slow]] over 4 partitions, so the others
+    * finish and partition 0's first attempt is the straggler Spark may
+    * clone; exactly one attempt's output may commit. It lands only if a
+    * speculative attempt started (`TaskInfo.speculative`): a straggler
+    * nobody raced proves nothing about duplicate commits. Spark schedules
+    * no speculation check in local mode and never starts a clone on the
+    * host of the running attempt, so on one machine it does not land. */
+  private def speculation(s: SparkSession): Fault = retry.copy(write = slow(_), spread = Some(4),
+    land = body => {
+      val starts = new AtomicInteger(0)
+      val l = new SparkListener {
+        override def onTaskStart(t: SparkListenerTaskStart): Unit =
+          if (t.taskInfo.speculative) starts.incrementAndGet()
+      }
+      injected.set(0)
+      s.sparkContext.addSparkListener(l)
+      try { body; T.settle(5000L)(starts.get) }
+      finally s.sparkContext.removeSparkListener(l)
+      (Seq("injected" -> injected.get(), "speculative" -> starts.get()), starts.get() >= 1)
+    })
+
   /** The speculation twin's straggler: the first attempt of partition 0
-    * sleeps per row, so a speculative duplicate races it and exactly one
-    * attempt's output may commit. */
+    * sleeps per row, so a speculative duplicate can race it. */
   def slow(df: DataFrame, perRowMs: Long = 20): DataFrame = {
     implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(df.schema)
     df.mapPartitions { it =>
@@ -316,7 +338,7 @@ object FaultProbe {
     s.sparkContext.setLogLevel("WARN")
     try verdict("RETRYPROBE", writePaths(s, srcDir, () => retry) :+
       partitionedWrite(s, srcDir, T.tempDir("graft_fault_"),
-        retry.copy(write = slow(_))).copy(name = "speculative_write"))
+        speculation(s)).copy(name = "speculative_write"))
     finally s.stop()
   }
 

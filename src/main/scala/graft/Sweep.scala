@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -627,12 +629,13 @@ object Sweep {
 
   /** Ground truth of a running-total sink: `value` is non-negative on the
     * fixtures, so each user's running total is monotone and the MAX
-    * emitted `total_cents` per user across the sink read at `sink` equals
-    * the final state; it must equal a batch recompute over the staged
-    * chunks in `chunkDir` with the same HALF_UP cents rounding. Returns
-    * (matched users, mismatched users) and shows up to 20 mismatches. */
-  def check(s: SparkSession, sink: String, chunkDir: String): (Long, Long) = {
-    val got = s.read.parquet(sink).groupBy("user_id").agg(max("total_cents").as("got"))
+    * emitted `total_cents` per user across the sink read from `sink`
+    * (a sink dir, or its part files) equals the final state; it must equal
+    * a batch recompute over the staged chunks in `chunkDir` with the same
+    * HALF_UP cents rounding. Returns (matched users, mismatched users) and
+    * shows up to 20 mismatches. */
+  def check(s: SparkSession, sink: Seq[String], chunkDir: String): (Long, Long) = {
+    val got = s.read.parquet(sink: _*).groupBy("user_id").agg(max("total_cents").as("got"))
     val want = s.read.parquet(chunkDir).groupBy("user_id")
       .agg(sum(round(col("value") * 100, 0).cast("long")).as("want"))
     val joined = got.join(want, Seq("user_id"), "full_outer")
@@ -788,7 +791,7 @@ object Sweep {
         val d = drain(s, chunkDir, ckpt, out)
         WaveStat(w + 1, (w + 1).toLong * waveRows, d, census(ckpt))
       }
-      val (matched, mismatched) = check(s, out, chunkDir)
+      val (matched, mismatched) = check(s, Seq(out), chunkDir)
       ScenarioResult(if (grow) "grow" else "fixed", stats,
         matched, mismatched == 0)
     }
@@ -932,7 +935,7 @@ object Sweep {
     }
 
     /** [[check]] after a restore, over ALL chunks the drained query has
-      * seen. The sink is read through a part-file GLOB, bypassing
+      * seen. The sink is read as its listed part files, bypassing
       * `_spark_metadata`: a COPIED sink's metadata log lists the pre-copy
       * batches under their original absolute paths and the copied dir's
       * physical files are invisible through it (a real operational caveat
@@ -941,9 +944,17 @@ object Sweep {
       * pinned by StreamingSpec's restart test). If a restore LOST state,
       * the cold drain emits a too-small total for a probe-touched key and
       * the pre-copy files only carry the pre-probe total, so max() over the
-      * glob still surfaces the loss. */
+      * files still surfaces the loss. Explicit paths, not a `part-*` glob:
+      * Spark probes a single read path for a sink metadata dir, and a glob
+      * path fails that probe with a logged FileNotFoundException trace on
+      * every read. */
     private def verify(s: SparkSession, out: String, chunkDir: String): Unit = {
-      val (_, bad) = check(s, s"$out/part-*", chunkDir)
+      val parts = scala.util.Using.resource(Files.list(Paths.get(out))) { st =>
+        st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+          .map(_.toString).toSeq.sorted
+      }
+      require(parts.nonEmpty, s"no part files under $out")
+      val (_, bad) = check(s, parts, chunkDir)
       require(bad == 0L, s"restore lost/double-applied state: $bad user mismatches")
     }
   }

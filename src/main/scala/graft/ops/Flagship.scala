@@ -1,9 +1,6 @@
 package graft.ops
 
-import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.T.{Q, sqlKey}
 
 /** M0 flagship (SURVEY.md §7): TPC-H Q3-shaped
   * customer(BUILDING) ⋈ orders(<1996-01-01) ⋈ lineitem, decimal revenue per
@@ -13,7 +10,10 @@ import org.apache.spark.sql.types._
 object Flagship {
 
   val defs: Seq[Q] = Seq(
-    q("flagship_q3",
+    // exact decimal arithmetic: 2dp×2dp products land on half-cent ties,
+    // where double→decimal cast rounding diverges between engines; the
+    // final DOUBLE cast of the exact cents is engine-identical (T.dsum note)
+    sqlKey("flagship_q3",
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate, o_orderpriority,
         |  CAST(CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
         |FROM customer
@@ -21,21 +21,6 @@ object Flagship {
         |JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE c_mktsegment = 'BUILDING' AND CAST(o_orderdate AS DATE) < DATE '1996-01-01'
         |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""") { (s, dir) =>
-      T.t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .join(T.t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate").cast(DateType) < lit(java.sql.Date.valueOf("1996-01-01")))
-        .join(T.t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate").cast(DateType).as("odate"),
-          col("o_orderpriority"))
-        // exact decimal arithmetic: 2dp×2dp products land on half-cent ties,
-        // where double→decimal cast rounding diverges between engines; the
-        // final DOUBLE cast of the exact cents is engine-identical (T.dsum note)
-        .agg(sum(col("l_extendedprice").cast(T.dec) * (lit(1).cast(T.dec) - col("l_discount").cast(T.dec)))
-          .cast(T.dec).cast(DoubleType).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""")
   )
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q, qNoOracle}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,30 +14,16 @@ object GroupAgg {
 
   val defs: Seq[Q] = Seq(
     // TPC-H Q1 shape — HashAggregateExec with map-side partials.
-    q("agg_groupby_hash",
+    sqlKey("agg_groupby_hash",
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(l_discount) AS avg_disc
-        |FROM lineitem GROUP BY 1,2 ORDER BY 1,2""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          count(lit(1)).as("cnt"),
-          T.dsum(col("l_quantity")).as("sum_qty"),
-          T.dsum(col("l_extendedprice")).as("sum_price"),
-          T.davg(col("l_discount")).as("avg_disc"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
+        |FROM lineitem GROUP BY 1,2 ORDER BY 1,2"""),
 
-    q("agg_count_distinct",
+    sqlKey("agg_count_distinct",
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts
-        |FROM lineitem GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(countDistinct(col("l_partkey")).as("n_parts"))
-        .orderBy("l_returnflag")
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // HLL++ sketch differs across engines → property-tested (<5% error) in
     // ApproxDistinctSpec instead of the DuckDB oracle.
@@ -86,75 +72,36 @@ object GroupAgg {
 
     // Boolean aggregate surface: count_if / bool_and / bool_or — the
     // assertion-style aggregates data-quality checks are written in.
-    q("agg_bool_funcs",
+    sqlKey("agg_bool_funcs",
       """SELECT l_returnflag,
         |  CAST(count_if(l_quantity > 25) AS BIGINT) AS n_big,
         |  bool_and(l_quantity > 0) AS all_positive,
         |  bool_or(l_discount > 0.09) AS any_high_disc
-        |FROM lineitem GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          count_if(col("l_quantity") > 25).as("n_big"),
-          bool_and(col("l_quantity") > 0).as("all_positive"),
-          bool_or(col("l_discount") > 0.09).as("any_high_disc"))
-        .orderBy("l_returnflag")
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
-    q("agg_having",
+    sqlKey("agg_having",
       """SELECT o_custkey, count(*) AS n_orders FROM orders
-        |GROUP BY 1 HAVING count(*) >= 12 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .orderBy("o_custkey")
-    },
+        |GROUP BY 1 HAVING count(*) >= 12 ORDER BY 1"""),
 
     // Rollup/cube nulls are disambiguated with COALESCE labels in BOTH
     // engines (fixture group keys are never null, so 'ALL' is unambiguous).
-    q("agg_rollup",
+    sqlKey("agg_rollup",
       """SELECT COALESCE(o_orderstatus,'ALL') AS status,
         |  COALESCE(o_orderpriority,'ALL') AS priority, count(*) AS cnt
         |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .rollup("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("cnt"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("cnt"))
-        .orderBy("status", "priority")
-    },
+        |ORDER BY status, priority"""),
 
-    q("agg_cube",
+    sqlKey("agg_cube",
       """SELECT COALESCE(l_returnflag,'ALL') AS flag, COALESCE(l_linestatus,'ALL') AS status,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(T.dsum(col("l_quantity")).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("sum_qty"))
-        .orderBy("flag", "status")
-    },
+        |ORDER BY flag, status"""),
 
-    q("agg_grouping_sets",
+    sqlKey("agg_grouping_sets",
       """SELECT COALESCE(o_orderstatus,'ALL') AS status,
         |  COALESCE(o_orderpriority,'ALL') AS priority, count(*) AS cnt
         |FROM orders GROUP BY GROUPING SETS ((o_orderstatus),(o_orderpriority),())
-        |ORDER BY status, priority""") { (s, dir) =>
-      T.t(s, dir, "orders").createOrReplaceTempView("gs_orders")
-      s.sql(
-        """SELECT COALESCE(o_orderstatus,'ALL') AS status,
-          |  COALESCE(o_orderpriority,'ALL') AS priority, count(*) AS cnt
-          |FROM gs_orders GROUP BY GROUPING SETS ((o_orderstatus),(o_orderpriority),())
-          |ORDER BY status, priority""".stripMargin)
-    },
+        |ORDER BY status, priority"""),
 
     // Explicit pivot value list ⇒ deterministic output schema.
     q("agg_pivot",
@@ -178,13 +125,8 @@ object GroupAgg {
         .orderBy("user_id")
     },
 
-    q("agg_distinct_rows",
+    sqlKey("agg_distinct_rows",
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY 1,2""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .select("l_returnflag", "l_linestatus")
-        .distinct()
-        .orderBy("l_returnflag", "l_linestatus")
-    }
+        |ORDER BY 1,2""")
   )
 }

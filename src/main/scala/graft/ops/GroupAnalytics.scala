@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,36 +23,29 @@ object GroupAnalytics {
     // Multiset semantics the bag-algebra needs beyond §2-F's set forms:
     // INTERSECT ALL keeps min(multiplicity) per value, EXCEPT ALL subtracts
     // multiplicities. One shuffle on the value in both engines.
-    q("setop_intersect_all",
+    sqlKey("setop_intersect_all",
       """SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1995
         |INTERSECT ALL
         |SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_orderpriority""") { (s, dir) =>
-      val o = T.t(s, dir, "orders")
-      o.filter(year(col("o_orderdate")) === 1995).select("o_orderpriority")
-        .intersectAll(
-          o.filter(year(col("o_orderdate")) === 1996).select("o_orderpriority"))
-        .orderBy("o_orderpriority")
-    },
+        |ORDER BY o_orderpriority"""),
 
-    q("setop_except_all",
+    sqlKey("setop_except_all",
       """SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1995
         |EXCEPT ALL
         |SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_orderpriority""") { (s, dir) =>
-      val o = T.t(s, dir, "orders")
-      o.filter(year(col("o_orderdate")) === 1995).select("o_orderpriority")
-        .exceptAll(
-          o.filter(year(col("o_orderdate")) === 1996).select("o_orderpriority"))
-        .orderBy("o_orderpriority")
-    },
+        |ORDER BY o_orderpriority"""),
 
     // Exact sample covariance + Pearson correlation from decimal power sums
     // (same construction as agg_variance_exact): covar/corr built-ins use a
     // streaming co-moment update whose order is engine- and partition-
     // dependent; the power-sum formula is one map-side-combinable pass and
     // bit-stable at any partition count.
-    q("agg_corr_covar",
+    // 6dp rounds absorb the one engine-shaded step: DuckDB's
+    // decimal128→double conversion of the huge Σx² / Σxy sums is
+    // double-rounded (int128→double, then ×10⁻ˢ) and can land 1 ulp
+    // off Spark's correctly-rounded BigDecimal.toDouble — observed at
+    // sf0.001 on corr before rounding.
+    sqlKey("agg_corr_covar",
       """WITH s AS (SELECT l_returnflag,
         |    CAST(count(*) AS DOUBLE) AS nn,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -64,33 +57,7 @@ object GroupAnalytics {
         |SELECT l_returnflag, CAST(nn AS BIGINT) AS n,
         |  round((nn * sxy - sx * sy) / (nn * (nn - 1)), 6) AS covar_samp,
         |  round((nn * sxy - sx * sy) / (sqrt(nn * sx2 - sx * sx) * sqrt(nn * sy2 - sy * sy)), 6) AS corr
-        |FROM s ORDER BY l_returnflag""") { (s, dir) =>
-      val x = col("l_quantity").cast(T.dec)
-      val y = col("l_extendedprice").cast(T.dec)
-      T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          count(lit(1)).cast(DoubleType).as("nn"),
-          sum(x).cast(DoubleType).as("sx"),
-          sum(y).cast(DoubleType).as("sy"),
-          sum(x * y).cast(DoubleType).as("sxy"),
-          sum(x * x).cast(DoubleType).as("sx2"),
-          sum(y * y).cast(DoubleType).as("sy2"))
-        .select(
-          col("l_returnflag"),
-          col("nn").cast(LongType).as("n"),
-          // 6dp rounds absorb the one engine-shaded step: DuckDB's
-          // decimal128→double conversion of the huge Σx² / Σxy sums is
-          // double-rounded (int128→double, then ×10⁻ˢ) and can land 1 ulp
-          // off Spark's correctly-rounded BigDecimal.toDouble — observed at
-          // sf0.001 on corr before rounding.
-          round((col("nn") * col("sxy") - col("sx") * col("sy"))
-            / (col("nn") * (col("nn") - 1)), 6).as("covar_samp"),
-          round((col("nn") * col("sxy") - col("sx") * col("sy"))
-            / (sqrt(col("nn") * col("sx2") - col("sx") * col("sx"))
-              * sqrt(col("nn") * col("sy2") - col("sy") * col("sy"))), 6).as("corr"))
-        .orderBy("l_returnflag")
-    },
+        |FROM s ORDER BY l_returnflag"""),
 
     // Fixed-width histogram by exact integer bucketing: prices are 2dp, so
     // cents = round(price*100) is an exact integer in both engines and the
@@ -158,27 +125,14 @@ object GroupAnalytics {
     // MONTH), quarter truncation, and whole-month distance expressed as
     // exact integer year/month arithmetic (months_between is fractional and
     // engine-shaded — avoided).
-    q("scalar_interval_arithmetic",
+    sqlKey("scalar_interval_arithmetic",
       """SELECT o_orderkey,
         |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 30 DAY AS DATE) AS plus_30d,
         |  CAST(CAST(o_orderdate AS DATE) - INTERVAL 90 DAY AS DATE) AS minus_90d,
         |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE) AS plus_2mo,
         |  CAST(date_trunc('quarter', o_orderdate) AS DATE) AS qtr,
         |  CAST((year(o_orderdate) * 12 + month(o_orderdate)) - (1995 * 12 + 1) AS INT) AS months_since
-        |FROM orders ORDER BY o_orderkey LIMIT 500""") { (s, dir) =>
-      val d = col("o_orderdate").cast(DateType)
-      T.t(s, dir, "orders")
-        .select(
-          col("o_orderkey"),
-          date_add(d, 30).as("plus_30d"),
-          date_sub(d, 90).as("minus_90d"),
-          add_months(d, 2).as("plus_2mo"),
-          date_trunc("quarter", col("o_orderdate")).cast(DateType).as("qtr"),
-          ((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-            - (1995 * 12 + 1)).cast(IntegerType).as("months_since"))
-        .orderBy("o_orderkey")
-        .limit(500)
-    },
+        |FROM orders ORDER BY o_orderkey LIMIT 500"""),
 
     // Time-interval window frame: per-user trailing 1-hour count + decimal
     // sum via RANGE on exact epoch seconds (epoch_us//1e6 ≡ unix_micros DIV
@@ -414,7 +368,7 @@ object GroupAnalytics {
     // turns O(n²) levenshtein evals into O(Σ block²); at 100 TB the block
     // key is the shuffle key and the quadratic stays inside each block.
     // levenshtein is the classic DP distance in both engines.
-    q("text_fuzzy_blocked_join",
+    sqlKey("text_fuzzy_blocked_join",
       """WITH p AS (SELECT p_partkey, p_name, p_brand, p_size FROM part),
         |pairs AS (SELECT a.p_brand AS brand,
         |    levenshtein(a.p_name, b.p_name) AS lev
@@ -424,26 +378,13 @@ object GroupAnalytics {
         |SELECT brand, count(*) AS n_pairs,
         |  count(*) FILTER (WHERE lev <= 6) AS n_near,
         |  CAST(min(lev) AS INT) AS min_lev
-        |FROM pairs GROUP BY brand ORDER BY brand""") { (s, dir) =>
-      val p = T.t(s, dir, "part").select("p_partkey", "p_name", "p_brand", "p_size")
-      val a = p.select(col("p_partkey").as("ka"), col("p_name").as("na"),
-        col("p_brand").as("brand"), col("p_size").as("sz"))
-      val b = p.select(col("p_partkey").as("kb"), col("p_name").as("nb"),
-        col("p_brand").as("brand"), col("p_size").as("sz"))
-      a.join(b, Seq("brand", "sz")).filter(col("ka") < col("kb"))
-        .withColumn("lev", levenshtein(col("na"), col("nb")))
-        .groupBy("brand")
-        .agg(count(lit(1)).as("n_pairs"),
-          count_if(col("lev") <= 6).as("n_near"),
-          min(col("lev")).cast(IntegerType).as("min_lev"))
-        .orderBy("brand")
-    },
+        |FROM pairs GROUP BY brand ORDER BY brand"""),
 
     // Funnel analysis — per-user ordered stage progression (view → later
     // click → later purchase), the product-analytics sequence-match shape.
     // Three co-partitioned aggregations on user_id; strict ts ordering
     // makes stage advancement deterministic at microsecond resolution.
-    q("window_funnel_stages",
+    sqlKey("window_funnel_stages",
       """WITH u AS (SELECT user_id, min(CASE WHEN event_type = 'view' THEN ts END) AS tv
         |  FROM events GROUP BY 1),
         |c AS (SELECT e.user_id, min(ts) AS tc FROM events e JOIN u USING (user_id)
@@ -455,30 +396,14 @@ object GroupAnalytics {
         |    CASE WHEN tp IS NOT NULL THEN 3 WHEN tc IS NOT NULL THEN 2
         |         WHEN tv IS NOT NULL THEN 1 ELSE 0 END AS stage
         |  FROM u LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id))
-        |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val ev = T.t(s, dir, "events").select("user_id", "event_type", "ts")
-      val u = ev.groupBy("user_id")
-        .agg(min(when(col("event_type") === "view", col("ts"))).as("tv"))
-      val c = ev.join(u, "user_id")
-        .filter(col("event_type") === "click" && col("ts") > col("tv"))
-        .groupBy("user_id").agg(min("ts").as("tc"))
-      val p = ev.join(c, "user_id")
-        .filter(col("event_type") === "purchase" && col("ts") > col("tc"))
-        .groupBy("user_id").agg(min("ts").as("tp"))
-      u.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-        .withColumn("stage",
-          when(col("tp").isNotNull, 3).when(col("tc").isNotNull, 2)
-            .when(col("tv").isNotNull, 1).otherwise(0))
-        .groupBy("stage").agg(count(lit(1)).as("n_users"))
-        .orderBy("stage")
-    },
+        |GROUP BY 1 ORDER BY 1"""),
 
     // Running DISTINCT count per user — the streaming distinct-state shape
     // in batch: flag each (user, event_type)'s first occurrence with one
     // window pass, running-sum the flags with a second. Both windows hash
     // on user-prefixed keys; per-user state is the distinct set (bounded by
     // the 5-value type domain).
-    q("window_running_distinct",
+    sqlKey("window_running_distinct",
       """WITH f AS (SELECT user_id, event_id, ts,
         |    CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
         |      ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS first_seen
@@ -486,17 +411,7 @@ object GroupAnalytics {
         |SELECT user_id, event_id,
         |  CAST(SUM(first_seen) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS run_distinct
-        |FROM f ORDER BY user_id, event_id""") { (s, dir) =>
-      val firstW = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-      val runW = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T.t(s, dir, "events")
-        .withColumn("first_seen",
-          when(row_number().over(firstW) === 1, 1).otherwise(0))
-        .withColumn("run_distinct", sum(col("first_seen")).over(runW).cast(IntegerType))
-        .select("user_id", "event_id", "run_distinct")
-        .orderBy("user_id", "event_id")
-    },
+        |FROM f ORDER BY user_id, event_id"""),
 
     // Dynamic partition pruning: the fact side is the partitioned staging
     // table (shared with sink_partitioned_write), the dim side's filter is
@@ -686,7 +601,7 @@ object GroupAnalytics {
     // day − row_number collapses each consecutive run to a constant group
     // key — pure integer/date arithmetic, one shuffle on user_id. The
     // classic retention/engagement query at any scale.
-    q("window_streak_islands",
+    sqlKey("window_streak_islands",
       """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |r AS (SELECT user_id, day,
         |    row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn FROM days),
@@ -694,18 +609,7 @@ object GroupAnalytics {
         |streaks AS (SELECT user_id, grp, count(*) AS len FROM g GROUP BY 1, 2)
         |SELECT user_id, CAST(max(len) AS INT) AS max_streak,
         |  count(*) AS n_streaks
-        |FROM streaks GROUP BY 1 ORDER BY user_id""") { (s, dir) =>
-      val days = T.t(s, dir, "events")
-        .select(col("user_id"), col("ts").cast(DateType).as("day")).distinct()
-      val r = days.withColumn("rn",
-        row_number().over(Window.partitionBy("user_id").orderBy("day")))
-      r.withColumn("grp", expr("date_sub(day, rn)"))
-        .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
-        .groupBy("user_id")
-        .agg(max("len").cast(IntegerType).as("max_streak"),
-          count(lit(1)).as("n_streaks"))
-        .orderBy("user_id")
-    },
+        |FROM streaks GROUP BY 1 ORDER BY user_id"""),
 
     // Mergeable HLL sketches — the two-level distinct-count shape a 100 TB
     // rollup needs: per-partition sketches (here per status) merged with
@@ -813,8 +717,6 @@ object GroupAnalytics {
         |  SELECT r.child, e.parent, r.depth + 1
         |  FROM reach r JOIN edges e ON r.ancestor = e.child)
         |SELECT depth, count(*) AS n_pairs FROM reach GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      Seq("customer", "supplier", "nation")
-        .foreach(t => T.t(s, dir, t).createOrReplaceTempView(t))
       // Scale knob: Spark's recursive-CTE safety valve defaults to 1 M total
       // rows, which a ×100 fixture's 1.6 M-row anchor level exceeds on the
       // FIRST iteration (found by the r15 full-board ×100 sweep). The
@@ -825,7 +727,9 @@ object GroupAnalytics {
       val lim = s.conf.get("spark.sql.cteRecursionRowLimit", "1000000").toLong
       if (lim != -1L && lim < 100000000L)
         s.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
-      s.sql(
+      // The oracle text is not Spark SQL (CAST AS VARCHAR), so the key
+      // keeps this Spark spelling of it, bound by T.sql.
+      T.sql(s, dir,
         """WITH RECURSIVE edges AS (
           |  SELECT 'c' || CAST(c_custkey AS STRING) AS child,
           |         'n' || CAST(c_nationkey AS STRING) AS parent FROM customer
@@ -949,7 +853,7 @@ object GroupAnalytics {
     // (39,8)→(38,8) still holds these values exactly; DuckDB (36,8)).
     // Built-in skewness/kurtosis use streaming central-moment updates whose
     // merge order is engine- and partition-dependent.
-    q("agg_skew_kurtosis_exact",
+    sqlKey("agg_skew_kurtosis_exact",
       """WITH s AS (SELECT l_returnflag,
         |    CAST(count(*) AS DOUBLE) AS n,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS s1,
@@ -965,27 +869,7 @@ object GroupAnalytics {
         |SELECT l_returnflag, CAST(n AS BIGINT) AS cnt,
         |  round(sqrt(n) * m3 / pow(m2, 1.5), 6) AS skewness,
         |  round(n * m4 / (m2 * m2) - 3, 6) AS kurtosis
-        |FROM m ORDER BY l_returnflag""") { (s, dir) =>
-      val x = col("l_quantity").cast(DecimalType(9, 2))
-      val st = T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          count(lit(1)).cast(DoubleType).as("n"),
-          sum(x).cast(DoubleType).as("s1"),
-          sum(x * x).cast(DoubleType).as("s2"),
-          sum(x * x * x).cast(DoubleType).as("s3"),
-          sum(x * x * x * x).cast(DoubleType).as("s4"))
-      val mu = col("s1") / col("n")
-      st.select(col("l_returnflag"), col("n"),
-          (col("s2") - col("s1") * col("s1") / col("n")).as("m2"),
-          (col("s3") - lit(3) * mu * col("s2") + lit(2) * mu * mu * col("s1")).as("m3"),
-          (col("s4") - lit(4) * mu * col("s3") + lit(6) * mu * mu * col("s2")
-            - lit(3) * mu * mu * mu * col("s1")).as("m4"))
-        .select(col("l_returnflag"), col("n").cast(LongType).as("cnt"),
-          round(sqrt(col("n")) * col("m3") / pow(col("m2"), 1.5), 6).as("skewness"),
-          round(col("n") * col("m4") / (col("m2") * col("m2")) - 3, 6).as("kurtosis"))
-        .orderBy("l_returnflag")
-    },
+        |FROM m ORDER BY l_returnflag"""),
 
     // Bigram PMI collocations: pmi = ln(c_xy·N² / (NB·c_x·c_y)) — every
     // operand is an exact integer count (products < 2⁵³, exact in double),
@@ -1043,7 +927,7 @@ object GroupAnalytics {
     // IEEE signed zero (cos(270°) → −0.0) while Spark's BigDecimal round
     // yields +0.0; adding +0.0 canonicalizes (−0.0 + 0.0 = +0.0) without
     // changing any other value.
-    q("scalar_trig_funcs",
+    sqlKey("scalar_trig_funcs",
       """WITH t AS (SELECT p_partkey, (p_partkey % 360) * pi() / 180.0 AS rad,
         |    (p_size % 100) / 100.0 AS frac FROM part)
         |SELECT p_partkey,
@@ -1051,20 +935,7 @@ object GroupAnalytics {
         |  round(atan2(sin(rad), cos(rad)), 6) + 0.0 AS at2,
         |  round(asin(frac), 6) + 0.0 AS asn,
         |  round(degrees(rad), 6) + 0.0 AS deg
-        |FROM t ORDER BY p_partkey LIMIT 400""") { (s, dir) =>
-      T.t(s, dir, "part")
-        .withColumn("rad", (col("p_partkey") % 360) * lit(math.Pi) / 180.0)
-        .withColumn("frac", (col("p_size") % 100) / 100.0)
-        .select(
-          col("p_partkey"),
-          (round(sin(col("rad")), 6) + 0.0).as("s"),
-          (round(cos(col("rad")), 6) + 0.0).as("c"),
-          (round(atan2(sin(col("rad")), cos(col("rad"))), 6) + 0.0).as("at2"),
-          (round(asin(col("frac")), 6) + 0.0).as("asn"),
-          (round(degrees(col("rad")), 6) + 0.0).as("deg"))
-        .orderBy("p_partkey")
-        .limit(400)
-    },
+        |FROM t ORDER BY p_partkey LIMIT 400"""),
 
     // Null-safe equi-JOIN (`<=>` as the join condition): null keys match
     // each other — the semantics MERGE/CDC pipelines need when the business
@@ -1112,22 +983,12 @@ object GroupAnalytics {
     // by balance through the SQL surface; Catalyst decorrelates the
     // lateral to a ranked window (no per-row re-execution), same as
     // DuckDB's plan.
-    q("join_lateral_topn",
+    sqlKey("join_lateral_topn",
       """SELECT n_name, ck, bal FROM nation n, LATERAL (
         |  SELECT c_custkey AS ck,
         |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
         |  FROM customer c WHERE c.c_nationkey = n.n_nationkey
         |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2)
-        |ORDER BY n_name, ck""") { (s, dir) =>
-      Seq("customer", "nation")
-        .foreach(t => T.t(s, dir, t).createOrReplaceTempView(t))
-      s.sql(
-        """SELECT n_name, ck, bal FROM nation n, LATERAL (
-          |  SELECT c_custkey AS ck,
-          |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
-          |  FROM customer c WHERE c.c_nationkey = n.n_nationkey
-          |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2)
-          |ORDER BY n_name, ck""".stripMargin)
-    }
+        |ORDER BY n_name, ck""")
   )
 }

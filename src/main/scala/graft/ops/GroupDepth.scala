@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,24 +30,14 @@ object GroupDepth {
     // (first-day agg, then the activity join), then one count-distinct agg;
     // at 100 TB the cohort map is a per-user scalar carried by one
     // partitioning.
-    q("window_retention_cohort",
+    sqlKey("window_retention_cohort",
       """WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
         |coh AS (SELECT user_id, min(d) AS cd FROM act GROUP BY 1)
         |SELECT coh.cd AS cohort_day, CAST(act.d - coh.cd AS INT) AS offset_d,
         |  count(DISTINCT act.user_id) AS n_users
         |FROM act JOIN coh ON act.user_id = coh.user_id
         |WHERE CAST(act.d - coh.cd AS INT) <= 7
-        |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-      val act = T.t(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-      val coh = act.groupBy("user_id").agg(min(col("d")).as("cd"))
-      act.join(coh, "user_id")
-        .withColumn("offset_d", datediff(col("d"), col("cd")).cast(IntegerType))
-        .filter(col("offset_d") <= 7)
-        .groupBy(col("cd").as("cohort_day"), col("offset_d"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy("cohort_day", "offset_d")
-    },
+        |GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // Daily-volume anomaly flags — z-score of per-day purchase counts
     // against the full-period mean/std. The moments come from exact integer
@@ -981,7 +971,9 @@ object GroupDepth {
     // moments (population std). Users with one event or zero variance are
     // excluded by exact integer predicates. The per-key stats join is the
     // same user-partitioned shuffle the window family uses.
-    q("ml_feature_standardize",
+    // DECIMAL(38,0) before the sum: s2 = Σc² (~2.5e9/row) approaches the
+    // 64-bit bound near ~4e9 events per user; DuckDB sums in HUGEINT
+    sqlKey("ml_feature_standardize",
       """WITH b AS (SELECT event_id, user_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
         |  FROM events),
@@ -992,25 +984,7 @@ object GroupDepth {
         |      / (sqrt(CAST(st.n * st.s2 - st.s1 * st.s1 AS DOUBLE)) / st.n), 6) AS z
         |  FROM b JOIN st ON b.user_id = st.user_id
         |  WHERE st.n >= 2 AND st.n * st.s2 - st.s1 * st.s1 > 0)
-        |SELECT event_id, user_id, z FROM z ORDER BY event_id LIMIT 2000""") { (s, dir) =>
-      val b = T.t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          (col("value").cast(T.dec) * 100).cast(LongType).as("c"))
-      // DECIMAL(38,0) before the sum: s2 = Σc² (~2.5e9/row) approaches the
-      // 64-bit bound near ~4e9 events per user; DuckDB sums in HUGEINT
-      val d38 = DecimalType(38, 0)
-      val st = b.groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum(col("c").cast(d38)).as("s1"),
-          sum(col("c").cast(d38) * col("c")).as("s2"))
-      b.join(st, "user_id")
-        .filter(col("n") >= 2 && col("n") * col("s2") - col("s1") * col("s1") > 0)
-        .select(col("event_id"), col("user_id"),
-          round((col("c").cast(DoubleType) - col("s1").cast(DoubleType) / col("n"))
-            / (sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast(DoubleType)) / col("n")), 6)
-            .as("z"))
-        .orderBy("event_id")
-        .limit(2000)
-    },
+        |SELECT event_id, user_id, z FROM z ORDER BY event_id LIMIT 2000"""),
 
     // Point-in-time join — the feature-store correctness primitive: which
     // VERSION of the customer's state (their cumulative order index) was
@@ -1019,7 +993,7 @@ object GroupDepth {
     // window carries the last version forward — the as-of machinery, so
     // no range join, no per-probe scan, one shuffle on the customer key.
     // Output: how many lineitems shipped under each version number.
-    q("join_point_in_time",
+    sqlKey("join_point_in_time",
       """WITH v AS (SELECT o_custkey AS k, CAST(o_orderdate AS DATE) AS d,
         |    o_orderkey AS tie,
         |    CAST(row_number() OVER (PARTITION BY o_custkey
@@ -1036,30 +1010,7 @@ object GroupDepth {
         |  FROM (SELECT k, d, tie, ver, is_probe, pd FROM v
         |        UNION ALL SELECT k, d, tie, ver, is_probe, pd FROM p))
         |SELECT coalesce(cur_ver, 0) AS version, count(*) AS n_lineitems
-        |FROM u WHERE is_probe = 1 GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val orders = T.t(s, dir, "orders")
-      val v = orders
-        .select(col("o_custkey").as("k"), col("o_orderdate").cast(DateType).as("d"),
-          col("o_orderkey").as("tie"))
-        .withColumn("ver", row_number().over(
-          Window.partitionBy("k").orderBy("d", "tie")).cast(LongType))
-        .withColumn("is_probe", lit(0))
-      val p = T.t(s, dir, "lineitem")
-        .join(orders.select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("k"), col("l_shipdate").cast(DateType).as("d"),
-          col("l_orderkey").as("tie"),
-          lit(null).cast(LongType).as("ver"), lit(1).as("is_probe"))
-      val u = v.select("k", "d", "tie", "ver", "is_probe")
-        .unionByName(p)
-        .withColumn("cur_ver", max(col("ver")).over(
-          Window.partitionBy("k").orderBy("d", "is_probe", "tie", "ver")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      u.filter(col("is_probe") === 1)
-        .groupBy(coalesce(col("cur_ver"), lit(0L)).as("version"))
-        .agg(count(lit(1)).as("n_lineitems"))
-        .orderBy("version")
-    },
+        |FROM u WHERE is_probe = 1 GROUP BY 1 ORDER BY 1"""),
 
     // Order-independent table checksum — migration validation's handshake:
     // per-table row count + the exact sum of per-row portable fingerprints

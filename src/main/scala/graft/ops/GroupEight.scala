@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -874,44 +874,25 @@ object GroupEight {
     // LeftSemi/LeftAnti joins (PlanShapeSpec pins no per-row subplan
     // survives). Orders that shipped a >45-quantity line but had NO
     // returned line.
-    q("subquery_exists_rewrite",
+    sqlKey("subquery_exists_rewrite",
       """SELECT o.o_orderkey, o.o_orderstatus FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |    WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
         |  AND NOT EXISTS (SELECT 1 FROM lineitem l
         |    WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        |ORDER BY o.o_orderkey""") { (s, dir) =>
-      Seq("orders", "lineitem").foreach(t =>
-        T.t(s, dir, t).createOrReplaceTempView(s"${t}_ex8"))
-      s.sql(
-        """SELECT o.o_orderkey, o.o_orderstatus FROM orders_ex8 o
-          |WHERE EXISTS (SELECT 1 FROM lineitem_ex8 l
-          |    WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem_ex8 l
-          |    WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-          |ORDER BY o.o_orderkey""".stripMargin)
-    },
+        |ORDER BY o.o_orderkey"""),
 
     // FILTER (WHERE ...) aggregate clause — one scan computing disjoint
     // conditional aggregates without self-joins or CASE pyramids; every
     // result column explicitly cast so DuckDB's HUGEINT/float promotions
     // can't reach the output.
-    q("agg_filter_clause",
+    sqlKey("agg_filter_clause",
       """SELECT l_returnflag,
         |  count(*) AS n_all,
         |  CAST(count(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_bulk,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS qty_discounted,
         |  CAST(count(DISTINCT l_suppkey) FILTER (WHERE l_linestatus = 'O') AS BIGINT) AS n_open_supp
-        |FROM lineitem GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "lineitem").createOrReplaceTempView("lineitem_fc8")
-      s.sql(
-        """SELECT l_returnflag,
-          |  count(*) AS n_all,
-          |  count(*) FILTER (WHERE l_quantity > 25) AS n_bulk,
-          |  sum(CAST(l_quantity AS BIGINT)) FILTER (WHERE l_discount > 0.05) AS qty_discounted,
-          |  count(DISTINCT l_suppkey) FILTER (WHERE l_linestatus = 'O') AS n_open_supp
-          |FROM lineitem_fc8 GROUP BY 1 ORDER BY 1""".stripMargin)
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // End-to-end export-readiness audit — the full training-data export
     // path in one declared plan: exact dedup (min-id survivor per text) →

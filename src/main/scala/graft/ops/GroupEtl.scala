@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.expressions.Window
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -69,7 +68,7 @@ object GroupEtl {
     // values taking precedence. current = orders with key % 10 != 0;
     // updates = orders with key % 3 = 0 repriced +100. Output is the
     // merge audit: per action (insert/update/keep) row count + final value.
-    q("etl_merge_upsert",
+    sqlKey("etl_merge_upsert",
       """WITH cur AS (SELECT o_orderkey AS k, CAST(o_totalprice AS DECIMAL(18,2)) AS v
         |  FROM orders WHERE o_orderkey % 10 != 0),
         |upd AS (SELECT o_orderkey AS k, CAST(o_totalprice AS DECIMAL(18,2)) + 100 AS v
@@ -79,23 +78,7 @@ object GroupEtl {
         |         WHEN upd.k IS NULL THEN 'keep' ELSE 'update' END AS action
         |  FROM cur FULL JOIN upd ON cur.k = upd.k)
         |SELECT action, count(*) AS cnt, CAST(SUM(v) AS DOUBLE) AS sum_value
-        |FROM m GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val o = T.t(s, dir, "orders")
-      val cur = o.filter(col("o_orderkey") % 10 =!= 0)
-        .select(col("o_orderkey").as("ck"), col("o_totalprice").cast(T.dec).as("cv"))
-      val upd = o.filter(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey").as("uk"),
-          (col("o_totalprice").cast(T.dec) + 100).as("uv"))
-      cur.join(upd, col("ck") === col("uk"), "full")
-        .select(
-          coalesce(col("uk"), col("ck")).as("k"),
-          coalesce(col("uv"), col("cv")).as("v"),
-          when(col("ck").isNull, "insert")
-            .when(col("uk").isNull, "keep").otherwise("update").as("action"))
-        .groupBy("action")
-        .agg(count(lit(1)).as("cnt"), sum(col("v")).cast(DoubleType).as("sum_value"))
-        .orderBy("action")
-    },
+        |FROM m GROUP BY 1 ORDER BY 1"""),
 
     // Bulk load with reject handling (dbsuite LOAD's reject file): one pass
     // classifies rows, the quarantine layout is a partitioned-by-class
@@ -125,20 +108,11 @@ object GroupEtl {
     // SCD2 interval construction: each order opens a validity interval that
     // the customer's next order closes (lead), the last one open-ended —
     // the dimension-history shape warehouse loads maintain.
-    q("etl_scd2_intervals",
+    sqlKey("etl_scd2_intervals",
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS valid_from,
         |  COALESCE(lead(CAST(o_orderdate AS DATE)) OVER (PARTITION BY o_custkey
         |    ORDER BY CAST(o_orderdate AS DATE), o_orderkey), DATE '9999-12-31') AS valid_to
-        |FROM orders ORDER BY o_custkey, valid_from, o_orderkey""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_orderdate").cast(DateType).as("valid_from"))
-        .withColumn("valid_to",
-          coalesce(lead(col("valid_from"), 1).over(
-            Window.partitionBy("o_custkey").orderBy("valid_from", "o_orderkey")),
-            lit(java.sql.Date.valueOf("9999-12-31"))))
-        .orderBy("o_custkey", "valid_from", "o_orderkey")
-    },
+        |FROM orders ORDER BY o_custkey, valid_from, o_orderkey"""),
 
     // Partition backfill via dynamic partition overwrite: rewrite ONE
     // partition ('F', repriced +10) in place while every other partition's
@@ -180,21 +154,12 @@ object GroupEtl {
     // CDC compaction: latest record per key (newest o_orderdate, orderkey
     // desc tie-break) — the window pass that collapses a change stream into
     // a current-state snapshot.
-    q("etl_latest_by_key",
+    sqlKey("etl_latest_by_key",
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS odate,
         |  o_orderstatus
         |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
         |    ORDER BY CAST(o_orderdate AS DATE) DESC, o_orderkey DESC) AS rn
         |  FROM orders) WHERE rn = 1
-        |ORDER BY o_custkey""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("o_custkey")
-            .orderBy(col("o_orderdate").cast(DateType).desc, col("o_orderkey").desc)))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_orderdate").cast(DateType).as("odate"), col("o_orderstatus"))
-        .orderBy("o_custkey")
-    }
+        |ORDER BY o_custkey""")
   )
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,27 +14,15 @@ object GroupFilter {
   val defs: Seq[Q] = Seq(
     // (l_orderkey, l_linenumber) is NOT unique in the fixtures — ordering by
     // every projected column makes remaining ties identical rows.
-    q("filter_pred_simple",
+    sqlKey("filter_pred_simple",
       """SELECT l_orderkey, l_linenumber, l_quantity, l_discount FROM lineitem
         |WHERE l_quantity BETWEEN 10 AND 20 AND l_discount > 0.05
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .filter(col("l_quantity").between(10, 20) && col("l_discount") > 0.05)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-    },
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount"""),
 
-    q("filter_pred_compound",
+    sqlKey("filter_pred_compound",
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt FROM lineitem
         |WHERE (l_returnflag IN ('A','R') OR NOT (l_linestatus = 'O')) AND l_tax > 0.02
-        |GROUP BY 1,2 ORDER BY 1,2""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .filter((col("l_returnflag").isin("A", "R") || !(col("l_linestatus") === "O"))
-          && col("l_tax") > 0.02)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
+        |GROUP BY 1,2 ORDER BY 1,2"""),
 
     // Common-subset regex only (Java and RE2 agree): no backrefs/lookaround.
     q("filter_like_regex",
@@ -48,24 +36,12 @@ object GroupFilter {
     },
 
     // Three-valued logic over outer-join nulls + null-safe equality (<=>).
-    q("filter_null_semantics",
+    sqlKey("filter_null_semantics",
       """SELECT CASE WHEN l.l_orderkey IS NULL THEN 'no_items' ELSE 'has_items' END AS cls,
         |  count(*) AS cnt, count(l.l_quantity) AS nonnull_qty,
         |  CAST(SUM(CASE WHEN l.l_returnflag IS NOT DISTINCT FROM 'A' THEN 1 ELSE 0 END) AS BIGINT) AS nullsafe_a
         |FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .join(T.t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "left")
-        .select(
-          when(col("l_orderkey").isNull, "no_items").otherwise("has_items").as("cls"),
-          col("l_quantity"), col("l_returnflag"))
-        .groupBy("cls")
-        .agg(
-          count(lit(1)).as("cnt"),
-          count(col("l_quantity")).as("nonnull_qty"),
-          sum(when(col("l_returnflag") <=> "A", 1).otherwise(0)).cast(LongType).as("nullsafe_a"))
-        .orderBy("cls")
-    },
+        |GROUP BY 1 ORDER BY 1"""),
 
     q("project_expressions",
       """WITH r AS (SELECT l_orderkey, l_linenumber,

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,17 +16,11 @@ import org.apache.spark.sql.types._
 object GroupJoin {
 
   val defs: Seq[Q] = Seq(
-    q("join_inner_equi",
+    sqlKey("join_inner_equi",
       """SELECT c_mktsegment, count(*) AS cnt,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .join(T.t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("cnt"), T.dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy("c_mktsegment")
-    },
+        |GROUP BY 1 ORDER BY 1"""),
 
     // Explicit broadcast of the dim chain: lineitem (the 100 TB fact) never
     // shuffles — plan-shape spec asserts BroadcastHashJoin.
@@ -50,7 +44,7 @@ object GroupJoin {
     },
 
     // TPC-H Q5-shaped star join; AQE/CBO picks the join order.
-    q("join_multiway_star",
+    sqlKey("join_multiway_star",
       """SELECT n_name,
         |  CAST(CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
         |FROM region
@@ -60,23 +54,11 @@ object GroupJoin {
         |JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
         |  AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""") { (s, dir) =>
-      T.t(s, dir, "region")
-        .join(T.t(s, dir, "nation"), col("n_regionkey") === col("r_regionkey"))
-        .join(T.t(s, dir, "customer"), col("c_nationkey") === col("n_nationkey"))
-        .join(T.t(s, dir, "orders"), col("o_custkey") === col("c_custkey"))
-        .join(T.t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_orderdate").cast(DateType) >= lit(java.sql.Date.valueOf("1996-01-01"))
-          && col("o_orderdate").cast(DateType) < lit(java.sql.Date.valueOf("1997-01-01")))
-        .groupBy("n_name")
-        .agg(sum(col("l_extendedprice").cast(T.dec) * (lit(1).cast(T.dec) - col("l_discount").cast(T.dec)))
-          .cast(T.dec).cast(DoubleType).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    },
+        |GROUP BY n_name ORDER BY revenue DESC, n_name"""),
 
     // 257 orders at sf0.01 have no lineitems (FIXTURES.md quirk) — the
     // left-outer null branch is genuinely exercised.
-    q("join_left_outer",
+    sqlKey("join_left_outer",
       """WITH per_order AS (
         |  SELECT o.o_orderkey, o.o_orderstatus, count(l.l_orderkey) AS n_items
         |  FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -84,61 +66,28 @@ object GroupJoin {
         |SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(SUM(CASE WHEN n_items = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty,
         |  CAST(SUM(n_items) AS BIGINT) AS total_items
-        |FROM per_order GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .join(T.t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "left")
-        .groupBy("o_orderkey", "o_orderstatus")
-        .agg(count(col("l_orderkey")).as("n_items"))
-        .groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(when(col("n_items") === 0, 1).otherwise(0)).cast(LongType).as("n_empty"),
-          sum(col("n_items")).cast(LongType).as("total_items"))
-        .orderBy("o_orderstatus")
-    },
+        |FROM per_order GROUP BY 1 ORDER BY 1"""),
 
-    q("join_full_outer",
+    sqlKey("join_full_outer",
       """SELECT CASE WHEN c_custkey IS NULL THEN 'right_only'
         |            WHEN o_orderkey IS NULL THEN 'left_only'
         |            ELSE 'both' END AS cls, count(*) AS cnt
         |FROM customer FULL JOIN orders ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "customer")
-        .join(T.t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "full")
-        .select(
-          when(col("c_custkey").isNull, "right_only")
-            .when(col("o_orderkey").isNull, "left_only")
-            .otherwise("both").as("cls"))
-        .groupBy("cls")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("cls")
-    },
+        |GROUP BY 1 ORDER BY 1"""),
 
-    q("join_left_semi",
+    sqlKey("join_left_semi",
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""") { (s, dir) =>
-      T.t(s, dir, "customer")
-        .join(
-          T.t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    },
+        |ORDER BY c_custkey"""),
 
     // Orphan detection: orders with no lineitems (NOT EXISTS). Note that at
     // sf0.01 every customer has orders, so the anti-join is run on the
     // deliberately-orphaned orders→lineitem edge.
-    q("join_left_anti",
+    sqlKey("join_left_anti",
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders o
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-        |ORDER BY o_orderkey""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .join(T.t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderkey")
-    },
+        |ORDER BY o_orderkey"""),
 
     // Mixed equi+range theta join: hash on brand, residual range filter.
     // The theta join runs on the AGGREGATED (brand, size) domain spine,
@@ -231,14 +180,9 @@ object GroupJoin {
         .orderBy("event_id")
     },
 
-    q("join_cross_limited",
+    sqlKey("join_cross_limited",
       """SELECT r_regionkey, r_name, n_nationkey, n_name
         |FROM region CROSS JOIN nation
-        |ORDER BY r_regionkey, n_nationkey""") { (s, dir) =>
-      T.t(s, dir, "region")
-        .crossJoin(T.t(s, dir, "nation"))
-        .select("r_regionkey", "r_name", "n_nationkey", "n_name")
-        .orderBy("r_regionkey", "n_nationkey")
-    }
+        |ORDER BY r_regionkey, n_nationkey""")
   )
 }

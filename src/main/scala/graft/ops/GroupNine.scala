@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.T.{Q, q, sqlKey}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -267,7 +267,7 @@ object GroupNine {
     // with its earliest day. Every quantity is an exact integer on a
     // ≤31-day-per-type spine, and every window is PARTITIONED by
     // event_type — nothing global, nothing float.
-    q("window_drawdown_series",
+    sqlKey("window_drawdown_series",
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
         |    count(*) AS c FROM events GROUP BY 1, 2),
         |r AS (SELECT event_type, d, c,
@@ -279,23 +279,7 @@ object GroupNine {
         |SELECT event_type, d AS dd_day,
         |  CAST(drawdown AS BIGINT) AS max_drawdown,
         |  CAST(peak AS BIGINT) AS peak_at, CAST(c AS BIGINT) AS count_at
-        |FROM dd WHERE rn = 1 ORDER BY event_type""") { (s, dir) =>
-      val daily = T.t(s, dir, "events")
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("c"))
-      val wPeak = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val r = daily.withColumn("peak", max("c").over(wPeak))
-        .withColumn("drawdown", col("peak") - col("c"))
-      r.withColumn("rn", row_number().over(
-          Window.partitionBy("event_type")
-            .orderBy(col("drawdown").desc, col("d"))))
-        .where(col("rn") === 1)
-        .select(col("event_type"), col("d").as("dd_day"),
-          col("drawdown").as("max_drawdown"), col("peak").as("peak_at"),
-          col("c").as("count_at"))
-        .orderBy("event_type")
-    },
+        |FROM dd WHERE rn = 1 ORDER BY event_type"""),
 
     // Header/detail reconciliation — the classic ETL audit: does each
     // order's header total equal the sum of its lines' extended value
@@ -306,7 +290,7 @@ object GroupNine {
     // the worst absolute discrepancy. (These fixtures are TPC-H-ISH:
     // the invariant does NOT hold — the audit's job is to report that,
     // deterministically.) One co-keyed join + two aggs.
-    q("dq_header_detail_reconcile",
+    sqlKey("dq_header_detail_reconcile",
       """WITH l AS (SELECT l_orderkey, sum(
         |    CAST(round(l_extendedprice * 100) AS BIGINT)
         |    * (100 + CAST(round(l_tax * 100) AS BIGINT))
@@ -322,32 +306,7 @@ object GroupNine {
         |  CAST(sum(detail_e6) AS DOUBLE) / 1000000.0 AS detail_total,
         |  CAST(max(abs(header_e6 - detail_e6)) AS DOUBLE) / 1000000.0
         |    AS max_abs_diff
-        |FROM j GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val l = T.t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          (round(col("l_extendedprice") * 100).cast(LongType)
-            * (lit(100L) + round(col("l_tax") * 100).cast(LongType))
-            * (lit(100L) - round(col("l_discount") * 100).cast(LongType)))
-            .as("line_e6"))
-        .groupBy("l_orderkey")
-        .agg(sum(col("line_e6").cast(DecimalType(38, 0))).as("detail_e6"))
-      T.t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (round(col("o_totalprice") * 100).cast(LongType) * 10000L)
-            .cast(DecimalType(38, 0)).as("header_e6"))
-        .join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(when(abs(col("header_e6") - col("detail_e6")) <= 10000, 1L)
-            .otherwise(0L)).as("n_within_1c"),
-          (sum(col("header_e6")).cast(DoubleType) / 1000000.0d)
-            .as("header_total"),
-          (sum(col("detail_e6")).cast(DoubleType) / 1000000.0d)
-            .as("detail_total"),
-          (max(abs(col("header_e6") - col("detail_e6"))).cast(DoubleType)
-            / 1000000.0d).as("max_abs_diff"))
-        .orderBy("o_orderstatus")
-    },
+        |FROM j GROUP BY 1 ORDER BY 1"""),
 
     // Month-over-month revenue growth per nation — the period-over-period
     // BI primitive: monthly header revenue (exact cents) per nation,
@@ -569,7 +528,7 @@ object GroupNine {
     // table on (date, exact cents). Same-day equal-price ties all
     // survive, so the result is set-deterministic with no rank window
     // over data-sized input.
-    q("window_skyline_2d",
+    sqlKey("window_skyline_2d",
       """WITH daily AS (SELECT o_orderdate AS d,
         |    max(CAST(round(o_totalprice * 100) AS BIGINT)) AS mx
         |  FROM orders GROUP BY 1),
@@ -582,23 +541,7 @@ object GroupNine {
         |    / 100.0 AS price
         |FROM orders JOIN sky ON o_orderdate = sky.d
         |  AND CAST(round(o_totalprice * 100) AS BIGINT) = sky.mx
-        |ORDER BY o_orderdate, o_orderkey""") { (s, dir) =>
-      val o = T.t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderdate"),
-          round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-      val daily = o.groupBy(col("o_orderdate").as("d"))
-        .agg(max("cents").as("mx"))
-      val sky = daily
-        .withColumn("pm", max("mx").over(Window.orderBy("d")
-          .rowsBetween(Window.unboundedPreceding, -1)))
-        .where(col("pm").isNull || col("mx") > col("pm"))
-        .select("d", "mx")
-      o.join(sky, col("o_orderdate") === col("d")
-          && col("cents") === col("mx"))
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("cents").cast(DoubleType) / 100.0d).as("price"))
-        .orderBy("o_orderdate", "o_orderkey")
-    },
+        |ORDER BY o_orderdate, o_orderkey"""),
 
     // One BPE training round by aggregation — the tokenizer-training
     // primitive: count every adjacent character pair across all token
@@ -1084,7 +1027,7 @@ object GroupNine {
     // key, counted, so the oracle pins the 3VL behavior itself. Spark
     // plans the NULL variant as a null-aware broadcast anti join —
     // exactly the special-cased operator this key exists to exercise.
-    q("join_anti_null_aware",
+    sqlKey("join_anti_null_aware",
       """SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows
         |FROM customer WHERE c_nationkey NOT IN
         |  (SELECT s_nationkey FROM supplier)
@@ -1092,20 +1035,7 @@ object GroupNine {
         |SELECT 'with_null', CAST(count(*) AS BIGINT)
         |FROM customer WHERE c_nationkey NOT IN
         |  (SELECT s_nationkey FROM supplier UNION ALL SELECT NULL)
-        |ORDER BY variant""") { (s, dir) =>
-      T.t(s, dir, "customer").createOrReplaceTempView("customer_naaj")
-      T.t(s, dir, "supplier").createOrReplaceTempView("supplier_naaj")
-      s.sql(
-        """SELECT 'no_null' AS variant, count(*) AS n_rows
-          |FROM customer_naaj WHERE c_nationkey NOT IN
-          |  (SELECT s_nationkey FROM supplier_naaj)
-          |UNION ALL
-          |SELECT 'with_null', count(*)
-          |FROM customer_naaj WHERE c_nationkey NOT IN
-          |  (SELECT s_nationkey FROM supplier_naaj
-          |   UNION ALL SELECT CAST(NULL AS BIGINT))
-          |ORDER BY variant""".stripMargin)
-    },
+        |ORDER BY variant"""),
 
     // Degree assortativity of the co-purchase graph — Newman's r: the
     // Pearson correlation of endpoint degrees over directed edges (both

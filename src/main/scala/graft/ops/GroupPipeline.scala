@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q, qNoOracle}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -478,14 +478,9 @@ object GroupPipeline {
 
     // Content fingerprinting: md5 digest groups (standard MD5 hex in both
     // engines). At sf0.1 the 8 planted duplicate texts share fingerprints.
-    q("text_fingerprint",
+    sqlKey("text_fingerprint",
       """SELECT md5(text) AS fp, count(*) AS n_docs, min(doc_id) AS min_doc
-        |FROM documents GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "documents")
-        .groupBy(md5(col("text").cast(BinaryType)).as("fp"))
-        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
-        .orderBy("fp")
-    },
+        |FROM documents GROUP BY 1 ORDER BY 1"""),
 
     // Multimodal plumbing: text bytes stand in for an opaque binary payload
     // (image/audio libs absent in this container — SURVEY/driver mandate says

@@ -1,10 +1,9 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.T.{Q, q, sqlKey}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** SURVEY.md §2-P (round 4) — data-quality / constraint audit surface.
   *
@@ -29,7 +28,7 @@ object GroupQuality {
     // PK/unique-key uniqueness audit per table. lineitem's nominal composite
     // key (l_orderkey, l_linenumber) is deliberately NOT unique in the
     // fixtures (FIXTURES.md) — the audit surfaces exactly that.
-    q("dq_pk_uniqueness",
+    sqlKey("dq_pk_uniqueness",
       """SELECT * FROM (
         |  SELECT 'customer' AS tbl, count(*) AS n_rows,
         |    count(DISTINCT c_custkey) AS n_keys,
@@ -47,23 +46,7 @@ object GroupQuality {
         |  UNION ALL
         |  SELECT 'supplier', count(*), count(DISTINCT s_suppkey),
         |    count(*) - count(DISTINCT s_suppkey) FROM supplier
-        |) ORDER BY tbl""") { (s, dir) =>
-      def audit(table: String, key: Seq[String]): DataFrame = {
-        val d = T.t(s, dir, table)
-        val keyExpr = if (key.size == 1) col(key.head)
-          else struct(key.map(col): _*)
-        d.agg(count(lit(1)).as("n_rows"),
-            countDistinct(keyExpr).as("n_keys"))
-          .select(lit(table).as("tbl"), col("n_rows"), col("n_keys"),
-            (col("n_rows") - col("n_keys")).as("dup_rows"))
-      }
-      audit("customer", Seq("c_custkey"))
-        .unionByName(audit("lineitem", Seq("l_orderkey", "l_linenumber")))
-        .unionByName(audit("orders", Seq("o_orderkey")))
-        .unionByName(audit("part", Seq("p_partkey")))
-        .unionByName(audit("supplier", Seq("s_suppkey")))
-        .orderBy("tbl")
-    },
+        |) ORDER BY tbl"""),
 
     // FK orphan audit over every referential edge of the star schema: child
     // rows whose parent key does not exist (LEFT ANTI join per edge).
@@ -131,7 +114,11 @@ object GroupQuality {
     // pass per rule — at 100 TB the N-rules-one-scan shape is the difference
     // between 1× and N× IO. documents' n_chars-matches-text rule is a real
     // cross-column invariant of the fixture generator.
-    q("dq_check_constraints",
+    // one scan, two single-table lineitem rules as conditional aggregates
+    // cross-table rule (ADVICE r4): a lineitem must not ship before its
+    // order was placed — needs the orders join (shuffle-on-orderkey at
+    // scale; key+date projections only, so AQE may still broadcast).
+    sqlKey("dq_check_constraints",
       """SELECT * FROM (
         |  SELECT 'documents.n_chars_eq_len' AS rule,
         |    count(*) FILTER (WHERE n_chars != length(text)) AS violations,
@@ -154,38 +141,6 @@ object GroupQuality {
         |  UNION ALL
         |  SELECT 'orders.totalprice_positive',
         |    count(*) FILTER (WHERE o_totalprice <= 0), count(*) FROM orders
-        |) ORDER BY rule""") { (s, dir) =>
-      val li = T.t(s, dir, "lineitem")
-      // one scan, two single-table lineitem rules as conditional aggregates
-      val liAudit = li.agg(
-        count_if(col("l_discount") < 0 || col("l_discount") > 1).as("v_disc"),
-        count_if(col("l_quantity") <= 0).as("v_qty"),
-        count(lit(1)).as("checked"))
-      // cross-table rule (ADVICE r4): a lineitem must not ship before its
-      // order was placed — needs the orders join (shuffle-on-orderkey at
-      // scale; key+date projections only, so AQE may still broadcast).
-      val shipAudit = li.select("l_orderkey", "l_shipdate")
-        .join(T.t(s, dir, "orders").select("o_orderkey", "o_orderdate"),
-          col("o_orderkey") === col("l_orderkey"))
-        .agg(count_if(col("l_shipdate") < col("o_orderdate")).as("violations"),
-          count(lit(1)).as("checked"))
-        .select(lit("lineitem.ship_after_order").as("rule"),
-          col("violations"), col("checked"))
-      def one(rule: String, d: DataFrame, viol: org.apache.spark.sql.Column) =
-        d.agg(count_if(viol).as("violations"), count(lit(1)).as("checked"))
-          .select(lit(rule).as("rule"), col("violations"), col("checked"))
-      one("documents.n_chars_eq_len", T.t(s, dir, "documents"),
-          col("n_chars") =!= length(col("text")))
-        .unionByName(one("events.type_in_domain", T.t(s, dir, "events"),
-          !col("event_type").isin("click", "error", "purchase", "signup", "view")))
-        .unionByName(liAudit.select(lit("lineitem.discount_in_0_1").as("rule"),
-          col("v_disc").as("violations"), col("checked")))
-        .unionByName(liAudit.select(lit("lineitem.quantity_positive").as("rule"),
-          col("v_qty").as("violations"), col("checked")))
-        .unionByName(shipAudit)
-        .unionByName(one("orders.totalprice_positive", T.t(s, dir, "orders"),
-          col("o_totalprice") <= 0))
-        .orderBy("rule")
-    }
+        |) ORDER BY rule""")
   )
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,29 +22,19 @@ object GroupRelational {
     // True correlated scalar subquery through the SQL surface: orders priced
     // above their customer's average. Catalyst decorrelates this into
     // agg+join; the DataFrame equivalent of that rewrite is what runs.
-    q("subquery_correlated_scalar",
+    sqlKey("subquery_correlated_scalar",
       """SELECT o_orderkey, o_custkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
         |FROM orders o
         |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) >
         |  (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
         |   FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""") { (s, dir) =>
-      T.t(s, dir, "orders").createOrReplaceTempView("sq_orders")
-      s.sql(
-        """SELECT o_orderkey, o_custkey,
-          |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-          |FROM sq_orders o
-          |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) >
-          |  (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-          |   FROM sq_orders o2 WHERE o2.o_custkey = o.o_custkey)
-          |ORDER BY o_orderkey""".stripMargin)
-    },
+        |ORDER BY o_orderkey"""),
 
     // Discrete median by explicit rank selection (lower median, rn =
     // floor((n+1)/2)) — pure row selection, no interpolation arithmetic to
     // diverge across engines (percentile_cont association order differs).
-    q("agg_median_disc",
+    sqlKey("agg_median_disc",
       """WITH r AS (SELECT o_orderpriority,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS p,
         |    row_number() OVER (PARTITION BY o_orderpriority
@@ -53,24 +43,14 @@ object GroupRelational {
         |  FROM orders)
         |SELECT o_orderpriority, p AS median_lo, CAST(n AS BIGINT) AS n_orders
         |FROM r WHERE rn = CAST(floor((n+1)/2.0) AS BIGINT)
-        |ORDER BY o_orderpriority""") { (s, dir) =>
-      val part = Window.partitionBy("o_orderpriority")
-      T.t(s, dir, "orders")
-        .withColumn("pd", col("o_totalprice").cast(T.dec))
-        .withColumn("rn", row_number().over(part.orderBy("pd", "o_orderkey")))
-        .withColumn("n", count(lit(1)).over(part))
-        .filter(col("rn") === floor((col("n") + 1) / 2.0).cast(LongType))
-        .select(col("o_orderpriority"), col("pd").cast(DoubleType).as("median_lo"),
-          col("n").cast(LongType).as("n_orders"))
-        .orderBy("o_orderpriority")
-    },
+        |ORDER BY o_orderpriority"""),
 
     // Exact sample variance / stddev from decimal power sums:
     // var = (n·Σx² − (Σx)²) / (n·(n−1)). Both sums are exact decimals
     // (x is 2dp ⇒ x² is exact 4dp), so the double formula is the same IEEE
     // op sequence on bit-identical operands in both engines — unlike
     // var_samp/stddev_samp built-ins, whose streaming update order differs.
-    q("agg_variance_exact",
+    sqlKey("agg_variance_exact",
       """WITH s AS (SELECT l_returnflag,
         |    CAST(count(*) AS DOUBLE) AS nn,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -79,23 +59,7 @@ object GroupRelational {
         |SELECT l_returnflag, CAST(nn AS BIGINT) AS n,
         |  (nn * sx2 - sx * sx) / (nn * (nn - 1)) AS var_samp,
         |  sqrt((nn * sx2 - sx * sx) / (nn * (nn - 1))) AS stddev_samp
-        |FROM s ORDER BY l_returnflag""") { (s, dir) =>
-      val x = col("l_quantity").cast(T.dec)
-      T.t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          count(lit(1)).cast(DoubleType).as("nn"),
-          sum(x).cast(DoubleType).as("sx"),
-          sum(x * x).cast(DoubleType).as("sx2"))
-        .select(
-          col("l_returnflag"),
-          col("nn").cast(LongType).as("n"),
-          ((col("nn") * col("sx2") - col("sx") * col("sx"))
-            / (col("nn") * (col("nn") - 1))).as("var_samp"),
-          sqrt((col("nn") * col("sx2") - col("sx") * col("sx"))
-            / (col("nn") * (col("nn") - 1))).as("stddev_samp"))
-        .orderBy("l_returnflag")
-    },
+        |FROM s ORDER BY l_returnflag"""),
 
     // Bitwise decode surface (dbsuite reads coded catalog flag columns):
     // AND/OR/XOR/shifts/popcount on BIGINT — exact integer parity.
@@ -164,27 +128,16 @@ object GroupRelational {
 
     // Deterministic mode: most frequent priority per status, count-desc then
     // value-asc tie-break — built-in `mode()` picks ties arbitrarily.
-    q("agg_mode_by_count",
+    sqlKey("agg_mode_by_count",
       """SELECT o_orderstatus, o_orderpriority AS mode_priority, cnt FROM (
         |  SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
         |    row_number() OVER (PARTITION BY o_orderstatus
         |      ORDER BY count(*) DESC, o_orderpriority) AS rn
         |  FROM orders GROUP BY 1,2)
-        |WHERE rn = 1 ORDER BY o_orderstatus""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("o_orderstatus")
-            .orderBy(col("cnt").desc, col("o_orderpriority"))))
-        .filter(col("rn") === 1)
-        .select(col("o_orderstatus"), col("o_orderpriority").as("mode_priority"),
-          col("cnt"))
-        .orderBy("o_orderstatus")
-    },
+        |WHERE rn = 1 ORDER BY o_orderstatus"""),
 
     // first/last/nth over an explicit unbounded frame, one row per user.
-    q("window_first_last_nth",
+    sqlKey("window_first_last_nth",
       """SELECT user_id, first_et, last_et, second_et FROM (
         |  SELECT user_id,
         |    first_value(event_type) OVER w AS first_et,
@@ -194,21 +147,7 @@ object GroupRelational {
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |WHERE rn = 1 ORDER BY user_id""") { (s, dir) =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      T.t(s, dir, "events")
-        .select(
-          col("user_id"),
-          first(col("event_type")).over(w).as("first_et"),
-          last(col("event_type")).over(w).as("last_et"),
-          nth_value(col("event_type"), 2).over(w).as("second_et"),
-          row_number().over(
-            Window.partitionBy("user_id").orderBy("ts", "event_id")).as("rn"))
-        .filter(col("rn") === 1)
-        .select("user_id", "first_et", "last_et", "second_et")
-        .orderBy("user_id")
-    },
+        |WHERE rn = 1 ORDER BY user_id"""),
 
     // String-function depth beyond scalar_string_funcs: regex global
     // replace, translate, reverse, repeat, position, left/right.

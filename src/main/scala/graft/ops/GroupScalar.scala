@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -75,7 +75,9 @@ object GroupScalar {
         .orderBy("y", "m")
     },
 
-    q("scalar_math_funcs",
+    // full-tuple inner ordering: (l_orderkey, l_linenumber) alone is not
+    // unique, and a tie straddling the LIMIT would pick different rows
+    sqlKey("scalar_math_funcs",
       """SELECT l_orderkey, l_linenumber,
         |  abs(l_extendedprice - 1000.0) AS a,
         |  CAST(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)), 1) AS DECIMAL(18,1)) AS DOUBLE) AS r1,
@@ -87,28 +89,9 @@ object GroupScalar {
         |  l_linenumber % 3 AS md
         |FROM (SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey,
         |      l_suppkey, l_extendedprice, l_quantity, l_discount, l_shipdate LIMIT 100)
-        |ORDER BY l_orderkey, l_linenumber, a, sq""") { (s, dir) =>
-      // full-tuple inner ordering: (l_orderkey, l_linenumber) alone is not
-      // unique, and a tie straddling the LIMIT would pick different rows
-      T.t(s, dir, "lineitem")
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-          "l_extendedprice", "l_quantity", "l_discount", "l_shipdate")
-        .limit(100)
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          abs(col("l_extendedprice") - 1000.0).as("a"),
-          round(col("l_extendedprice").cast(T.dec), 1).cast(DecimalType(18, 1))
-            .cast(DoubleType).as("r1"),
-          floor(col("l_extendedprice")).as("fl"),
-          ceil(col("l_extendedprice")).as("ce"),
-          sqrt(col("l_quantity")).as("sq"),
-          round(log(col("l_extendedprice")), 6).as("lg"),
-          round(pow(col("l_quantity"), 2), 6).as("pw"),
-          (col("l_linenumber") % 3).as("md"))
-        .orderBy("l_orderkey", "l_linenumber", "a", "sq")
-    },
+        |ORDER BY l_orderkey, l_linenumber, a, sq"""),
 
-    q("scalar_conditional",
+    sqlKey("scalar_conditional",
       """WITH oj AS (
         |  SELECT COALESCE(l.l_returnflag, 'NONE') AS cond_flag,
         |    NULLIF(o.o_orderstatus, 'O') AS nf,
@@ -119,23 +102,7 @@ object GroupScalar {
         |  count(*) AS cnt, count(nf) AS n_not_open,
         |  CAST(max(CASE WHEN bal >= 100000 THEN bal ELSE CAST(100000 AS DECIMAL(18,2)) END) AS DOUBLE) AS max_g,
         |  CAST(min(CASE WHEN bal <= 100000 THEN bal ELSE CAST(100000 AS DECIMAL(18,2)) END) AS DOUBLE) AS min_l
-        |FROM oj GROUP BY 1,2 ORDER BY 1,2""") { (s, dir) =>
-      val oj = T.t(s, dir, "orders")
-        .join(T.t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "left")
-        .select(
-          coalesce(col("l_returnflag"), lit("NONE")).as("cond_flag"),
-          nullif(col("o_orderstatus"), lit("O")).as("nf"),
-          col("o_totalprice").cast(T.dec).as("bal"))
-      oj.withColumn("band",
-          when(col("bal") < 50000, "low").when(col("bal") < 150000, "mid").otherwise("high"))
-        .groupBy("cond_flag", "band")
-        .agg(
-          count(lit(1)).as("cnt"),
-          count(col("nf")).as("n_not_open"),
-          max(greatest(col("bal"), lit(100000).cast(T.dec))).cast(DoubleType).as("max_g"),
-          min(least(col("bal"), lit(100000).cast(T.dec))).cast(DoubleType).as("min_l"))
-        .orderBy("cond_flag", "band")
-    },
+        |FROM oj GROUP BY 1,2 ORDER BY 1,2"""),
 
     // Higher-order functions over the 64-dim embedding arrays; the L2-norm
     // fold runs in list order in both engines, so pre-round bits agree.
@@ -228,21 +195,12 @@ object GroupScalar {
     // Error-tolerant casts: try_cast yields NULL instead of failing the job
     // — the ingest semantics for dirty 100 TB sources (ANSI mode would kill
     // the whole load on one bad row).
-    q("scalar_try_cast",
+    sqlKey("scalar_try_cast",
       """SELECT p_partkey,
         |  TRY_CAST(p_brand AS INTEGER) AS brand_int,
         |  TRY_CAST(substr(p_brand, 7, 2) AS INTEGER) AS brand_num,
         |  TRY_CAST(p_name AS DATE) IS NULL AS not_date
-        |FROM part ORDER BY p_partkey LIMIT 500""") { (s, dir) =>
-      T.t(s, dir, "part")
-        .select(
-          col("p_partkey"),
-          expr("try_cast(p_brand AS INT)").as("brand_int"),
-          expr("try_cast(substr(p_brand, 7, 2) AS INT)").as("brand_num"),
-          expr("try_cast(p_name AS DATE)").isNull.as("not_date"))
-        .orderBy("p_partkey")
-        .limit(500)
-    },
+        |FROM part ORDER BY p_partkey LIMIT 500"""),
 
     q("explode_generator",
       """SELECT tok, count(*) AS cnt

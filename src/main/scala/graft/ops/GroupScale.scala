@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -158,7 +158,7 @@ object GroupScale {
     // a keyed aggregate (per-customer revenue through 1995 vs through
     // 1996): added / removed / changed / unchanged key counts from ONE
     // full-outer join. Exact-decimal sums make the change test exact.
-    q("etl_snapshot_diff",
+    sqlKey("etl_snapshot_diff",
       """WITH a AS (SELECT o_custkey AS k,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS v
         |  FROM orders WHERE year(o_orderdate) <= 1995 GROUP BY 1),
@@ -170,22 +170,7 @@ object GroupScale {
         |    WHEN a.v <> b.v THEN 'changed' ELSE 'unchanged' END AS change_class,
         |  count(*) AS n_keys
         |FROM a FULL OUTER JOIN b ON a.k = b.k
-        |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      def snap(maxYear: Int) = T.t(s, dir, "orders")
-        .filter(year(col("o_orderdate")) <= maxYear)
-        .groupBy(col("o_custkey").as("k"))
-        .agg(T.dsum(col("o_totalprice")).as("v"))
-      val a = snap(1995).withColumnRenamed("v", "va").withColumnRenamed("k", "ka")
-      val b = snap(1996).withColumnRenamed("v", "vb").withColumnRenamed("k", "kb")
-      a.join(b, col("ka") === col("kb"), "full_outer")
-        .select(
-          when(col("va").isNull, "added")
-            .when(col("vb").isNull, "removed")
-            .when(col("va") =!= col("vb"), "changed")
-            .otherwise("unchanged").as("change_class"))
-        .groupBy("change_class").agg(count(lit(1)).as("n_keys"))
-        .orderBy("change_class")
-    },
+        |GROUP BY 1 ORDER BY 1"""),
 
     // Deterministic surrogate key: md5 over the '|'-joined natural key —
     // the idempotent key-minting every warehouse load needs (same input ⇒
@@ -210,7 +195,7 @@ object GroupScale {
     // 1/16): every multiply scales by a power of two (exact in IEEE754)
     // and the 4-term sum is written as one fixed left-to-right chain, so
     // the result is BIT-EXACT across engines with no rounding step at all.
-    q("window_ewma_kernel",
+    sqlKey("window_ewma_kernel",
       """SELECT event_id, user_id,
         |  value * 0.5
         |    + coalesce(lag(value, 1) OVER w, 0) * 0.25
@@ -218,17 +203,7 @@ object GroupScale {
         |    + coalesce(lag(value, 3) OVER w, 0) * 0.0625 AS ewma
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id LIMIT 2000""") { (s, dir) =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      T.t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          (col("value") * 0.5
-            + coalesce(lag(col("value"), 1).over(w), lit(0.0)) * 0.25
-            + coalesce(lag(col("value"), 2).over(w), lit(0.0)) * 0.125
-            + coalesce(lag(col("value"), 3).over(w), lit(0.0)) * 0.0625).as("ewma"))
-        .orderBy("event_id")
-        .limit(2000)
-    },
+        |ORDER BY event_id LIMIT 2000"""),
 
     // BM25 (k1=1.2, b=0.75) for the 2-term query {filter, join}: exact
     // integer tf/df/len feed one identically-parenthesized double formula
@@ -387,22 +362,13 @@ object GroupScale {
     // Several DISTINCT aggregates in one GROUP BY — the planner's Expand
     // path (each distinct column fans the input into its own group-set
     // lane, partial-aggregated map-side before one shuffle).
-    q("agg_multi_distinct",
+    sqlKey("agg_multi_distinct",
       """SELECT o_orderstatus,
         |  count(DISTINCT o_custkey) AS n_cust,
         |  count(DISTINCT o_orderpriority) AS n_prio,
         |  count(DISTINCT year(o_orderdate)) AS n_years,
         |  count(*) AS n_rows
-        |FROM orders GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-          countDistinct(col("o_custkey")).as("n_cust"),
-          countDistinct(col("o_orderpriority")).as("n_prio"),
-          countDistinct(year(col("o_orderdate"))).as("n_years"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("o_orderstatus")
-    },
+        |FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // Deterministic per-group "reservoir": a uniform-looking k-sample per
     // group whose membership is a pure function of the data — rank by

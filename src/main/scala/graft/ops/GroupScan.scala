@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,27 +17,16 @@ object GroupScan {
   val defs: Seq[Q] = Seq(
     // (l_orderkey, l_linenumber) is NOT unique — order by every projected
     // column so ties are identical rows (deterministic under LIMIT too).
-    q("scan_parquet",
+    sqlKey("scan_parquet",
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 100""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber", "l_quantity")
-        .limit(100)
-    },
+        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 100"""),
 
     // Only 2 of 11 lineitem columns touched: Catalyst ColumnPruning must
     // reach the parquet reader (ReadSchema shows 2 fields — plan-shape spec).
-    q("scan_projection_pushdown",
+    sqlKey("scan_projection_pushdown",
       """SELECT l_orderkey,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey LIMIT 200""") { (s, dir) =>
-      T.t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(T.dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy("l_orderkey")
-        .limit(200)
-    },
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey LIMIT 200"""),
 
     q("source_csv_roundtrip",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey") { (s, dir) =>

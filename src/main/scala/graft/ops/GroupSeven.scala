@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.T.{Q, q, sqlKey}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -868,7 +868,7 @@ object GroupSeven {
     // whose dependent column is NOT single-valued, plus the worst fan-out.
     // Each FD is one keyed count-distinct agg (map-side combinable),
     // unioned into the tall audit relation a data-quality dashboard reads.
-    q("dq_fd_violations",
+    sqlKey("dq_fd_violations",
       """WITH fd1 AS (SELECT 'orders: o_custkey->o_orderpriority' AS fd,
         |    count(*) AS n_keys,
         |    count(*) FILTER (WHERE nd > 1) AS n_violating,
@@ -888,23 +888,7 @@ object GroupSeven {
         |  FROM (SELECT c_nationkey, count(DISTINCT c_mktsegment) AS nd
         |        FROM customer GROUP BY 1))
         |SELECT * FROM fd1 UNION ALL SELECT * FROM fd2 UNION ALL
-        |SELECT * FROM fd3 ORDER BY fd""") { (s, dir) =>
-      def fd(label: String, table: String, a: String, b: String) =
-        T.t(s, dir, table).groupBy(col(a))
-          .agg(countDistinct(col(b)).as("nd"))
-          .agg(count(lit(1)).as("n_keys"),
-            count(when(col("nd") > 1, 1)).as("n_violating"),
-            max(col("nd")).as("max_fanout"))
-          .select(lit(label).as("fd"), col("n_keys"), col("n_violating"),
-            col("max_fanout"))
-      fd("orders: o_custkey->o_orderpriority", "orders",
-          "o_custkey", "o_orderpriority")
-        .unionByName(fd("lineitem: l_partkey->l_returnflag", "lineitem",
-          "l_partkey", "l_returnflag"))
-        .unionByName(fd("customer: c_nationkey->c_mktsegment", "customer",
-          "c_nationkey", "c_mktsegment"))
-        .orderBy("fd")
-    },
+        |SELECT * FROM fd3 ORDER BY fd"""),
 
     // Lag-k autocorrelation of the daily purchase series (k = 1 and 7 —
     // momentum and weekly seasonality) — Pearson over the (cₜ, cₜ₊ₖ) pairs

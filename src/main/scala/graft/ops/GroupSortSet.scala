@@ -1,9 +1,6 @@
 package graft.ops
 
-import graft.T
-import graft.T.{Q, q}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.T.{Q, sqlKey}
 
 /** SURVEY.md §2-F — sort / limit / set ops.
   * Every reference doc listing is sorted [P2]; ORDER BY+LIMIT compiles to
@@ -12,75 +9,43 @@ import org.apache.spark.sql.types._
 object GroupSortSet {
 
   val defs: Seq[Q] = Seq(
-    q("sort_multikey",
+    sqlKey("sort_multikey",
       """SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders
-        |ORDER BY o_orderpriority ASC, o_totalprice DESC, o_orderkey LIMIT 50""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .orderBy(col("o_orderpriority").asc, col("o_totalprice").desc, col("o_orderkey"))
-        .limit(50)
-    },
+        |ORDER BY o_orderpriority ASC, o_totalprice DESC, o_orderkey LIMIT 50"""),
 
     // Spark defaults NULLS FIRST for ASC, DuckDB NULLS LAST — both sides
     // state the placement explicitly (determinism rule §2.4).
-    q("sort_nulls_ordering",
+    sqlKey("sort_nulls_ordering",
       """WITH per AS (
         |  SELECT o.o_orderkey, max(CAST(l.l_shipdate AS DATE)) AS last_ship
         |  FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey
         |  GROUP BY 1)
         |SELECT o_orderkey, last_ship FROM per
-        |ORDER BY last_ship ASC NULLS FIRST, o_orderkey LIMIT 100""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .join(T.t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"), "left")
-        .groupBy("o_orderkey")
-        .agg(max(col("l_shipdate").cast(DateType)).as("last_ship"))
-        .orderBy(col("last_ship").asc_nulls_first, col("o_orderkey"))
-        .limit(100)
-    },
+        |ORDER BY last_ship ASC NULLS FIRST, o_orderkey LIMIT 100"""),
 
-    q("setop_union_all",
+    sqlKey("setop_union_all",
       """SELECT event_id, event_type, user_id FROM events WHERE event_type = 'click'
         |UNION ALL
         |SELECT event_id, event_type, user_id FROM events WHERE event_type = 'view'
-        |ORDER BY event_id""") { (s, dir) =>
-      val ev = T.t(s, dir, "events").select("event_id", "event_type", "user_id")
-      ev.filter(col("event_type") === "click")
-        .unionByName(ev.filter(col("event_type") === "view"))
-        .orderBy("event_id")
-    },
+        |ORDER BY event_id"""),
 
-    q("setop_union_distinct",
+    sqlKey("setop_union_distinct",
       """SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
         |UNION
         |SELECT n_name FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY n_name""") { (s, dir) =>
-      customerNations(s, dir).union(supplierNations(s, dir)).distinct().orderBy("n_name")
-    },
+        |ORDER BY n_name"""),
 
-    q("setop_intersect",
+    sqlKey("setop_intersect",
       """SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
         |INTERSECT
         |SELECT n_name FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY n_name""") { (s, dir) =>
-      customerNations(s, dir).intersect(supplierNations(s, dir)).orderBy("n_name")
-    },
+        |ORDER BY n_name"""),
 
-    q("setop_except",
+    sqlKey("setop_except",
       """SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
         |EXCEPT
         |SELECT n_name FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY n_name""") { (s, dir) =>
-      customerNations(s, dir).except(supplierNations(s, dir)).orderBy("n_name")
-    }
+        |ORDER BY n_name""")
   )
 
-  private def customerNations(s: org.apache.spark.sql.SparkSession, dir: String) =
-    T.t(s, dir, "customer")
-      .join(T.t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .select("n_name")
-
-  private def supplierNations(s: org.apache.spark.sql.SparkSession, dir: String) =
-    T.t(s, dir, "supplier")
-      .join(T.t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-      .select("n_name")
 }

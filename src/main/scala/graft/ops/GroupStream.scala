@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q, qNoOracle}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -136,47 +136,28 @@ object GroupStream {
 
     // Batch form of the transformWithState / mapGroupsWithState per-user
     // running total.
-    q("stream_stateful_running",
+    sqlKey("stream_stateful_running",
       """SELECT user_id, event_id,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_total
-        |FROM events ORDER BY user_id, event_id""") { (s, dir) =>
-      val run = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T.t(s, dir, "events")
-        .withColumn("run_total", sum(col("value").cast(T.dec)).over(run).cast(DoubleType))
-        .select("user_id", "event_id", "run_total")
-        .orderBy("user_id", "event_id")
-    },
+        |FROM events ORDER BY user_id, event_id"""),
 
     // Batch form of the stream-stream interval join: purchases ⋈ clicks
     // within ±30 min per user.
-    q("stream_stream_join",
+    sqlKey("stream_stream_join",
       """SELECT p.event_id AS p_id, c.event_id AS c_id
         |FROM events p JOIN events c
         |  ON p.user_id = c.user_id
         | AND p.event_type = 'purchase' AND c.event_type = 'click'
         | AND c.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts + INTERVAL 30 MINUTE
-        |ORDER BY 1, 2""") { (s, dir) =>
-      val ev = T.t(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      p.join(c,
-          col("p_user") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
-        .select("p_id", "c_id")
-        .orderBy("p_id", "c_id")
-    },
+        |ORDER BY 1, 2"""),
 
     // Left-outer stream-stream join: purchases keep a row even with no
     // click within ±30 min (the watermark is what lets streaming emit the
     // null side once the window is provably closed — Streams.joinLeftOuter;
     // batch-equivalent declared). DuckDB default ASC puts NULLS LAST while
     // Spark puts them FIRST, so the oracle pins NULLS FIRST explicitly.
-    q("stream_join_left_outer",
+    sqlKey("stream_join_left_outer",
       """WITH p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
         |    WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, event_id AS c_id, ts AS c_ts FROM events
@@ -184,52 +165,26 @@ object GroupStream {
         |SELECT p_id, c_id FROM p LEFT JOIN c
         |  ON p.user_id = c.user_id
         | AND c_ts BETWEEN p_ts - INTERVAL 30 MINUTE AND p_ts + INTERVAL 30 MINUTE
-        |ORDER BY p_id, c_id NULLS FIRST""") { (s, dir) =>
-      val ev = T.t(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      p.join(c,
-          col("p_user") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"),
-          "left")
-        .select("p_id", "c_id")
-        .orderBy("p_id", "c_id")
-    },
+        |ORDER BY p_id, c_id NULLS FIRST"""),
 
     // Batch form of the MapState distinct-state processor
     // (Streams.distinctTypes): per-user distinct event-type count — the
     // final state the stream converges to (StreamingSpec proves equality
     // over the chunked replay).
-    q("stream_distinct_state",
+    sqlKey("stream_distinct_state",
       """SELECT user_id, count(DISTINCT event_type) AS n_types
-        |FROM events GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .groupBy("user_id")
-        .agg(countDistinct(col("event_type")).as("n_types"))
-        .orderBy("user_id")
-    },
+        |FROM events GROUP BY 1 ORDER BY 1"""),
 
     // Batch form of the ListState bounded top-k processor
     // (Streams.topValuesPerUser): per-user top-3 event values, ties to
     // the smaller event_id — the final state of the O(k)-per-key list.
     // StreamingSpec proves replay equality.
-    q("stream_topk_state",
+    sqlKey("stream_topk_state",
       """SELECT user_id, rnk, value FROM (
         |  SELECT user_id, value, CAST(row_number() OVER (
         |    PARTITION BY user_id ORDER BY value DESC, event_id) AS INT) AS rnk
         |  FROM events)
-        |WHERE rnk <= 3 ORDER BY user_id, rnk""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id")))
-          .cast(IntegerType))
-        .filter(col("rnk") <= 3)
-        .select("user_id", "rnk", "value")
-        .orderBy("user_id", "rnk")
-    },
+        |WHERE rnk <= 3 ORDER BY user_id, rnk"""),
 
     // Batch form of the EVENT-TIME-TIMER sessionizer
     // (Streams.sessionsWithTimers — registerTimer/handleExpiredTimer,
@@ -300,18 +255,11 @@ object GroupStream {
     // equals this GROUP BY. StreamingSpec proves both directions: retention
     // (back-to-back batches within a period accumulate) and eviction (a
     // no-TTL control run shows cumulative counts instead).
-    q("stream_state_ttl",
+    sqlKey("stream_state_ttl",
       """SELECT user_id,
         |  CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 2 END AS period,
         |  count(*) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .groupBy(col("user_id"),
-          when(col("ts") < lit("2024-01-16 00:00:00").cast(TimestampNTZType), 1)
-            .otherwise(2).as("period"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("user_id", "period")
-    },
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // Batch form of the foreachBatch IDEMPOTENT upsert sink
     // (Streams.upsertBatch/runUpsertSink — per-batch commit markers +
@@ -320,19 +268,12 @@ object GroupStream {
     // event_id) event per user, and StreamingSpec proves a DOUBLE replay
     // (at-least-once redelivery) and a fresh-checkpoint rerun converge to
     // this same set.
-    q("stream_upsert_sink",
+    sqlKey("stream_upsert_sink",
       """SELECT user_id, ts, event_id, value FROM (
         |  SELECT user_id, ts, event_id, value, row_number() OVER (
         |    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events)
-        |WHERE rn = 1 ORDER BY user_id""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("rn") === 1)
-        .select("user_id", "ts", "event_id", "value")
-        .orderBy("user_id")
-    },
+        |WHERE rn = 1 ORDER BY user_id"""),
 
     // Batch form of the STREAM-STATIC enrichment join
     // (Streams.staticEnrich): each micro-batch inner-joins the events
@@ -365,20 +306,12 @@ object GroupStream {
     // (what the seeded stream converges to after replaying only the
     // post-split events); StreamingSpec proves that convergence, i.e. that
     // the seeds were genuinely applied before the first input batch.
-    q("stream_initial_state",
+    sqlKey("stream_initial_state",
       """SELECT user_id,
         |  CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
         |    THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS seed_value,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .groupBy("user_id")
-        .agg(
-          T.dsum(when(col("ts") < lit("2024-01-16 00:00:00").cast(TimestampNTZType),
-            col("value"))).as("seed_value"),
-          T.dsum(col("value")).as("total_value"))
-        .orderBy("user_id")
-    },
+        |FROM events GROUP BY 1 ORDER BY 1"""),
 
     // Batch form of the CHAINED stateful pipeline
     // (Streams.dedupThenHourly): dropDuplicatesWithinWatermark(event_id)

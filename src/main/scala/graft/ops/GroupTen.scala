@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -651,7 +651,7 @@ object GroupTen {
     // positions are evaluated against ORIGINAL file positions (never
     // re-ranked after deletes — the classic off-by-one bug). Survivor
     // checksum pins content, not just counts.
-    q("etl_equality_deletes",
+    sqlKey("etl_equality_deletes",
       """WITH base AS (SELECT c_custkey, c_mktsegment,
         |    row_number() OVER (PARTITION BY c_nationkey ORDER BY c_custkey) AS pos
         |  FROM customer),
@@ -662,23 +662,7 @@ object GroupTen {
         |  CAST(sum(CASE WHEN NOT del_eq AND del_pos THEN 1 ELSE 0 END) AS BIGINT) AS n_del_pos,
         |  CAST(sum(CASE WHEN NOT del_eq AND NOT del_pos THEN 1 ELSE 0 END) AS BIGINT) AS n_after,
         |  CAST(sum(CASE WHEN NOT del_eq AND NOT del_pos THEN c_custkey ELSE 0 END) AS BIGINT) AS survivor_keysum
-        |FROM f GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      T.t(s, dir, "customer")
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("c_nationkey").orderBy("c_custkey")))
-        .withColumn("del_eq", col("c_custkey") % 37 === 0)
-        .withColumn("del_pos", col("pos") % 53 === 0)
-        .groupBy("c_mktsegment").agg(
-          count(lit(1)).cast(LongType).as("n_before"),
-          sum(when(col("del_eq"), 1).otherwise(0)).cast(LongType).as("n_del_eq"),
-          sum(when(!col("del_eq") && col("del_pos"), 1).otherwise(0))
-            .cast(LongType).as("n_del_pos"),
-          sum(when(!col("del_eq") && !col("del_pos"), 1).otherwise(0))
-            .cast(LongType).as("n_after"),
-          sum(when(!col("del_eq") && !col("del_pos"), col("c_custkey"))
-            .otherwise(0L)).cast(LongType).as("survivor_keysum"))
-        .orderBy("c_mktsegment")
-    },
+        |FROM f GROUP BY 1 ORDER BY 1"""),
 
     // Deterministic stratified bootstrap — a 200-replicate resampled 95%
     // CI for the mean account balance per market segment. Resample indices
@@ -775,7 +759,9 @@ object GroupTen {
     // multi-feature case with an L2 penalty (λ=1000 on the centered
     // moments). One scan + one 9-moment aggregation: the training pass is
     // a single map-side-combinable reduction at any scale.
-    q("ml_ridge_2feature",
+    // the operands are bit-identical doubles in both engines, so each step
+    // of the text is the same IEEE op
+    sqlKey("ml_ridge_2feature",
       """WITH j AS (SELECT
         |    CAST(l_quantity AS DECIMAL(18,2)) AS x1,
         |    CAST(p_retailprice AS DECIMAL(18,2)) AS x2,
@@ -804,41 +790,7 @@ object GroupTen {
         |SELECT CAST(n AS BIGINT) AS n,
         |  round((sy - (b1*sx1) - (b2*sx2)) / n, 6) + 0.0 AS b0,
         |  round(b1, 6) + 0.0 AS b1, round(b2, 6) + 0.0 AS b2
-        |FROM b""") { (s, dir) =>
-      val j = T.t(s, dir, "lineitem")
-        .join(T.t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .select(col("l_quantity").cast(T.dec).as("x1"),
-          col("p_retailprice").cast(T.dec).as("x2"),
-          col("l_extendedprice").cast(T.dec).as("y"))
-      val mo = j.agg(
-        count(lit(1)).cast(DoubleType).as("n"),
-        sum(col("x1")).cast(DoubleType).as("sx1"),
-        sum(col("x2")).cast(DoubleType).as("sx2"),
-        sum(col("y")).cast(DoubleType).as("sy"),
-        sum(col("x1") * col("x1")).cast(DoubleType).as("sx1x1"),
-        sum(col("x1") * col("x2")).cast(DoubleType).as("sx1x2"),
-        sum(col("x2") * col("x2")).cast(DoubleType).as("sx2x2"),
-        sum(col("x1") * col("y")).cast(DoubleType).as("sx1y"),
-        sum(col("x2") * col("y")).cast(DoubleType).as("sx2y"))
-      // the op sequence below mirrors the oracle CTEs token-for-token: the
-      // operands are bit-identical doubles, so each step is the same IEEE op
-      val c = mo.select(col("n"), col("sx1"), col("sx2"), col("sy"),
-        ((col("sx1x1") - (col("sx1") * col("sx1")) / col("n")) + 1000.0).as("c11"),
-        ((col("sx2x2") - (col("sx2") * col("sx2")) / col("n")) + 1000.0).as("c22"),
-        (col("sx1x2") - (col("sx1") * col("sx2")) / col("n")).as("c12"),
-        (col("sx1y") - (col("sx1") * col("sy")) / col("n")).as("cy1"),
-        (col("sx2y") - (col("sx2") * col("sy")) / col("n")).as("cy2"))
-      val b = c.select(col("n"), col("sx1"), col("sx2"), col("sy"),
-        (((col("cy1") * col("c22")) - (col("c12") * col("cy2"))) /
-          ((col("c11") * col("c22")) - (col("c12") * col("c12")))).as("b1"),
-        (((col("cy2") * col("c11")) - (col("c12") * col("cy1"))) /
-          ((col("c11") * col("c22")) - (col("c12") * col("c12")))).as("b2"))
-      b.select(col("n").cast(LongType).as("n"),
-        (round((col("sy") - (col("b1") * col("sx1")) - (col("b2") * col("sx2")))
-          / col("n"), 6) + 0.0).as("b0"),
-        (round(col("b1"), 6) + 0.0).as("b1"),
-        (round(col("b2"), 6) + 0.0).as("b2"))
-    },
+        |FROM b"""),
 
     // Winsorized and trimmed means per order priority — the robust-mean
     // kit next to stat_mad_robust: p5/p95 bounds by exact rank selection
@@ -2580,7 +2532,7 @@ object GroupTen {
     // skip without opening them. Metadata-shaped at any scale: the stats
     // agg is one map-side-combinable pass; the prune decision itself reads
     // zero data rows. Pure integer comparisons.
-    q("etl_manifest_prune_audit",
+    sqlKey("etl_manifest_prune_audit",
       """WITH f AS (SELECT CAST(date_part('year', o_orderdate) * 100
         |      + date_part('month', o_orderdate) AS INT) AS yyyymm,
         |    CAST(count(*) AS BIGINT) AS n_rows,
@@ -2591,20 +2543,7 @@ object GroupTen {
         |  FROM orders GROUP BY 1)
         |SELECT yyyymm, n_rows, min_cents, max_cents,
         |  (max_cents < 5000000 OR min_cents > 20000000) AS pruned
-        |FROM f ORDER BY yyyymm""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .cast(IntegerType).as("yyyymm"))
-        .agg(count(lit(1)).cast(LongType).as("n_rows"),
-          min((col("o_totalprice").cast(T.dec) * 100).cast(LongType))
-            .as("min_cents"),
-          max((col("o_totalprice").cast(T.dec) * 100).cast(LongType))
-            .as("max_cents"))
-        .select(col("yyyymm"), col("n_rows"), col("min_cents"), col("max_cents"),
-          (col("max_cents") < 5000000L || col("min_cents") > 20000000L)
-            .as("pruned"))
-        .orderBy("yyyymm")
-    },
+        |FROM f ORDER BY yyyymm"""),
 
     // Decision-threshold sweep — pick the F1-optimal operating point of the
     // "value ≥ t ⇒ purchase" classifier by evaluating EVERY distinct score
@@ -2852,7 +2791,7 @@ object GroupTen {
     // the type-partitioned day spine), reported with its height over the
     // taller neighbor. All exact integer comparisons; the day agg is the
     // only corpus-sized stage.
-    q("ts_peak_detection",
+    sqlKey("ts_peak_detection",
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
         |    CAST(count(*) AS BIGINT) AS c
         |  FROM events GROUP BY 1, 2),
@@ -2863,19 +2802,7 @@ object GroupTen {
         |SELECT event_type, d, c, c - GREATEST(pv, nx) AS height
         |FROM w WHERE pv IS NOT NULL AND nx IS NOT NULL
         |  AND c > pv AND c > nx
-        |ORDER BY event_type, d""") { (s, dir) =>
-      val w = Window.partitionBy("event_type").orderBy("d")
-      T.t(s, dir, "events")
-        .groupBy(col("event_type"), col("ts").cast(DateType).as("d"))
-        .agg(count(lit(1)).cast(LongType).as("c"))
-        .withColumn("pv", lag(col("c"), 1).over(w))
-        .withColumn("nx", lead(col("c"), 1).over(w))
-        .filter(col("pv").isNotNull && col("nx").isNotNull &&
-          col("c") > col("pv") && col("c") > col("nx"))
-        .select(col("event_type"), col("d"), col("c"),
-          (col("c") - greatest(col("pv"), col("nx"))).as("height"))
-        .orderBy("event_type", "d")
-    },
+        |ORDER BY event_type, d"""),
 
     // Dominant eigenvector of the embedding second-moment (Gram) matrix by
     // POWER ITERATION — PCA's first component, train-by-aggregation style:
@@ -3361,7 +3288,7 @@ object GroupTen {
     // key — O(k·n), the frame is the index), and the 19th-smallest of the
     // 20 integer cents is selected by an exact (cents, offset) rank. Zero
     // float arithmetic anywhere.
-    q("window_rolling_p95",
+    sqlKey("window_rolling_p95",
       """WITH li AS (SELECT l_suppkey,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
         |      AS cents,
@@ -3375,27 +3302,7 @@ object GroupTen {
         |    AND b.rn BETWEEN a.rn - 19 AND a.rn
         |  WHERE a.rn >= 20)
         |SELECT l_suppkey, CAST(rn AS BIGINT) AS rn, c AS p95_cents
-        |FROM pr WHERE rk = 19 ORDER BY l_suppkey, rn""") { (s, dir) =>
-      val li = T.t(s, dir, "lineitem").filter(col("l_suppkey") <= 2)
-        .withColumn("cents",
-          (col("l_extendedprice").cast(T.dec) * 100).cast(LongType))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("l_suppkey").orderBy(
-            col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice"))))
-        .select(col("l_suppkey"), col("cents"), col("rn"))
-      val b = li.select(col("l_suppkey").as("sk"), col("cents").as("c"),
-        col("rn").as("brn"))
-      li.filter(col("rn") >= 20)
-        .join(b, col("l_suppkey") === col("sk") &&
-          col("brn").between(col("rn") - 19, col("rn")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("l_suppkey", "rn").orderBy("c", "brn")))
-        .filter(col("rk") === 19)
-        .select(col("l_suppkey"), col("rn").cast(LongType).as("rn"),
-          col("c").as("p95_cents"))
-        .orderBy("l_suppkey", "rn")
-    },
+        |FROM pr WHERE rk = 19 ORDER BY l_suppkey, rn"""),
 
     // Term dispersion (variance-to-mean ratio across the 20 sources) for
     // the top-100 corpus terms — "is this term corpus-wide vocabulary or
@@ -3443,7 +3350,7 @@ object GroupTen {
     // snapshot (annual archive), expire the rest. Version recency is a
     // rank over the CALENDAR-bounded month table; all CASE logic on exact
     // integers. The month agg is the only corpus-sized stage.
-    q("etl_snapshot_expire_plan",
+    sqlKey("etl_snapshot_expire_plan",
       """WITH snap AS (SELECT DISTINCT
         |    CAST(date_part('year', o_orderdate) AS INT) AS yy,
         |    CAST(date_part('year', o_orderdate) * 100
@@ -3457,23 +3364,7 @@ object GroupTen {
         |  CASE WHEN recency <= 6 THEN 'recent'
         |       WHEN in_year = 1 THEN 'annual'
         |       ELSE 'expire' END AS action
-        |FROM rk ORDER BY yyyymm""") { (s, dir) =>
-      val snap = T.t(s, dir, "orders")
-        .select(year(col("o_orderdate")).cast(IntegerType).as("yy"),
-          (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-            .cast(IntegerType).as("yyyymm"))
-        .distinct()
-      snap
-        .withColumn("recency", row_number().over(
-          Window.orderBy(col("yyyymm").desc)))
-        .withColumn("in_year", row_number().over(
-          Window.partitionBy("yy").orderBy("yyyymm")))
-        .select(col("yyyymm"), col("recency").cast(LongType).as("recency"),
-          when(col("recency") <= 6, "recent")
-            .when(col("in_year") === 1, "annual")
-            .otherwise("expire").as("action"))
-        .orderBy("yyyymm")
-    },
+        |FROM rk ORDER BY yyyymm"""),
 
     // Wilson score confidence interval for a per-type proportion (share
     // of high-value events) — the small-count-safe CI every dashboard
@@ -4610,7 +4501,11 @@ object GroupTen {
     // IDENTICAL operation sequence in both engines on those bit-identical
     // operands, rounded once at 6dp (post-division/sqrt — no
     // representability ties). One map-side-combinable agg; 5 output rows.
-    q("stat_jarque_bera",
+    // x² re-cast to DECIMAL(19,4) (exact — scale 4 is the true scale of
+    // the product) so the x³/x⁴ chains stay inside decimal128 in BOTH
+    // engines (DECIMAL(19) forces int128 physicals — DuckDB's int64
+    // DECIMAL(18) product overflows)
+    sqlKey("stat_jarque_bera",
       """WITH s AS (SELECT event_type,
         |    CAST(count(*) AS DOUBLE) AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(9,2))) AS DOUBLE) AS s1,
@@ -4631,35 +4526,7 @@ object GroupTen {
         |SELECT event_type, CAST(n AS BIGINT) AS cnt,
         |  round(sk, 6) AS skew6, round(ku, 6) AS kurt6,
         |  round(n / 6 * (sk * sk + ku * ku / 4), 6) AS jb6
-        |FROM k ORDER BY event_type""") { (s, dir) =>
-      val x = col("value").cast(DecimalType(9, 2))
-      // x² re-cast to DECIMAL(19,4) (exact — scale 4 is the true scale of
-      // the product) so the x³/x⁴ chains stay inside decimal128 in BOTH
-      // engines (DECIMAL(19) forces int128 physicals — DuckDB's int64 DECIMAL(18) product overflows)
-      val x2 = (x * x).cast(DecimalType(19, 4))
-      val st = T.t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(count(lit(1)).cast(DoubleType).as("n"),
-          sum(x).cast(DoubleType).as("s1"),
-          sum(x2).cast(DoubleType).as("s2"),
-          sum(x2 * x).cast(DoubleType).as("s3"),
-          sum(x2 * x2).cast(DoubleType).as("s4"))
-      val mu = col("s1") / col("n")
-      st.select(col("event_type"), col("n"),
-          (col("s2") - col("s1") * col("s1") / col("n")).as("m2"),
-          (col("s3") - lit(3) * mu * col("s2")
-            + lit(2) * mu * mu * col("s1")).as("m3"),
-          (col("s4") - lit(4) * mu * col("s3") + lit(6) * mu * mu * col("s2")
-            - lit(3) * mu * mu * mu * col("s1")).as("m4"))
-        .select(col("event_type"), col("n"),
-          (sqrt(col("n")) * col("m3") / pow(col("m2"), 1.5)).as("sk"),
-          (col("n") * col("m4") / (col("m2") * col("m2")) - 3).as("ku"))
-        .select(col("event_type"), col("n").cast(LongType).as("cnt"),
-          round(col("sk"), 6).as("skew6"), round(col("ku"), 6).as("kurt6"),
-          round(col("n") / 6 * (col("sk") * col("sk")
-            + col("ku") * col("ku") / 4), 6).as("jb6"))
-        .orderBy("event_type")
-    },
+        |FROM k ORDER BY event_type"""),
 
     // Herfindahl–Hirschman concentration index per nation (the
     // market-concentration number antitrust and category management run):
@@ -5060,7 +4927,7 @@ object GroupTen {
     // second discrete differences (the monitoring derivative pair:
     // "how fast is it moving, is the move speeding up"): two lag passes
     // on the bounded day spine, exact integer cents end to end.
-    q("ts_velocity_accel",
+    sqlKey("ts_velocity_accel",
       """WITH d AS (SELECT CAST(ts AS DATE) AS day,
         |    SUM(CAST(round(value * 100) AS BIGINT)) AS x
         |  FROM events GROUP BY 1),
@@ -5068,18 +4935,7 @@ object GroupTen {
         |SELECT day, CAST(x AS BIGINT) AS x_cents,
         |  CAST(dx AS BIGINT) AS dx_cents,
         |  CAST(dx - lag(dx) OVER (ORDER BY day) AS BIGINT) AS d2x_cents
-        |FROM v ORDER BY day""") { (s, dir) =>
-      val d = T.t(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100).cast(LongType)).as("x"))
-      val w = Window.orderBy("day")
-      d.withColumn("dx", col("x") - lag("x", 1).over(w))
-        .withColumn("d2x", col("dx") - lag("dx", 1).over(w))
-        .select(col("day"), col("x").cast(LongType).as("x_cents"),
-          col("dx").cast(LongType).as("dx_cents"),
-          col("d2x").cast(LongType).as("d2x_cents"))
-        .orderBy("day")
-    },
+        |FROM v ORDER BY day"""),
 
     // Time-in-state accounting — total dwell time per event type, where
     // an event "holds the state" until the user's next event (the
@@ -5567,7 +5423,7 @@ object GroupTen {
     // order key), islands found where a start exceeds the running max of
     // prior ends (one customer-keyed window), then covered vs span day
     // counts per customer. Pure integer date arithmetic.
-    q("etl_interval_union_coverage",
+    sqlKey("etl_interval_union_coverage",
       """WITH iv AS (SELECT o_custkey AS ck, CAST(o_orderdate AS DATE)
         |    AS st,
         |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 10 + 1 AS INT)
@@ -5587,32 +5443,7 @@ object GroupTen {
         |SELECT ck, CAST(count(*) AS BIGINT) AS n_islands,
         |  CAST(SUM(ien - ist) AS BIGINT) AS covered_days,
         |  CAST(max(ien) - min(ist) AS BIGINT) AS span_days
-        |FROM g GROUP BY 1 ORDER BY ck""") { (s, dir) =>
-      val iv = T.t(s, dir, "orders").filter(col("o_custkey") < 200)
-        .select(col("o_custkey").as("ck"),
-          to_date(col("o_orderdate")).as("st"),
-          expr("date_add(to_date(o_orderdate)," +
-            " cast(o_orderkey % 10 + 1 as int))").as("en"),
-          col("o_orderkey"))
-      val wPrev = Window.partitionBy("ck")
-        .orderBy("st", "en", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wCum = Window.partitionBy("ck").orderBy("st", "en", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val isl = iv
-        .withColumn("pmax", max("en").over(wPrev))
-        .withColumn("isl",
-          sum(when(col("pmax").isNull || col("st") > col("pmax"), 1L)
-            .otherwise(0L)).over(wCum))
-      isl.groupBy("ck", "isl")
-        .agg(min("st").as("ist"), max("en").as("ien"))
-        .groupBy("ck")
-        .agg(count(lit(1)).cast(LongType).as("n_islands"),
-          sum(datediff(col("ien"), col("ist"))).cast(LongType)
-            .as("covered_days"),
-          datediff(max("ien"), min("ist")).cast(LongType).as("span_days"))
-        .orderBy("ck")
-    },
+        |FROM g GROUP BY 1 ORDER BY ck"""),
 
     // Watermark-lateness audit under a deterministic hash-sharded ingest
     // (the number that sets a stream's withWatermark bound): arrival
@@ -5722,7 +5553,7 @@ object GroupTen {
     // an order-independent integer, and the final exp/÷100/round chain is
     // the same IEEE sequence in both engines. Map-side-combinable
     // end to end.
-    q("agg_geometric_mean",
+    sqlKey("agg_geometric_mean",
       """WITH b AS (SELECT l_returnflag AS f,
         |    CAST(round(ln(CAST(CAST(round(l_extendedprice * 100)
         |      AS BIGINT) AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS lnq
@@ -5732,19 +5563,7 @@ object GroupTen {
         |SELECT f AS l_returnflag, n,
         |  round(exp(CAST(slnq AS DOUBLE) / (CAST(n AS DOUBLE)
         |    * 1000000.0)) / 100.0, 6) AS geomean6
-        |FROM m ORDER BY f""") { (s, dir) =>
-      val b = T.t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("f"),
-          round(log(round(col("l_extendedprice") * 100).cast(LongType)
-            .cast(DoubleType)) * 1000000.0, 0).cast(LongType).as("lnq"))
-      b.groupBy("f")
-        .agg(count(lit(1)).cast(LongType).as("n"), sum("lnq").as("slnq"))
-        .select(col("f").as("l_returnflag"), col("n"),
-          round(exp(col("slnq").cast(DoubleType)
-            / (col("n").cast(DoubleType) * 1000000.0)) / 100.0, 6)
-            .as("geomean6"))
-        .orderBy("l_returnflag")
-    },
+        |FROM m ORDER BY f"""),
 
     // Time-bounded funnel (view → click → purchase, each step within 24 h
     // of the previous — the constrained variant of window_funnel_stages,
@@ -6796,7 +6615,7 @@ object GroupTen {
     // says WHETHER, d says HOW MUCH): pooled-SD standardized mean gap
     // from exact integer power sums, written as the IDENTICAL float
     // sequence in both engines, 6dp post-sqrt. One conditional agg.
-    q("stat_cohens_d",
+    sqlKey("stat_cohens_d",
       """WITH e AS (SELECT event_type AS g,
         |    CAST(round(value * 100) AS BIGINT) AS y FROM events
         |  WHERE event_type IN ('purchase', 'click')),
@@ -6815,31 +6634,7 @@ object GroupTen {
         |    / sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n1)
         |      + (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE) * s2 / n2))
         |      / (n1 + n2 - 2)), 6) AS cohens_d6
-        |FROM p""") { (s, dir) =>
-      val m = T.t(s, dir, "events")
-        .filter(col("event_type").isin("purchase", "click"))
-        .select(col("event_type").as("g"),
-          round(col("value") * 100).cast(LongType).as("y"))
-        .groupBy("g")
-        .agg(count(lit(1)).cast(LongType).as("n"), sum("y").as("sy"),
-          sum(col("y") * col("y")).as("sq"))
-      m.agg(
-          max(when(col("g") === "purchase", col("n"))).as("n1"),
-          max(when(col("g") === "purchase", col("sy"))).as("s1"),
-          max(when(col("g") === "purchase", col("sq"))).as("q1"),
-          max(when(col("g") === "click", col("n"))).as("n2"),
-          max(when(col("g") === "click", col("sy"))).as("s2"),
-          max(when(col("g") === "click", col("sq"))).as("q2"))
-        .select(col("n1").cast(LongType).as("n_purchase"),
-          col("n2").cast(LongType).as("n_click"),
-          round((expr("CAST(s1 AS DOUBLE)") / col("n1")
-              - expr("CAST(s2 AS DOUBLE)") / col("n2"))
-            / sqrt(((expr("CAST(q1 AS DOUBLE)")
-                - expr("CAST(s1 AS DOUBLE)") * col("s1") / col("n1"))
-              + (expr("CAST(q2 AS DOUBLE)")
-                - expr("CAST(s2 AS DOUBLE)") * col("s2") / col("n2")))
-              / (col("n1") + col("n2") - 2)), 6).as("cohens_d6"))
-    },
+        |FROM p"""),
 
     // Events-since-last-purchase counter — the recency FEATURE (not the
     // report) a churn model joins per event: purchase epochs via a
@@ -6847,7 +6642,7 @@ object GroupTen {
     // a (user, epoch)-keyed rank; −1 sentinel before any purchase.
     // Purchase rows restart at 0. Pure integer; both windows share the
     // user_id shuffle prefix.
-    q("window_since_last_event",
+    sqlKey("window_since_last_event",
       """WITH s AS (SELECT event_id, user_id, ts, event_type,
         |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
         |      OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -6861,21 +6656,7 @@ object GroupTen {
         |    AS n_purchases_so_far,
         |  CAST(CASE WHEN epoch = 0 THEN -1 ELSE rn - 1 END AS BIGINT)
         |    AS events_since_purchase
-        |FROM r ORDER BY event_id LIMIT 2000""") { (s, dir) =>
-      val wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val sdf = T.t(s, dir, "events")
-        .withColumn("epoch",
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .over(wu.rowsBetween(Window.unboundedPreceding,
-              Window.currentRow)))
-      sdf.withColumn("rn", row_number().over(
-          Window.partitionBy("user_id", "epoch").orderBy("ts", "event_id")))
-        .select(col("event_id"), col("user_id"),
-          col("epoch").cast(LongType).as("n_purchases_so_far"),
-          when(col("epoch") === 0, -1L).otherwise(col("rn") - 1)
-            .cast(LongType).as("events_since_purchase"))
-        .orderBy("event_id").limit(2000)
-    },
+        |FROM r ORDER BY event_id LIMIT 2000"""),
 
     // Durbin–Watson statistic of the daily revenue linear-trend
     // residuals — the serial-correlation test every regression
@@ -7140,7 +6921,7 @@ object GroupTen {
     // integer moments via the IDENTICAL float chain in both engines,
     // zero-guarded below 10 exceedances (the sf0.001 tail is too thin to
     // fit — emitted as 0, documented). One filtered agg.
-    q("stat_pot_gpd_fit",
+    sqlKey("stat_pot_gpd_fit",
       """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS y
         |  FROM events),
         |x AS (SELECT y - 25000 AS z FROM e WHERE y > 25000),
@@ -7157,25 +6938,7 @@ object GroupTen {
         |      * (1.0 + (CAST(sz AS DOUBLE) / k) * (CAST(sz AS DOUBLE) / k)
         |      / ((CAST(sq AS DOUBLE) - CAST(sz AS DOUBLE) * sz / k) / k))
         |      / 100.0, 6) END AS sigma_dollars6
-        |FROM m""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .select(round(col("value") * 100).cast(LongType).as("y"))
-        .where(col("y") > 25000)
-        .select((col("y") - 25000).as("z"))
-        .agg(count(lit(1)).cast(LongType).as("k"), sum("z").as("sz"),
-          sum(col("z") * col("z")).as("sq"))
-        .select(col("k").as("n_exceed"),
-          expr("CASE WHEN k < 10 THEN 0.0D ELSE" +
-            " round(0.5D * (1.0D - (CAST(sz AS DOUBLE) / k)" +
-            " * (CAST(sz AS DOUBLE) / k)" +
-            " / ((CAST(sq AS DOUBLE) - CAST(sz AS DOUBLE) * sz / k) / k))" +
-            ", 6) END").as("xi6"),
-          expr("CASE WHEN k < 10 THEN 0.0D ELSE" +
-            " round(0.5D * (CAST(sz AS DOUBLE) / k)" +
-            " * (1.0D + (CAST(sz AS DOUBLE) / k) * (CAST(sz AS DOUBLE) / k)" +
-            " / ((CAST(sq AS DOUBLE) - CAST(sz AS DOUBLE) * sz / k) / k))" +
-            " / 100.0D, 6) END").as("sigma_dollars6"))
-    },
+        |FROM m"""),
 
     // Cumulative gains and lift chart at population deciles — the
     // campaign-targeting view of the score's ranking power (PR curve's
@@ -7662,7 +7425,7 @@ object GroupTen {
     // dedup_* key's planning starts from: exact-text clusters by md5,
     // bucketed 1 / 2 / 3+ with cluster and document counts. Two
     // map-side-combinable aggs.
-    q("dedup_cluster_size_histogram",
+    sqlKey("dedup_cluster_size_histogram",
       """WITH c AS (SELECT md5(text) AS h, count(*) AS sz FROM documents
         |  GROUP BY 1),
         |b AS (SELECT CASE WHEN sz = 1 THEN '1' WHEN sz = 2 THEN '2'
@@ -7671,22 +7434,7 @@ object GroupTen {
         |    sz FROM c)
         |SELECT bucket, CAST(count(*) AS BIGINT) AS n_clusters,
         |  CAST(SUM(sz) AS BIGINT) AS n_docs
-        |FROM b GROUP BY bucket, o ORDER BY o""") { (s, dir) =>
-      val c = T.t(s, dir, "documents")
-        .groupBy(md5(col("text")).as("h"))
-        .agg(count(lit(1)).as("sz"))
-      c.select(
-          when(col("sz") === 1, "1").when(col("sz") === 2, "2")
-            .otherwise("3+").as("bucket"),
-          when(col("sz") === 1, 1).when(col("sz") === 2, 2)
-            .otherwise(3).as("o"),
-          col("sz"))
-        .groupBy("bucket", "o")
-        .agg(count(lit(1)).cast(LongType).as("n_clusters"),
-          sum("sz").cast(LongType).as("n_docs"))
-        .orderBy("o")
-        .select("bucket", "n_clusters", "n_docs")
-    },
+        |FROM b GROUP BY bucket, o ORDER BY o"""),
 
     // New-vs-returning daily split — the top-of-dashboard product
     // metric (acquisition vs retention mix): a user's events on their
@@ -7768,7 +7516,7 @@ object GroupTen {
     // assumption-free paired test (no symmetry needed, unlike Wilcoxon):
     // sign counts from one spine pass, the normal-approximation z
     // = (2k−n)/√n as one sqrt+division over exact integers, 6dp.
-    q("stat_sign_test",
+    sqlKey("stat_sign_test",
       """WITH d AS (SELECT CAST(ts AS DATE) AS day,
         |    SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS p,
@@ -7781,23 +7529,7 @@ object GroupTen {
         |  FROM d)
         |SELECT n AS n_days, k AS n_purchase_higher,
         |  round((2.0 * k - n) / sqrt(CAST(n AS DOUBLE)), 6) AS sign_z6
-        |FROM s""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(when(col("event_type") === "purchase",
-            round(col("value") * 100).cast(LongType)).otherwise(0L))
-            .as("p"),
-          sum(when(col("event_type") === "click",
-            round(col("value") * 100).cast(LongType)).otherwise(0L))
-            .as("c"))
-        .agg(sum(when(col("p") > col("c"), 1L).otherwise(0L))
-            .cast(LongType).as("k"),
-          sum(when(col("p") =!= col("c"), 1L).otherwise(0L))
-            .cast(LongType).as("n"))
-        .select(col("n").as("n_days"), col("k").as("n_purchase_higher"),
-          round((lit(2.0d) * col("k") - col("n"))
-            / sqrt(col("n").cast(DoubleType)), 6).as("sign_z6"))
-    },
+        |FROM s"""),
 
     // Triangular weighted moving average (WMA-4, weights 4-3-2-1) — the
     // lag-weighted smoother between SMA (flat) and EWMA (geometric):
@@ -8020,7 +7752,7 @@ object GroupTen {
     // mislead; completes ml_eval_confusion's metric set): integer
     // confusion counts, the (TP·TN−FP·FN)/√(Π margins) chain written
     // identically in both engines, 6dp post-sqrt. One conditional agg.
-    q("ml_mcc_score",
+    sqlKey("ml_mcc_score",
       """WITH e AS (SELECT
         |    CASE WHEN value > 100 THEN 1 ELSE 0 END AS pred,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -8036,29 +7768,7 @@ object GroupTen {
         |  round((CAST(tp AS DOUBLE) * tn - CAST(fp AS DOUBLE) * fn)
         |    / sqrt(CAST((tp + fp) AS DOUBLE) * (tp + fn) * (tn + fp)
         |      * (tn + fn)), 6) AS mcc6
-        |FROM c""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .select(when(col("value") > 100, 1L).otherwise(0L).as("pred"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L)
-            .as("y"))
-        .agg(sum(when(col("pred") === 1 && col("y") === 1, 1L)
-            .otherwise(0L)).as("tp"),
-          sum(when(col("pred") === 1 && col("y") === 0, 1L)
-            .otherwise(0L)).as("fp"),
-          sum(when(col("pred") === 0 && col("y") === 1, 1L)
-            .otherwise(0L)).as("fn"),
-          sum(when(col("pred") === 0 && col("y") === 0, 1L)
-            .otherwise(0L)).as("tn"))
-        .select(col("tp").cast(LongType).as("tp"),
-          col("fp").cast(LongType).as("fp"),
-          col("fn").cast(LongType).as("fn"),
-          col("tn").cast(LongType).as("tn"),
-          round((expr("CAST(tp AS DOUBLE)") * col("tn")
-              - expr("CAST(fp AS DOUBLE)") * col("fn"))
-            / sqrt(expr("CAST((tp + fp) AS DOUBLE)") * (col("tp")
-              + col("fn")) * (col("tn") + col("fp"))
-              * (col("tn") + col("fn"))), 6).as("mcc6"))
-    },
+        |FROM c"""),
 
     // Phone normalization to E.164 (the contact-data ingest scalar):
     // deterministic NANP-style raw numbers from customer keys,

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.T
-import graft.T.{Q, q}
+import graft.T.{Q, q, sqlKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 object GroupWindow {
 
   val defs: Seq[Q] = Seq(
-    q("window_ranking",
+    sqlKey("window_ranking",
       """SELECT c_mktsegment, o_orderkey, o_totalprice, rn, rnk, drnk FROM (
         |  SELECT c_mktsegment, o_orderkey, o_totalprice,
         |    CAST(row_number() OVER w AS INT) AS rn,
@@ -22,20 +22,9 @@ object GroupWindow {
         |    CAST(dense_rank() OVER w AS INT) AS drnk
         |  FROM customer JOIN orders ON c_custkey = o_custkey
         |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey))
-        |WHERE rn <= 3 ORDER BY c_mktsegment, rn""") { (s, dir) =>
-      val w = Window.partitionBy("c_mktsegment")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      T.t(s, dir, "customer")
-        .join(T.t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .select(col("c_mktsegment"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("rnk", rank().over(w))
-        .withColumn("drnk", dense_rank().over(w))
-        .filter(col("rn") <= 3)
-        .orderBy("c_mktsegment", "rn")
-    },
+        |WHERE rn <= 3 ORDER BY c_mktsegment, rn"""),
 
-    q("window_topk_per_group",
+    sqlKey("window_topk_per_group",
       """WITH pq AS (
         |  SELECT p_brand, p_partkey,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
@@ -43,17 +32,7 @@ object GroupWindow {
         |SELECT p_brand, p_partkey, qty, rn FROM (
         |  SELECT *, CAST(row_number() OVER (
         |    PARTITION BY p_brand ORDER BY qty DESC, p_partkey) AS INT) AS rn FROM pq)
-        |WHERE rn <= 3 ORDER BY p_brand, rn""") { (s, dir) =>
-      val pq = T.t(s, dir, "lineitem")
-        .join(T.t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "p_partkey")
-        .agg(T.dsum(col("l_quantity")).as("qty"))
-      pq.withColumn("rn",
-          row_number().over(Window.partitionBy("p_brand").orderBy(col("qty").desc, col("p_partkey"))))
-        .filter(col("rn") <= 3)
-        .select("p_brand", "p_partkey", "qty", "rn")
-        .orderBy("p_brand", "rn")
-    },
+        |WHERE rn <= 3 ORDER BY p_brand, rn"""),
 
     // event_id in the ordering: ts alone may tie within a user.
     q("window_lag_lead",
@@ -73,21 +52,18 @@ object GroupWindow {
     },
 
     // Integer counts → window avg is exact in both engines.
-    q("window_moving_avg",
+    sqlKey("window_moving_avg",
       """WITH daily AS (SELECT CAST(ts AS DATE) AS d, count(*) AS cnt FROM events GROUP BY 1)
         |SELECT d, cnt,
         |  avg(cnt) OVER (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS ma
-        |FROM daily ORDER BY d""") { (s, dir) =>
-      T.t(s, dir, "events")
-        .groupBy(col("ts").cast(DateType).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("ma", avg(col("cnt")).over(Window.orderBy("d").rowsBetween(-6, 0)))
-        .orderBy("d")
-    },
+        |FROM daily ORDER BY d"""),
 
     // Pre-agg per (customer, day) kills ties so RANGE ≡ ROWS — the frame is
     // still declared RANGE to exercise the range-frame path.
-    q("window_range_frame",
+    // the running sum stays DECIMAL internally (exact under any window-agg
+    // evaluation order — DuckDB's segment tree vs Spark's running
+    // accumulator would diverge on doubles), surfaced as DOUBLE
+    sqlKey("window_range_frame",
       """WITH dayrev AS (
         |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS odate,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS day_rev_dec
@@ -95,38 +71,15 @@ object GroupWindow {
         |SELECT o_custkey, odate, CAST(day_rev_dec AS DOUBLE) AS day_rev,
         |  CAST(SUM(day_rev_dec) OVER (PARTITION BY o_custkey ORDER BY odate
         |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_rev
-        |FROM dayrev ORDER BY o_custkey, odate""") { (s, dir) =>
-      // the running sum stays DECIMAL internally (exact under any window-agg
-      // evaluation order — DuckDB's segment tree vs Spark's running
-      // accumulator would diverge on doubles), surfaced as DOUBLE
-      val dayrev = T.t(s, dir, "orders")
-        .groupBy(col("o_custkey"), col("o_orderdate").cast(DateType).as("odate"))
-        .agg(sum(col("o_totalprice").cast(T.dec)).cast(T.dec).as("day_rev_dec"))
-      dayrev
-        .withColumn("run_rev",
-          sum(col("day_rev_dec")).over(
-            Window.partitionBy("o_custkey").orderBy("odate")
-              .rangeBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast(DoubleType))
-        .select(col("o_custkey"), col("odate"),
-          col("day_rev_dec").cast(DoubleType).as("day_rev"), col("run_rev"))
-        .orderBy("o_custkey", "odate")
-    },
+        |FROM dayrev ORDER BY o_custkey, odate"""),
 
     // percent_rank = (rank-1)/(n-1): both operands are exact small ints, so
     // the division is the same IEEE op in both engines.
-    q("window_percent_rank",
+    sqlKey("window_percent_rank",
       """SELECT s_suppkey, CAST(s_nationkey AS INT) AS nk,
         |  percent_rank() OVER (PARTITION BY s_nationkey
         |    ORDER BY CAST(s_acctbal AS DECIMAL(18,2)), s_suppkey) AS pr
-        |FROM supplier ORDER BY s_suppkey""") { (s, dir) =>
-      T.t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast(IntegerType).as("nk"),
-          percent_rank().over(
-            Window.partitionBy("s_nationkey")
-              .orderBy(col("s_acctbal").cast(T.dec), col("s_suppkey"))).as("pr"))
-        .orderBy("s_suppkey")
-    },
+        |FROM supplier ORDER BY s_suppkey"""),
 
     // ntile(4) + cume_dist over the full customer balance order — but NOT
     // as a single-partition data-sized window (r11: the measuring plan

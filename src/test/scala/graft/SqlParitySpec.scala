@@ -21,6 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - DIALECT-SKIP: DuckDB-only syntax (`//`, `unnest`, `::` casts,
   *     `list_transform`, `AS MATERIALIZED`, ...) that Spark's parser or
   *     analyzer rejects. No assertion beyond "throws, not wrong-answers".
+  *
+  * Keys defined by `T.sqlKey` run their oracle text through `T.sql`, so for
+  * them PARITY holds by construction: it compares the text under temp views
+  * with the same text bound without views. For those keys this spec pins
+  * the binder (the same tables, no catalog escape), not a second author;
+  * for every key that keeps a DataFrame body it still pins two programs.
   */
 class SqlParitySpec extends AnyFunSuite {
   private val s = TestSpark.spark
