@@ -11,7 +11,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ReusedExchangeExec, ShuffleExchangeLike}
@@ -31,7 +30,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  3. the first noop leg is the measured one: its write runs under job
   *     group `bench:<key>`, and the [[Bench.Collector]] attributes jobs,
   *     task metrics and the write's executed plan to the key. Its drain
-  *     (bounded by `T.settle`) runs after the timed region.
+  *     (bounded by `T.settle`) runs after the timed region;
+  *  4. [[PlanAudit]] reads that finalized plan, whose SQL metrics the write
+  *     filled in, and the record gets its 100 TB red `flags` (and the
+  *     measured `nested_rows`/`win_rows` of its allowlisted shapes) — no
+  *     extra execution.
   *
   * Every leg's time excludes the `T.staged` builds it paid; those are the
   * key's `staging_s` (the first consumer of a shared index otherwise reads
@@ -83,6 +86,9 @@ object Bench {
       li.groupBy("l_returnflag").count().count()
       li.limit(1000).orderBy("l_orderkey").count()
     } catch { case _: Throwable => }
+    // the decimal-fanout threshold's base: read once, between keys, and
+    // only if some key's plan has decimal math above a row multiplier
+    lazy val maxBase = Graft.tables.map(T.t(spark, sfDir, _).count()).max
     val sc = spark.sparkContext
     val col = new Collector
     sc.addSparkListener(col)
@@ -120,8 +126,11 @@ object Bench {
           val text = p.toString
           java.nio.file.Files.writeString(plansDir.resolve(s"$name.txt"), text)
           val (ex, reex, bex) = exchanges(p)
+          val audit = PlanAudit.audit(name, p, maxBase)
           Seq("ex" -> ex, "reex" -> reex, "bex" -> bex) ++
-            operators.map { case (k, re) => k -> re.r.findAllIn(text).length }
+            operators.map { case (k, re) => k -> re.r.findAllIn(text).length } ++
+            Seq("flags" -> audit.flags) ++ audit.nestedRows.map("nested_rows" -> _) ++
+            audit.windowRows.map("win_rows" -> _)
         } ++ Seq("shuf_w" -> m.shufW.get, "shuf_r" -> m.shufR.get,
           "spill_d" -> m.spillD.get, "spill_m" -> m.spillM.get,
           "input" -> m.input.get, "cpu_ms" -> m.cpuNs.get / 1000000,
@@ -255,27 +264,20 @@ object Bench {
       capture(qe)
   }
 
-  /** (shuffle, reused, broadcast) exchange nodes of an executed plan.
-    * Descends into the final adaptive plan, query stages and subqueries; a
-    * ReusedExchangeExec is a leaf, so the exchange it reuses counts once,
-    * where it ran. In the plan text a ReusedExchange line embeds its
-    * source exchange's text, so substring arithmetic over-counts real
-    * shuffles (17 vs 15 in plans/r17/dedup_near_minhash_after.txt). */
+  /** (shuffle, reused, broadcast) exchange nodes of an executed plan, by
+    * [[PlanAudit.walk]]: a ReusedExchangeExec is a leaf, so the exchange it
+    * reuses counts once, where it ran. In the plan text a ReusedExchange
+    * line embeds its source exchange's text, so substring arithmetic
+    * over-counts real shuffles (17 vs 15 in dedup_near_minhash's r17 plan,
+    * `git show e9a77c2:plans/r17/dedup_near_minhash_after.txt`). */
   def exchanges(plan: SparkPlan): (Int, Int, Int) = {
     var (ex, reex, bex) = (0, 0, 0)
-    def walk(p: SparkPlan): Unit = {
-      p match {
-        case _: ReusedExchangeExec => reex += 1
-        case _: ShuffleExchangeLike => ex += 1
-        case _: BroadcastExchangeLike => bex += 1
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ =>
-      }
-      p.children.foreach(walk)
-      p.subqueries.foreach(walk)
+    PlanAudit.walk(plan) {
+      case _: ReusedExchangeExec => reex += 1
+      case _: ShuffleExchangeLike => ex += 1
+      case _: BroadcastExchangeLike => bex += 1
+      case _ =>
     }
-    walk(plan)
     (ex, reex, bex)
   }
 

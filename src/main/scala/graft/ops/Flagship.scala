@@ -12,7 +12,9 @@ object Flagship {
   val defs: Seq[Q] = Seq(
     // exact decimal arithmetic: 2dp×2dp products land on half-cent ties,
     // where double→decimal cast rounding diverges between engines; the
-    // final DOUBLE cast of the exact cents is engine-identical (T.dsum note)
+    // final DOUBLE cast of the exact cents is engine-identical (T.dsum note).
+    // Plan: the joins broadcast the filtered customer dim; lineitem never
+    // shuffles before the partial agg.
     sqlKey("flagship_q3",
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate, o_orderpriority,
         |  CAST(CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS revenue

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
 object GroupAgg {
 
   val defs: Seq[Q] = Seq(
-    // TPC-H Q1 shape — HashAggregateExec with map-side partials.
+    // TPC-H Q1 shape — HashAggregateExec with map-side partials. Plan:
+    // partial HashAggregate -> Exchange on the group keys -> final.
     sqlKey("agg_groupby_hash",
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,

@@ -698,9 +698,10 @@ object GroupAnalytics {
     // Recursive CTE (Spark 4 WITH RECURSIVE): ancestor closure over the
     // containment hierarchy expressed DECLARATIVELY — the same SQL text a
     // DuckDB/Postgres user writes runs unchanged on Spark's iterative
-    // union-loop execution. graph_transitive_closure remains the
-    // hand-tuned loop variant (explicit localCheckpoint lineage control);
-    // this row is the SQL-surface parity proof.
+    // union-loop execution (a UnionLoop node in the plan).
+    // graph_transitive_closure remains the hand-tuned loop variant
+    // (explicit localCheckpoint lineage control); this row is the
+    // SQL-surface parity proof.
     q("recursive_cte_hierarchy",
       """WITH RECURSIVE edges AS (
         |  SELECT 'c' || CAST(c_custkey AS VARCHAR) AS child,
@@ -757,6 +758,8 @@ object GroupAnalytics {
     // in list order, per-subspace lookup values are quantized to exact
     // DECIMAL(10,6) BEFORE the 4-term sum (decimal addition is order-
     // independent where a double sum is not), ranks tie-break on id.
+    // Plan: broadcast codebook joins, a window argmin per subspace, the
+    // decimal ADC sum.
     q("vector_pq_topk",
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |cents AS (SELECT CAST(c.vec_id AS INT) AS cid, t.m,

@@ -152,7 +152,9 @@ object GroupDepth {
     // diverged: DuckDB rounds doubles via x·1e9 float math, Spark via
     // BigDecimal). Dangling mass is dropped (classic simplified PR)
     // identically on both sides; the final display division is one IEEE
-    // op on identical integers.
+    // op on identical integers. Plan: the edge table is localCheckpoint'd
+    // once (the star join runs once, not per iteration); each of the 5
+    // iterations is a broadcast join + integer agg.
     q("graph_pagerank", {
       val iter = (p: Int, c: Int) =>
         s"""p$c AS (SELECT n.node, 6000000 + (85 * coalesce((
@@ -207,7 +209,8 @@ object GroupDepth {
     // integer cross-multiplication 5·Σmin ≥ 4·(lenA+lenB−Σmin). Candidates
     // come from the same df≥2-pruned inverted index as dedup_ngram_jaccard
     // (a shingle in one doc can never pair) — index self-join, never
-    // all-pairs.
+    // all-pairs. Plan: a scan of the staged (doc, shingle, count) index
+    // (wshingle_df) feeds the self-join on the shingle key.
     q("dedup_weighted_jaccard",
       """WITH dd AS (SELECT doc_id, string_split(text,' ') AS arr FROM documents
         |  WHERE len(string_split(text,' ')) >= 3),
@@ -327,7 +330,9 @@ object GroupDepth {
     // exact double dot re-scores only the top-50 survivors, and the final
     // top-5 equals brute force (coarse recall attested at all 3 scales by
     // DepthSpec — the quantization error bound ≪ the 5th/50th margin).
-    // Exact-dot evaluations drop from |corpus| to 50 per query.
+    // Exact-dot evaluations drop from |corpus| to 50 per query. Plan: the
+    // vec_dot_int coarse rank runs over the broadcast query set; the exact
+    // vec_dot sits above the crnk<=50 filter.
     q("vector_rerank_two_stage",
       """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe FROM embeddings
         |  WHERE vec_id >= 20 AND vec_id < 40),

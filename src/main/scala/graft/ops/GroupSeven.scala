@@ -351,7 +351,11 @@ object GroupSeven {
     // self-join fans out per node by ORIENTED out-degree ≤ O(√m) instead of
     // raw degree (hot parts would otherwise wedge quadratically). The
     // oracle counts the same triangles with the plain a<b formulation —
-    // orientation is count-invariant.
+    // orientation is count-invariant. Plan: the edge stream is exploded
+    // from the STAGED oriented-adjacency index (shared with the clustering
+    // coefficient, degree histogram and assortativity keys), then one
+    // AQE-broadcast dst-array probe and one codegen'd array_intersect per
+    // edge — the wedge intermediate never materializes.
     q("graph_triangle_count",
       """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |e AS (SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
@@ -592,7 +596,8 @@ object GroupSeven {
     // force; the fixtures' random vectors have no such structure, so no
     // exactness claim is made — rerankRecall (api.Pipelines) measures the
     // gap on any corpus. Queries broadcast; both ranks are per-query keyed
-    // windows.
+    // windows. Plan: the sliced vec_dot coarse rank runs over the broadcast
+    // queries; the exact 64-dim dot sits above the crnk<=20 filter.
     q("vector_matryoshka_prefix_topk",
       """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe FROM embeddings
         |  WHERE vec_id < 20),

@@ -282,6 +282,8 @@ object GroupStream {
     // market segment. Stream-static inner joins are stateless per batch
     // (no watermark, no join state), so the drained stream equals this
     // plain batch join + window agg; StreamingSpec proves the replay.
+    // Plan: BroadcastHashJoin, partial agg, then one exchange on
+    // (window, segment) — the shape every micro-batch plans.
     q("stream_static_enrich",
       """SELECT date_trunc('hour', ts) AS w_start, c_mktsegment, count(*) AS cnt,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value

@@ -349,7 +349,8 @@ object GroupTen {
     // integers, and the only float math is the final sqrt-denominator
     // division rounded at 6dp. The 100 TB note: per-key blocked pair
     // counting is the distributable formulation (a global tau would use
-    // merge-sort inversion counting).
+    // merge-sort inversion counting). Plan: the pair self-join is a shuffle
+    // EQUI-join on user_id; the tie tables are map-side-combined aggs.
     q("stat_kendall_tau",
       """WITH e AS (SELECT user_id, event_id, value,
         |    CAST(regexp_extract(props, '"k": (\d+)', 1) AS INT) AS k FROM events),

@@ -35,6 +35,8 @@ object GroupVector {
   }
 
   val defs: Seq[Q] = Seq(
+    // Plan: the codegen'd vec_dot runs inside WholeStageCodegen; the query
+    // side is broadcast.
     q("vector_cosine_topk",
       """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id < 20),
         |c AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS ce FROM embeddings WHERE vec_id >= 20),

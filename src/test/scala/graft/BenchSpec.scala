@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Locale
 
 import scala.collection.immutable.ListMap
@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The board runner's callable core (`Bench.run`) on the sf0.001 fixture:
   * the per-key record, the write-plan capture through child sessions, loud
-  * failures, a planted delay that the record alone localizes, and JSON that
-  * stays JSON under a non-English default locale. */
+  * failures, the whole board run end to end with zero errors and zero
+  * PlanAudit flags, a planted delay that the record alone localizes, and
+  * JSON that stays JSON under a non-English default locale. */
 class BenchSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   private val sf = TestSpark.sf
@@ -42,6 +43,7 @@ class BenchSpec extends AnyFunSuite {
     assert(agg.get("jobs").asLong >= 1 && agg.get("ex").asLong >= 1, agg)
     assert(agg.get("shuf_w").asLong > 0 && agg.get("tasks").asLong > 0, agg)
     assert(agg.get("noop_s").size == 1 && !agg.get("drain_timeout").asBoolean, agg)
+    assert(agg.get("flags").isArray && agg.get("flags").isEmpty, agg)
     assert(Files.readString(out.resolve("plans/agg_groupby_hash.txt")).nonEmpty)
     // the runtime bloom filter plans only in the key's child session, so
     // this is the write captured through that session's listener manager
@@ -61,6 +63,32 @@ class BenchSpec extends AnyFunSuite {
       "cpus", "reps", "date", "load_avg_start"))
     assert(run.get("n_errors").asInt == 1 && run.get("errors").get(0).asText == "planted_throw")
     assert(run.get("n_queries").asInt == 2)
+  }
+
+  test("the whole board runs, and no key's plan carries a 100 TB red flag") {
+    val out = Paths.get(T.tempDir("bench_board_"))
+    // a key result an earlier suite cached (SevenSpec does) would answer
+    // that key from an InMemoryRelation and hide its plan from the audit
+    s.catalog.clearCache()
+    // a child session: no key's conf or view outlives this test
+    val errors = Bench.run(s.newSession(), sf, SparkEntry.queries.toSeq, 1, out.toString)
+    val r = records(out)
+    def listing(of: JsonNode => Option[String]) =
+      r.toSeq.sortBy(_._1).flatMap { case (k, n) => of(n).map(v => s"$k: $v") }.mkString("\n")
+    assert(errors.isEmpty, listing(n => Option(n.get("error")).map(_.asText)))
+    assert(r.size == SparkEntry.queries.size)
+    val unaudited = r.collect { case (k, n) if !n.has("flags") => k }
+    assert(unaudited.isEmpty, s"no write plan captured: $unaudited")
+    assert(r.values.forall(_.get("flags").isEmpty),
+      listing(n => Some(n.get("flags")).filterNot(_.isEmpty).map(_.toString)))
+    // the entries with no bound are named, so a new one cannot slip in
+    assert(PlanAudit.intendedNested.collect { case (k, b) if b < 0 => k }.toSet ==
+      Set("similarity_join_threshold", "similarity_join_lsh", "stream_dedup_stateful"))
+    // every entry still excuses a shape its key plans (and measures)
+    def measured(field: String)(k: String) = r.get(k).exists(_.has(field))
+    val idle = PlanAudit.intendedNested.keys.filterNot(measured("nested_rows")) ++
+      PlanAudit.intendedGlobalWindow.keys.filterNot(measured("win_rows"))
+    assert(idle.isEmpty, s"allowlist entries that match no plan: $idle")
   }
 
   test("a planted 300 ms key is the only slow record, and records parse under a German locale") {

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins DrivePlanAudit's decimal-on-amplified-rows detector against both
-  * sides of the r15 hash-repricing finding (BASELINE.md):
+/** Pins PlanAudit's decimal-on-amplified-rows detector against both
+  * sides of the r15 hash-repricing finding (BASELINE.md), and its wide
+  * lineitem scan detector:
   *  - POSITIVE: the exact shape that regressed 6.5–21× — a DECIMAL(38,0)
   *    modular product evaluated per row × 200 explode replicas — must
   *    flag (structural hit + measured amplification over 4× the largest
@@ -33,9 +34,9 @@ class DecFanoutSpec extends AnyFunSuite {
       .groupBy("idx").agg(count(lit(1)).as("n"))
     df.collect() // finalize AQE + populate numOutputRows metrics
     val qe = df.queryExecution
-    assert(DrivePlanAudit.decStructuralHit(qe.sparkPlan),
+    assert(PlanAudit.decStructuralHit(qe.sparkPlan),
       "structural pre-filter must see the decimal op above the explode")
-    val hits = DrivePlanAudit.decAmplified(qe.executedPlan, threshold)
+    val hits = PlanAudit.decAmplified(qe.executedPlan, threshold)
     assert(hits.nonEmpty,
       s"the regressed shape must measure as amplified (> $threshold rows)")
     assert(hits.map(_._2).max > threshold)
@@ -50,10 +51,23 @@ class DecFanoutSpec extends AnyFunSuite {
       .select(col("c_mktsegment"), T.r6("cents", "t").as("share6"))
     df.collect()
     val qe = df.queryExecution
-    assert(DrivePlanAudit.decStructuralHit(qe.sparkPlan),
+    assert(PlanAudit.decStructuralHit(qe.sparkPlan),
       "the benign shape IS a structural hit — that is the point of " +
         "the measured second stage")
-    assert(DrivePlanAudit.decAmplified(qe.executedPlan, threshold).isEmpty,
+    assert(PlanAudit.decAmplified(qe.executedPlan, threshold).isEmpty,
       "group-count-sized input must not measure as amplified")
+  }
+
+  test("a lineitem scan of every column flags outside the keys that read all of it") {
+    def audit(key: String, cols: String*) = {
+      val df = T.t(s, TestSpark.sf, "lineitem").selectExpr(cols: _*)
+      df.collect()
+      PlanAudit.audit(key, df.queryExecution.executedPlan, 0L).flags
+    }
+    // the column order of the read does not matter, only its coverage
+    val all = T.t(s, TestSpark.sf, "lineitem").columns.reverse.toSeq
+    assert(audit("planted_wide", all: _*) == Seq("WIDESCAN"))
+    assert(audit("scan_parquet", all: _*).isEmpty)
+    assert(audit("planted_narrow", all.tail: _*).isEmpty)
   }
 }

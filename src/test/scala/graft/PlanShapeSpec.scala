@@ -204,8 +204,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // code scan (only nprobe directories open), and the ADC distance
     // table rides a broadcast — the corpus-sized side never shuffles.
     // The only nested-loop join allowed is the 8-row coarse-centroid
-    // fan-out of the query probe (bounded by design, DrivePlanAudit
-    // allowlist). It appears TWICE in the plan string — once in the main
+    // fan-out of the query probe (bounded by design: PlanAudit's
+    // allowlist, measured in BenchSpec's board test). It appears TWICE in the plan string — once in the main
     // plan, once in the DPP subquery's embedded copy of the probe plan —
     // so the bound is 2; a third would mean the code scan degraded.
     assert(p.contains("dynamicpruning"), p.take(3000))
