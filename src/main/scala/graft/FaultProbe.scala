@@ -13,10 +13,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-/** Fault-injection exactness probe: the graded write paths and the
-  * stateful streaming sinks commit EXACTLY ONCE through four kinds of
-  * failure. Every scenario pins its committed output with a two-way
-  * `exceptAll` multiset diff against a run without the fault.
+/** Exactness probe: the graded write paths and the stateful streaming
+  * sinks commit EXACTLY ONCE through four kinds of failure, and the board's
+  * keys give the same rows under three kinds of stress. Every scenario
+  * pins its output with a two-way `exceptAll` multiset diff against a run
+  * without the fault; in the board modes a scenario is one key, compared
+  * by [[boardDiff]].
   *
   *  - `retry`: task death. [[flaky]] throws after a few rows of every
   *    chosen partition's first attempt, so the torn attempt has already
@@ -48,20 +50,37 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   *    batch counter, run multi-JVM (≥3 executor entries: driver + 2) and
   *    leave the offset log pinned to shuffle 8, the pinning that keeps
   *    state placement stable.
+  *  - `spill`: a starved heap (run at -Xmx2g or 3g, as a 1-4 GB cluster
+  *    core), where spill changes merge orders and combine passes. Each key
+  *    is diffed against a big-heap Verify dump; the run needs disk spill.
+  *  - `tenants`: many sessions on one context. Every key is dumped
+  *    serially, then from `threads` FAIR tenant sessions (racing staging,
+  *    function registration and the conf-scoped keys), and the two diffed.
+  *    Under `local-cluster` two executors die mid-board; one kill must land.
+  *  - `soak`: a long-lived driver. The board `rounds` ≥ 2 times in one JVM
+  *    (heap ≤ 16g: a big heap hides debris); no key may degrade.
   *
   * Each scenario prints `<MODE>PROBE <name> rows= missing= extra=
   * <evidence...> exact=OK|MISMATCH`, where exact means an empty diff over a
-  * non-empty result AND a fault that landed. Exit 1 if a scenario is not
-  * exact, 2 if a run-level fault never landed (loss: no FetchFailed).
+  * non-empty result (tenants and soak: or an empty one) AND a fault that
+  * landed (soak: a key not degraded); the board modes end with
+  * `<MODE>PROBE totals ...`. Exit 1 if a scenario is not exact, 2 if a
+  * run-level fault never landed (loss: no FetchFailed; spill: no disk
+  * spill; tenants under local-cluster: no kill).
   *
   * usage: java <add-opens> -cp "target/scala-2.13/classes:/opt/spark/jars/＊"
   *   graft.FaultProbe retry|loss|crash|topology [srcDir]
-  * (default /root/testdata/sf0.01; the ＊ is a literal star, spelled
-  * fullwidth so a star-slash cannot close this comment). `loss` and
-  * `topology` launch executor JVMs, so SPARK_HOME must point at a Spark
+  *   graft.FaultProbe spill <srcDir> <refDir> [key,key...]
+  *   graft.FaultProbe tenants [srcDir] [threads=8]
+  *   graft.FaultProbe soak [srcDir] [rounds=4]
+  * (default srcDir /root/testdata/sf0.01; the ＊ is a literal star, spelled
+  * fullwidth so a star-slash cannot close this comment). spill's `refDir`
+  * is `graft.Verify <srcDir> <refDir> <keys>` run with a big heap. `loss`
+  * and `topology` launch executor JVMs, so SPARK_HOME must point at a Spark
   * dist; SPARK_GRAFT_MASTER overrides their local-cluster master (loss
   * `local-cluster[2,8,6144]`, topology phase B `local-cluster[2,4,3072]`)
-  * and SPARK_GRAFT_EXEC_MEM their executor heap. `crash` and `topology`
+  * and re-masters `tenants` (default `local[cores]`), and
+  * SPARK_GRAFT_EXEC_MEM sets their executor heap. `crash` and `topology`
   * spawn `graft.FaultProbe child <scenario> <chunkDir> <sinkDir> <ckptDir>
   * <haltAt> <master> <shuffle>` with this JVM's classpath.
   */
@@ -74,21 +93,29 @@ object FaultProbe {
       case Some("loss") => lossMode(srcDir)
       case Some("crash") => crashMode(srcDir)
       case Some("topology") => topologyMode(srcDir)
+      case Some("spill") if args.length >= 3 =>
+        spillMode(srcDir, args(2), args.lift(3).fold(spillKeys)(_.split(",").toSeq))
+      case Some("tenants") => tenantsMode(srcDir, args.lift(2).fold(8)(_.toInt))
+      case Some("soak") => soakMode(srcDir, args.lift(2).fold(4)(_.toInt))
       case Some("child") => child(args.toSeq.tail); 0
       case other => throw new IllegalArgumentException(
-        s"usage: FaultProbe retry|loss|crash|topology [srcDir] (got ${other.getOrElse("nothing")})")
+        "usage: FaultProbe retry|loss|crash|topology [srcDir] | spill <srcDir> <refDir> [keys] | " +
+          s"tenants [srcDir] [threads] | soak [srcDir] [rounds] (got ${other.getOrElse("nothing")})")
     }
     if (code != 0) sys.exit(code)
   }
 
   // ---- verdicts ----
 
-  /** One scenario's verdict. `evidence` shows the fault landed, in print
-    * order; `landed` is its gate. */
+  /** One scenario's verdict (a board mode's scenario is one key).
+    * `evidence` shows the fault landed, or what else the mode measured, in
+    * print order; `landed` is its gate. A result with no rows proves
+    * nothing unless `emptyOk`: a board key whose reference is empty
+    * (setop_except at sf0.01). */
   final case class ScenarioResult(name: String, rows: Long, missing: Long,
                                   extra: Long, evidence: Seq[(String, Any)],
-                                  landed: Boolean) {
-    def exact: Boolean = missing == 0 && extra == 0 && rows > 0 && landed
+                                  landed: Boolean, emptyOk: Boolean = false) {
+    def exact: Boolean = missing == 0 && extra == 0 && (rows > 0 || emptyOk) && landed
     def line(tag: String): String =
       (Seq(tag, name, s"rows=$rows", s"missing=$missing", s"extra=$extra") ++
         evidence.map { case (k, v) => s"$k=$v" } :+
@@ -107,11 +134,23 @@ object FaultProbe {
     ScenarioResult(name, want.count(), m, e, evidence._1, evidence._2)
   }
 
-  /** Print every scenario's line under `tag`; the exit code. `vacuous`
-    * names a run-level fault that never landed. */
+  /** One key's two results as a two-way multiset diff of canonical JSON
+    * rows: set operations reject map-typed columns, and both results come
+    * from the same plan, so their columns are in the same order. */
+  def boardDiff(want: DataFrame, got: DataFrame): (Long, Long) = {
+    def rows(df: DataFrame) = df.selectExpr("to_json(struct(*)) AS js")
+    diffCounts(rows(want), rows(got))
+  }
+
+  /** Print every scenario's line under `tag`, then `<tag> totals k=v ...`
+    * if there are run totals; the exit code. `vacuous` names a run-level
+    * fault that never landed. */
   private[graft] def verdict(tag: String, results: Seq[ScenarioResult],
-                             vacuous: Option[String] = None): Int = {
+                             vacuous: Option[String] = None,
+                             totals: Seq[(String, Any)] = Nil): Int = {
     results.foreach(r => println(r.line(tag)))
+    if (totals.nonEmpty)
+      println((Seq(tag, "totals") ++ totals.map { case (k, v) => s"$k=$v" }).mkString(" "))
     if (!results.forall(_.exact)) {
       System.err.println(s"$tag: a scenario diverged or its fault did not land")
       1
@@ -420,6 +459,170 @@ object FaultProbe {
     if (!T.settle(10000L, pollMs = 100L)((watch.removed.get(), watch.fetchFailed.get())))
       System.err.println("[faultprobe] drain=timeout: removal count may be short")
     watch.removed.get() - before
+  }
+
+  // ---- board modes: spill, tenants and soak ----
+
+  /** Spill's default keys, the board's spill-prone shapes: hash agg, sorts,
+    * multiway SMJ, the staged pair/adjacency and shingle-index builds,
+    * connected components, TF-IDF, an equi-depth histogram. */
+  val spillKeys: Seq[String] = Seq(
+    "agg_groupby_hash", "sort_multikey", "window_rolling_median",
+    "join_multiway_star", "graph_triangle_count", "graph_clustering_coeff",
+    "dedup_ngram_jaccard", "dedup_cluster_components",
+    "text_tfidf_top_terms", "agg_histogram_equidepth", "etl_scd2_intervals",
+    "agg_distinct_rows")
+
+  private def mb(bytes: Long): Long = bytes / 1048576
+
+  /** Each key recomputed, its JVM-local staging included, against its
+    * dump under `refDir`. All of a key's jobs, the diff's too, run in its
+    * Bench job group, so the spill bytes are its own. */
+  private def spillMode(sfDir: String, refDir: String, keys: Seq[String]): Int = {
+    val s = Graft.session("spillprobe")
+    s.sparkContext.setLogLevel("WARN")
+    val col = new Bench.Collector
+    s.sparkContext.addSparkListener(col)
+    try {
+      val queries = SparkEntry.queries
+      val results = keys.map { k =>
+        col.begin(k)
+        val t0 = System.nanoTime()
+        val (rows, (missing, extra)) = Bench.inGroup(s.sparkContext, Bench.Prefix + k) {
+          val ref = s.read.parquet(s"$refDir/$k")
+          (ref.count(), boardDiff(ref, queries(k)(s, sfDir)))
+        }
+        val sec = (System.nanoTime() - t0) / 1e9
+        col.finish(expectPlan = false)
+        if (!col.drained) System.err.println(s"SPILLPROBE $k drain=timeout")
+        val m = col.sums(k)
+        ScenarioResult(k, rows, missing, extra, Seq("diskSpillMb" -> mb(m.spillD.get),
+          "memSpillMb" -> mb(m.spillM.get), "shuffleWriteMb" -> mb(m.shufW.get),
+          "sec" -> T.num(sec, 2)), landed = true)
+      }
+      val disk = keys.map(col.sums(_).spillD.get).sum
+      verdict("SPILLPROBE", results,
+        if (disk > 0) None else Some("zero bytes spilled: the heap was not tight enough"),
+        Seq("heapMb" -> mb(Runtime.getRuntime.maxMemory()), "diskSpillMb" -> mb(disk),
+          "memSpillMb" -> mb(keys.map(col.sums(_).spillM.get).sum)))
+    } finally s.stop()
+  }
+
+  /** The tenant board: `keys` dumped through `root`, then again from
+    * `threads` tenant sessions at once (both by `Verify.dump`, under
+    * `base`), with `land` around the concurrent phase. One result per key:
+    * the board diff of its two dumps, or the error text of a phase that
+    * threw. Also the run totals and whether `land`'s fault landed. */
+  def tenants(root: SparkSession, sfDir: String, keys: Seq[String], threads: Int,
+              base: String, land: (=> Unit) => (Seq[(String, Any)], Boolean) =
+                body => { body; (Nil, true) }): (Seq[ScenarioResult], Seq[(String, Any)], Boolean) = {
+    val t0 = System.nanoTime()
+    val serialErr = Verify.dump(root, sfDir, s"$base/serial", keys).toMap
+    val t1 = System.nanoTime()
+    var (concErr, t2) = (Map.empty[String, String], t1)
+    val (evidence, landed) = land {
+      concErr = Verify.dump(root, sfDir, s"$base/conc", keys, threads).toMap
+      t2 = System.nanoTime()
+    }
+    val results = keys.map { k =>
+      serialErr.get(k).map("serial " + _).orElse(concErr.get(k)) match {
+        case Some(e) => // nothing compared: never exact
+          ScenarioResult(k, 0, 0, 0, Seq("error" -> e.replaceAll("\\s+", " ")), landed = true)
+        case None =>
+          val want = root.read.parquet(s"$base/serial/$k")
+          val (missing, extra) = boardDiff(want, root.read.parquet(s"$base/conc/$k"))
+          ScenarioResult(k, want.count(), missing, extra, Nil, landed = true, emptyOk = true)
+      }
+    }
+    (results, Seq("threads" -> threads, "serialSec" -> T.num((t1 - t0) / 1e9, 1),
+      "concurrentSec" -> T.num((t2 - t1) / 1e9, 1)) ++ evidence, landed)
+  }
+
+  /** Spot reclaim during multi-tenant serving: `kill -9` one executor JVM
+    * once ≥40 key dirs under `concDir` have committed, and again at ≥250
+    * (each wait bounded at 180 s). The killer is stopped when the board
+    * drains and joined before its count is read. */
+  private def tenantKills(root: SparkSession, concDir: String)
+                         (body: => Unit): (Seq[(String, Any)], Boolean) = {
+    val watch = new ExecutorWatch
+    root.sparkContext.addSparkListener(watch)
+    val kills = new AtomicInteger(0)
+    def dumped: Int = Option(new java.io.File(concDir).listFiles())
+      .map(_.count(d => new java.io.File(d, "_SUCCESS").exists())).getOrElse(0)
+    val killer = new Thread(() =>
+      try for (threshold <- Seq(40, 250)) {
+        val deadline = System.currentTimeMillis() + 180000
+        while (dumped < threshold && System.currentTimeMillis() < deadline) Thread.sleep(200)
+        if (!Thread.currentThread.isInterrupted)
+          killOneExecutor(root.sparkContext.applicationId).foreach { pid =>
+            kills.incrementAndGet()
+            System.err.println(s"[tenantsprobe] killed executor pid=$pid at $dumped dumps")
+          }
+        Thread.sleep(3000) // let the master relaunch before the next wait
+      } catch { case _: InterruptedException => })
+    killer.setDaemon(true)
+    killer.start()
+    try body finally { killer.interrupt(); killer.join(60000) }
+    require(!killer.isAlive, "the executor killer did not stop within 60000ms")
+    // the listener bus is asynchronous: let the removal count settle
+    T.settle(10000L, pollMs = 100L)(watch.removed.get())
+    (Seq("kills" -> kills.get(), "executorsRemoved" -> watch.removed.get()),
+      kills.get() >= 1 && watch.removed.get() >= 1)
+  }
+
+  /** Every key on the tenant board; SPARK_GRAFT_MASTER may re-master it
+    * onto executor JVMs, and then [[tenantKills]] runs. */
+  private def tenantsMode(sfDir: String, threads: Int): Int = {
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${Graft.defaultCores}]")
+    val root = Graft.session("tenantsprobe", master = Some(master),
+      conf = Map("spark.scheduler.mode" -> "FAIR", "spark.executor.memory" -> "8g"))
+    root.sparkContext.setLogLevel("WARN")
+    try {
+      val base = T.tempDir("graft_tenants_")
+      val keys = SparkEntry.queries.keys.toSeq.sorted
+      val (results, totals, landed) =
+        if (master.startsWith("local-cluster"))
+          tenants(root, sfDir, keys, threads, base, tenantKills(root, s"$base/conc"))
+        else tenants(root, sfDir, keys, threads, base)
+      verdict("TENANTSPROBE", results, Option.when(!landed)("no executor kill landed"), totals)
+    } finally root.stop()
+  }
+
+  /** A count() per key per round; pinned RDDs and storage MB after each
+    * round (a climb is a leak before walls move). A key is degraded when
+    * its last round is ≥ 2× and ≥ 0.5 s over round 2 (round 1 warms up;
+    * tiny keys jitter). */
+  private def soakMode(sfDir: String, rounds: Int): Int = {
+    require(rounds >= 2, s"rounds must be at least 2, got $rounds")
+    val s = Graft.session("soakprobe")
+    s.sparkContext.setLogLevel("WARN")
+    try {
+      val queries = SparkEntry.queries
+      val keys = queries.keys.toSeq.sorted
+      val rows = scala.collection.mutable.Map[String, Long]()
+      val wall = Array.fill(rounds)(scala.collection.mutable.Map[String, Double]())
+      (0 until rounds).foreach { r =>
+        keys.foreach { k =>
+          val t0 = System.nanoTime()
+          rows(k) = queries(k)(s, sfDir).count()
+          wall(r)(k) = (System.nanoTime() - t0) / 1e9
+        }
+        val storage = s.sparkContext.getExecutorMemoryStatus.values
+          .map { case (max, free) => max - free }.sum
+        println(s"SOAKPROBE round=${r + 1} total=${T.num(wall(r).values.sum, 1)} " +
+          s"pinnedRdds=${s.sparkContext.getPersistentRDDs.size} storageUsed=${mb(storage)}MB")
+      }
+      val (round2, last) = (wall(1), wall(rounds - 1))
+      val results = keys.map { k =>
+        val (b, l) = (round2(k), last(k))
+        ScenarioResult(k, rows(k), 0, 0,
+          Seq("round2" -> T.num(b, 2), "last" -> T.num(l, 2)),
+          landed = !(l >= 2 * b && l - b >= 0.5), emptyOk = true)
+      }
+      verdict("SOAKPROBE", results, totals = Seq("rounds" -> rounds,
+        "degraded" -> results.count(!_.landed),
+        "totalRound2" -> T.num(round2.values.sum, 1), "totalLast" -> T.num(last.values.sum, 1)))
+    } finally s.stop()
   }
 
   // ---- streaming children: crash and topology ----

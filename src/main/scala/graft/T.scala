@@ -307,7 +307,8 @@ object T {
     * executor loader and every graft lambda/typed-aggregator/custom
     * operator fails task-side with SerializedLambda ClassCastExceptions
     * (only the keys needing app classes on executors — the r16
-    * ConcurrencyProbe multi-JVM run found it; pure-Catalyst keys mask it). */
+    * multi-tenant probe's multi-JVM run found it; pure-Catalyst keys mask
+    * it). */
   def absClassPath: String =
     sys.props("java.class.path").split(java.io.File.pathSeparator)
       .map(p => new java.io.File(p).getAbsolutePath)

@@ -67,8 +67,8 @@ class BenchSpec extends AnyFunSuite {
 
   test("the whole board runs, and no key's plan carries a 100 TB red flag") {
     val out = Paths.get(T.tempDir("bench_board_"))
-    // a key result an earlier suite cached (SevenSpec does) would answer
-    // that key from an InMemoryRelation and hide its plan from the audit
+    // a key result an earlier suite left cached would answer that key
+    // from an InMemoryRelation and hide its plan from the audit
     s.catalog.clearCache()
     // a child session: no key's conf or view outlives this test
     val errors = Bench.run(s.newSession(), sf, SparkEntry.queries.toSeq, 1, out.toString)
@@ -112,8 +112,8 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("the JSON writer keeps quotes, backslashes and newlines of an error text parseable") {
-    // analysis errors routinely carry newlines; ConcurrencyProbe's line
-    // holds them verbatim in its "errors" map
+    // analysis errors routinely carry newlines, and a record or run.json
+    // holds them verbatim
     val err = "AnalysisException: [UNRESOLVED_COLUMN] \"x\" not found\n  at C:\\tmp\t;"
     val line = Bench.obj(Seq("probe" -> "concurrency", "n_errors" -> 1,
       "diff_keys" -> Seq("k\"1"), "errors" -> ListMap("k\"1" -> err)))

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the shared harness pieces: the session factory's conf, the
-  * bounded listener drain, Bench's plan-tree exchange count and SoakProbe's
-  * round check. */
+  * bounded listener drain, Bench's plan-tree exchange count and the round
+  * check of FaultProbe's soak mode. */
 class HarnessSpec extends AnyFunSuite {
   private val s = TestSpark.spark
 
@@ -69,10 +69,11 @@ class HarnessSpec extends AnyFunSuite {
     assert(c("Exchange") - c("ReusedExchange") - c("BroadcastExchange") > 1)
   }
 
-  test("SoakProbe rejects fewer than 2 rounds before it runs a board") {
+  test("FaultProbe soak rejects fewer than 2 rounds before it runs a board") {
     // its verdict compares the last round with round 2, which one round
     // lacks; the check must fire before the board runs, not after
-    val e = intercept[IllegalArgumentException](SoakProbe.main(Array(TestSpark.sf, "1")))
+    val e = intercept[IllegalArgumentException](
+      FaultProbe.main(Array("soak", TestSpark.sf, "1")))
     assert(e.getMessage.contains("rounds must be at least 2"))
   }
 }

@@ -1,23 +1,43 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property pins for the §2-T (round 7) group, beyond the DuckDB oracle:
   * structural invariants that would catch a silently-wrong formulation the
   * hash gate can't distinguish from a both-engines-wrong one. */
-class SevenSpec extends AnyFunSuite {
+class SevenSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val s = TestSpark.spark
   private val sf = TestSpark.sf
+  private val everCached = ArrayBuffer[DataFrame]()
+
+  /** `body` over `df` cached, unpersisted when it ends: a later suite that
+    * builds the same key must run its plan, not read this InMemoryRelation. */
+  private def cached(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    everCached += df
+    try body(df.cache()) finally df.unpersist(blocking = true)
+  }
+
+  override def afterAll(): Unit =
+    try {
+      val left = everCached.filter(_.storageLevel != StorageLevel.NONE)
+      assert(left.isEmpty, s"${left.size} cached results outlive SevenSpec")
+    } finally super.afterAll()
 
   test("stat_chi2_independence: contributions non-negative, expected sums to n") {
-    val r = SparkEntry.queries("stat_chi2_independence")(s, sf).cache()
-    assert(r.filter(col("contrib") < 0).count() == 0)
-    // Σ observed == Σ expected (both equal n) up to the ppm rounding of
-    // each of the ≤35 cells
-    val Seq(o, e) = r.agg(sum("o"), sum("expected")).head().toSeq
-      .map(v => BigDecimal(v.toString))
-    assert((o - e).abs < BigDecimal(35) * BigDecimal("0.000001") * o)
+    cached(SparkEntry.queries("stat_chi2_independence")(s, sf)) { r =>
+      assert(r.filter(col("contrib") < 0).count() == 0)
+      // Σ observed == Σ expected (both equal n) up to the ppm rounding of
+      // each of the ≤35 cells
+      val Seq(o, e) = r.agg(sum("o"), sum("expected")).head().toSeq
+        .map(v => BigDecimal(v.toString))
+      assert((o - e).abs < BigDecimal(35) * BigDecimal("0.000001") * o)
+    }
   }
 
   test("stat_benford_digit: shares sum to 1 within per-digit rounding") {
@@ -28,46 +48,51 @@ class SevenSpec extends AnyFunSuite {
   }
 
   test("ml_naive_bayes_classify: one prediction per target doc, a real source") {
-    val r = SparkEntry.queries("ml_naive_bayes_classify")(s, sf).cache()
-    assert(r.count() == r.select("doc_id").distinct().count())
-    val sources = T.t(s, sf, "documents").select("source").distinct()
-    assert(r.join(sources, r("pred_source") === sources("source"), "left_anti")
-      .count() == 0)
-    // log-probabilities are negative
-    assert(r.filter(col("score_micronats") >= 0).count() == 0)
+    cached(SparkEntry.queries("ml_naive_bayes_classify")(s, sf)) { r =>
+      assert(r.count() == r.select("doc_id").distinct().count())
+      val sources = T.t(s, sf, "documents").select("source").distinct()
+      assert(r.join(sources, r("pred_source") === sources("source"), "left_anti")
+        .count() == 0)
+      // log-probabilities are negative
+      assert(r.filter(col("score_micronats") >= 0).count() == 0)
+    }
   }
 
   test("graph_triangle_count: degree orientation == naive a<b formulation") {
     val li = T.t(s, sf, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    val e0 = li.select(col("l_orderkey").as("k"), col("l_partkey").as("pa"))
+    val pairs = li.select(col("l_orderkey").as("k"), col("l_partkey").as("pa"))
       .join(li.select(col("l_orderkey").as("k"), col("l_partkey").as("pb")), "k")
-      .filter(col("pa") < col("pb")).select("pa", "pb").distinct().cache()
-    val naive = e0.as("e1")
-      .join(e0.as("e2"), col("e2.pa") === col("e1.pa") && col("e2.pb") > col("e1.pb"))
-      .join(e0.as("e3"), col("e3.pa") === col("e1.pb") && col("e3.pb") === col("e2.pb"))
-      .count()
-    val graded = SparkEntry.queries("graph_triangle_count")(s, sf)
-      .head().getAs[Long]("n_triangles")
-    assert(graded == naive)
+      .filter(col("pa") < col("pb")).select("pa", "pb").distinct()
+    cached(pairs) { e0 =>
+      val naive = e0.as("e1")
+        .join(e0.as("e2"), col("e2.pa") === col("e1.pa") && col("e2.pb") > col("e1.pb"))
+        .join(e0.as("e3"), col("e3.pa") === col("e1.pb") && col("e3.pb") === col("e2.pb"))
+        .count()
+      val graded = SparkEntry.queries("graph_triangle_count")(s, sf)
+        .head().getAs[Long]("n_triangles")
+      assert(graded == naive)
+    }
   }
 
   test("multimodal_shard_manifest: docs and bytes partition the corpus") {
-    val r = SparkEntry.queries("multimodal_shard_manifest")(s, sf).cache()
-    val docs = T.t(s, sf, "documents")
-    assert(r.agg(sum("n_docs")).head().getLong(0) == docs.count())
-    assert(r.agg(sum("n_bytes")).head().getLong(0) ==
-      docs.agg(sum("n_chars")).head().getLong(0))
-    // shard indexes are dense from 0 within each source
-    val bad = r.groupBy("source")
-      .agg(max("shard_ix").as("mx"), count(lit(1)).as("c"))
-      .filter(col("mx") =!= col("c") - 1)
-    assert(bad.count() == 0)
+    cached(SparkEntry.queries("multimodal_shard_manifest")(s, sf)) { r =>
+      val docs = T.t(s, sf, "documents")
+      assert(r.agg(sum("n_docs")).head().getLong(0) == docs.count())
+      assert(r.agg(sum("n_bytes")).head().getLong(0) ==
+        docs.agg(sum("n_chars")).head().getLong(0))
+      // shard indexes are dense from 0 within each source
+      val bad = r.groupBy("source")
+        .agg(max("shard_ix").as("mx"), count(lit(1)).as("c"))
+        .filter(col("mx") =!= col("c") - 1)
+      assert(bad.count() == 0)
+    }
   }
 
   test("join_interval_overlap: every matched order contributes >= 1 day") {
-    val r = SparkEntry.queries("join_interval_overlap")(s, sf).cache()
-    assert(r.filter(col("overlap_days") < col("n_orders")).count() == 0)
-    assert(r.count() == 8)
+    cached(SparkEntry.queries("join_interval_overlap")(s, sf)) { r =>
+      assert(r.filter(col("overlap_days") < col("n_orders")).count() == 0)
+      assert(r.count() == 8)
+    }
   }
 
   test("etl_merge_upsert_matrix: classes partition the union of snapshot keys") {
@@ -84,12 +109,13 @@ class SevenSpec extends AnyFunSuite {
   }
 
   test("vector_matryoshka_prefix_topk: 5 ranked rows per query, sims in [-1,1]") {
-    val r = SparkEntry.queries("vector_matryoshka_prefix_topk")(s, sf).cache()
-    val perQ = r.groupBy("q_id").agg(count(lit(1)).as("c"),
-      min("rnk").as("lo"), max("rnk").as("hi"))
-    assert(perQ.filter(col("c") =!= 5 || col("lo") =!= 1 || col("hi") =!= 5)
-      .count() == 0)
-    assert(r.filter(abs(col("sim")) > 1.0).count() == 0)
+    cached(SparkEntry.queries("vector_matryoshka_prefix_topk")(s, sf)) { r =>
+      val perQ = r.groupBy("q_id").agg(count(lit(1)).as("c"),
+        min("rnk").as("lo"), max("rnk").as("hi"))
+      assert(perQ.filter(col("c") =!= 5 || col("lo") =!= 1 || col("hi") =!= 5)
+        .count() == 0)
+      assert(r.filter(abs(col("sim")) > 1.0).count() == 0)
+    }
   }
 
   test("agg_kmv_distinct: estimate within the sketch's error envelope") {
@@ -101,21 +127,23 @@ class SevenSpec extends AnyFunSuite {
   }
 
   test("ts_changepoint_cusum: S_k telescopes to zero, exactly one changepoint") {
-    val r = SparkEntry.queries("ts_changepoint_cusum")(s, sf).cache()
-    // S_n = n·total − n·total = 0 at the last day by construction
-    val lastSk = r.orderBy(col("d").desc).head().getAs[Long]("sk")
-    assert(lastSk == 0L)
-    assert(r.filter(col("is_changepoint") === 1).count() == 1)
+    cached(SparkEntry.queries("ts_changepoint_cusum")(s, sf)) { r =>
+      // S_n = n·total − n·total = 0 at the last day by construction
+      val lastSk = r.orderBy(col("d").desc).head().getAs[Long]("sk")
+      assert(lastSk == 0L)
+      assert(r.filter(col("is_changepoint") === 1).count() == 1)
+    }
   }
 
   test("etl_late_arriving_dim: UNKNOWN rows are exactly the late ones") {
-    val r = SparkEntry.queries("etl_late_arriving_dim")(s, sf).cache()
-    val unk = r.filter(col("seg") === "UNKNOWN").head()
-    assert(unk.getAs[Long]("n_orders") == unk.getAs[Long]("n_late"))
-    assert(r.filter(col("seg") =!= "UNKNOWN" && col("n_late") =!= 0).count() == 0)
-    // totals reconcile with the fact table
-    assert(r.agg(sum("n_orders")).head().getLong(0) ==
-      T.t(s, sf, "orders").count())
+    cached(SparkEntry.queries("etl_late_arriving_dim")(s, sf)) { r =>
+      val unk = r.filter(col("seg") === "UNKNOWN").head()
+      assert(unk.getAs[Long]("n_orders") == unk.getAs[Long]("n_late"))
+      assert(r.filter(col("seg") =!= "UNKNOWN" && col("n_late") =!= 0).count() == 0)
+      // totals reconcile with the fact table
+      assert(r.agg(sum("n_orders")).head().getLong(0) ==
+        T.t(s, sf, "orders").count())
+    }
   }
 
   test("stat_runs_test: runs bounded by days, signs partition the series") {
@@ -144,16 +172,18 @@ class SevenSpec extends AnyFunSuite {
   }
 
   test("dq_fd_violations: violation counts bounded by key counts") {
-    val r = SparkEntry.queries("dq_fd_violations")(s, sf).cache()
-    assert(r.count() == 3)
-    assert(r.filter(col("n_violating") > col("n_keys")).count() == 0)
-    assert(r.filter(col("max_fanout") < 1).count() == 0)
+    cached(SparkEntry.queries("dq_fd_violations")(s, sf)) { r =>
+      assert(r.count() == 3)
+      assert(r.filter(col("n_violating") > col("n_keys")).count() == 0)
+      assert(r.filter(col("max_fanout") < 1).count() == 0)
+    }
   }
 
   test("ts_autocorr_lag: coefficients in [-1,1], both lags present") {
-    val r = SparkEntry.queries("ts_autocorr_lag")(s, sf).cache()
-    assert(r.select("k").collect().map(_.getInt(0)).toSet == Set(1, 7))
-    assert(r.filter(abs(col("autocorr")) > 1.0).count() == 0)
+    cached(SparkEntry.queries("ts_autocorr_lag")(s, sf)) { r =>
+      assert(r.select("k").collect().map(_.getInt(0)).toSet == Set(1, 7))
+      assert(r.filter(abs(col("autocorr")) > 1.0).count() == 0)
+    }
   }
 
   test("ts_time_weighted_avg: TWAP bounded by per-type min/max value") {
@@ -166,27 +196,30 @@ class SevenSpec extends AnyFunSuite {
   }
 
   test("etl_partition_advisor: rec_files is the exact ceiling of rows/2000") {
-    val r = SparkEntry.queries("etl_partition_advisor")(s, sf).cache()
-    val bad = r.filter(
-      col("rec_files") =!= ceil(col("n_rows").cast("double") / 2000).cast("long"))
-    assert(bad.count() == 0)
-    assert(r.agg(sum("n_rows")).head().getLong(0) == T.t(s, sf, "events").count())
+    cached(SparkEntry.queries("etl_partition_advisor")(s, sf)) { r =>
+      val bad = r.filter(
+        col("rec_files") =!= ceil(col("n_rows").cast("double") / 2000).cast("long"))
+      assert(bad.count() == 0)
+      assert(r.agg(sum("n_rows")).head().getLong(0) == T.t(s, sf, "events").count())
+    }
   }
 
   test("dedup_prefix_blocked: dup counts consistent, only multi-doc blocks") {
-    val r = SparkEntry.queries("dedup_prefix_blocked")(s, sf).cache()
-    assert(r.filter(col("n_docs") < 2).count() == 0)
-    assert(r.filter(col("n_dups") =!= col("n_docs") - col("n_distinct")).count() == 0)
-    assert(r.filter(col("n_distinct") > col("n_docs")).count() == 0)
+    cached(SparkEntry.queries("dedup_prefix_blocked")(s, sf)) { r =>
+      assert(r.filter(col("n_docs") < 2).count() == 0)
+      assert(r.filter(col("n_dups") =!= col("n_docs") - col("n_distinct")).count() == 0)
+      assert(r.filter(col("n_distinct") > col("n_docs")).count() == 0)
+    }
   }
 
   test("agg_frequent_pairs: support consistent with pair count") {
-    val r = SparkEntry.queries("agg_frequent_pairs")(s, sf).cache()
-    assert(r.count() == 20)
-    val nOrders = T.t(s, sf, "orders").count()
-    // support ppm reproduces c/n_orders at 6dp half-up
-    val bad = r.filter(
-      abs(col("support") * nOrders - col("c")) > lit(nOrders) * 5e-7 + 1e-9)
-    assert(bad.count() == 0)
+    cached(SparkEntry.queries("agg_frequent_pairs")(s, sf)) { r =>
+      assert(r.count() == 20)
+      val nOrders = T.t(s, sf, "orders").count()
+      // support ppm reproduces c/n_orders at 6dp half-up
+      val bad = r.filter(
+        abs(col("support") * nOrders - col("c")) > lit(nOrders) * 5e-7 + 1e-9)
+      assert(bad.count() == 0)
+    }
   }
 }
