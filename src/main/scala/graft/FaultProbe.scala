@@ -57,8 +57,9 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   *    serially, then from `threads` FAIR tenant sessions (racing staging,
   *    function registration and the conf-scoped keys), and the two diffed.
   *    Under `local-cluster` two executors die mid-board; one kill must land.
-  *  - `soak`: a long-lived driver. The board `rounds` ≥ 2 times in one JVM
-  *    (heap ≤ 16g: a big heap hides debris); no key may degrade.
+  *  - `soak`: a long-lived driver. The board `rounds` ≥ 3 times in one JVM
+  *    (heap ≤ 16g: a big heap hides debris); no key may degrade between
+  *    round 2 and the last round, which must be a later one.
   *
   * Each scenario prints `<MODE>PROBE <name> rows= missing= extra=
   * <evidence...> exact=OK|MISMATCH`, where exact means an empty diff over a
@@ -591,9 +592,10 @@ object FaultProbe {
   /** A count() per key per round; pinned RDDs and storage MB after each
     * round (a climb is a leak before walls move). A key is degraded when
     * its last round is ≥ 2× and ≥ 0.5 s over round 2 (round 1 warms up;
-    * tiny keys jitter). */
+    * tiny keys jitter). Three rounds at least: with two, round 2 IS the
+    * last round and the comparison holds by construction. */
   private def soakMode(sfDir: String, rounds: Int): Int = {
-    require(rounds >= 2, s"rounds must be at least 2, got $rounds")
+    require(rounds >= 3, s"rounds must be at least 3, got $rounds")
     val s = Graft.session("soakprobe")
     s.sparkContext.setLogLevel("WARN")
     try {

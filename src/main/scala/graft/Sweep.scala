@@ -335,9 +335,8 @@ object Sweep {
       val planted = base.filter(col("doc_id") % plantMod === 0)
         .withColumn("toks", split(col("text"), " "))
         .filter(size(col("toks")) >= 3)
-        .withColumn("s", size(array_distinct(expr(
-          """transform(sequence(0, size(toks)-3),
-            |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))""".stripMargin))))
+        .withColumn("s", size(array_distinct(
+          graft.api.Pipelines.shingleArray(col("toks")))))
         .filter(col("s") >= 9)
         .withColumn("k", greatest(lit(1), floor(col("s") / 9).cast("int")))
         .select(

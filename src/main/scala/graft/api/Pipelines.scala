@@ -12,9 +12,11 @@ import org.apache.spark.sql.types._
   * broadcast where provably small) that scales with partitioning, not
   * driver memory.
   *
-  * Parity with the graded inventory is pinned by PipelinesSpec: each
-  * function reproduces the corresponding fixture query's result on the
-  * fixture tables.
+  * Each algorithm is written once, here: the graded keys that serve the
+  * same operator (dedup family, k-core, sessionization, packing, top-k,
+  * sketches) keep only their fixture selection, column shaping and final
+  * order and call these functions. PipelinesSpec pins each function to
+  * its key on the fixture tables.
   */
 object Pipelines {
 
@@ -27,6 +29,15 @@ object Pipelines {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
+  /** The n-token shingles of a token-array column, one per start position
+    * (repeats kept): element i is tokens i..i+n-1 joined by one space — the
+    * one shingle definition every shingle consumer (graded keys, staged
+    * indexes, sweeps) builds on. Keep only rows with `size(toks) >= n`: on a
+    * shorter array the position sequence runs backwards. */
+  def shingleArray(toks: Column, n: Int = 3): Column =
+    transform(sequence(lit(0), size(toks) - n), i =>
+      concat_ws(" ", (0 until n).map(j => toks(if (j == 0) i else i + j)): _*))
+
   /** Distinct n-token shingles per document: (id, shingle) rows — the
     * inverted index every shingle-based dedup consumes. At scale, persist
     * this once (parquet) and share it across consumers. */
@@ -34,199 +45,64 @@ object Pipelines {
     df.withColumn("_toks", split(col(textCol), " "))
       .filter(size(col("_toks")) >= n)
       .select(col(idCol).as("doc_id"),
-        explode(array_distinct(expr(
-          s"transform(sequence(0, size(_toks)-$n), i -> concat_ws(' ', ${(0 until n).map(j => s"_toks[i+$j]").mkString(", ")}))")))
-          .as("sh"))
+        explode(array_distinct(shingleArray(col("_toks"), n))).as("sh"))
 
-  /** Exact shingle-Jaccard near-duplicate pairs (ia < ib, jac ≥ threshold)
-    * via the inverted-index self-join, with df≥2 pruning (a shingle unique
-    * to one doc can never contribute to a pair).
-    *
-    * `prefixFilter = true` switches candidate generation to SSJoin-style
-    * prefix filtering with exact per-candidate verification — recall-exact
-    * by the prefix lemma ([[prefixCandidates]]), identical output. The
-    * DEFAULT stays the plain index-agg stream because the trade is
-    * corpus-geometry-dependent and was MEASURED the other way on the
-    * fixture family (r15, BASELINE.md): prefix filtering cuts the pair
-    * stream Σ C(df,2) ~10×, but where co-sharing is dominated by
-    * single-rare-shingle overlaps between dissimilar docs the surviving
-    * candidates (~10³ per true pair) each pay an O(kA+kB) exact verify
-    * that exceeds the count-only stream they replaced — 2-3× slower at
-    * sf0.1/sf1/sf10. Turn it on for near-dup-DENSE corpora (mirror
-    * dumps, crawl snapshots) where candidates ≈ true pairs. */
-  def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, threshold: Double = 0.8,
-                   dfCap: Int = 10000,
-                   prefixFilter: Boolean = false): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // doc-sized; reused three times
-    // df ∈ [2, dfCap]: singletons can't pair (exact prune); the hot-shingle
-    // ceiling bounds self-join fan-out at dfCap² per shingle — a pair above
-    // `threshold` survives unless essentially its whole overlap is
-    // corpus-viral stop-shingles (the banding trade, made explicit)
-    val keptIdx = sh.join(
-      sh.groupBy("sh").agg(count(lit(1)).as("df"))
+  /** The df-bounded inverted index: rows of `idx` (doc_id, sh[, w]) whose
+    * shingle occurs in between 2 and `dfCap` documents. A shingle unique to
+    * one document can never contribute to a pair (exact prune); the
+    * hot-shingle ceiling bounds the self-join fan-out at dfCap² per
+    * shingle — a pair above the threshold survives unless essentially its
+    * whole overlap is corpus-viral stop-shingles (the banding trade, made
+    * explicit; docs/API.md and DedupSpec pin the downward bias). */
+  private def dfBounded(idx: DataFrame, dfCap: Int): DataFrame =
+    idx.join(
+      idx.groupBy("sh").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= dfCap), "sh")
-      .localCheckpoint(false) // reused (df-order prefix / both join sides); at
-      // real scale stage this to parquet instead (shingle_df pattern)
-    val common =
-      if (prefixFilter) {
-        // J ≥ τ ⟹ c ≥ τ·max(na, nb) (since c(1+τ) ≥ τ(na+nb), nb ≥ c):
-        // each doc's minimum qualifying overlap is ⌈τ·n⌉; the 1e-6 slack
-        // only ever LENGTHENS the prefix (recall-safe for float τ·n)
-        val cmin = (nn: Column) =>
-          ceil(nn * lit(threshold) - lit(1e-6)).cast(LongType)
-        val cand = prefixCandidates(keptIdx, sizes, cmin, weighted = false)
-        candidateCommonCounts(keptIdx, cand, weighted = false)
-      } else {
-        val shJ = keptIdx.select("doc_id", "sh")
-        shJ.select(col("doc_id").as("ia"), col("sh"))
-          .join(shJ.select(col("doc_id").as("ib"), col("sh").as("sh2")),
-            col("sh") === col("sh2") && col("ia") < col("ib"))
-          .groupBy("ia", "ib").agg(count(lit(1)).as("c"))
-      }
-    common
+      .localCheckpoint(false) // both sides of the self-join read it
+
+  /** Document pairs (ia < ib) that share a token of the inverted index
+    * `idx` — (doc_id, `token`) rows, one per distinct (document, token),
+    * plus a multiplicity `w` for the weighted form — with their overlap
+    * `c` (shared tokens, or Σ min(wA, wB) when `idx` has `w`) and both
+    * documents' sizes `na`/`nb` from `sizes` (doc_id, n). One self-join on
+    * the token column, one aggregate per pair, two size joins: the exact
+    * count-only stream behind every inverted-index similarity (Jaccard,
+    * weighted Jaccard, containment); each caller applies its own
+    * threshold. The token column is the shingle string for ad-hoc inputs
+    * (no dictionary shuffle) or the staged long surrogate `shid` of the
+    * graded indexes (8-byte exchange rows instead of ~30-byte strings). */
+  private[graft] def indexOverlaps(idx: DataFrame, token: String,
+                                   sizes: DataFrame): DataFrame = {
+    val w = if (idx.columns.contains("w")) Some(col("w")) else None
+    def side(id: String, t: String, wc: String) =
+      idx.select(Seq(col("doc_id").as(id), col(token).as(t)) ++ w.map(_.as(wc)): _*)
+    side("ia", "_ta", "_wa")
+      .join(side("ib", "_tb", "_wb"), col("_ta") === col("_tb") && col("ia") < col("ib"))
+      .groupBy("ia", "ib")
+      .agg(w.fold(count(lit(1)))(_ => sum(least(col("_wa"), col("_wb")))).as("c"))
       .join(sizes.select(col("doc_id").as("ia"), col("n").as("na")), "ia")
       .join(sizes.select(col("doc_id").as("ib"), col("n").as("nb")), "ib")
+  }
+
+  /** Jaccard ≥ `threshold` pairs (ia, ib, jac) over an inverted index — see
+    * [[indexOverlaps]]; shared by [[nearDupPairs]] and the graded
+    * exact-Jaccard ground truth. */
+  private[graft] def jaccardPairs(idx: DataFrame, token: String,
+                                  sizes: DataFrame, threshold: Double): DataFrame =
+    indexOverlaps(idx, token, sizes)
       .withColumn("jac", col("c").cast(DoubleType) / (col("na") + col("nb") - col("c")))
       .filter(col("jac") >= threshold)
       .select("ia", "ib", "jac")
-  }
 
-  /** Prefix-filtered candidate pairs over a df-bounded inverted index —
-    * the SSJoin/All-Pairs/PPJoin prefix lemma: under ONE global shingle
-    * order, any pair whose (capped) common count reaches `cminOfN(n)` on
-    * BOTH endpoints must share a shingle inside both docs' prefixes, where
-    * a doc's prefix is the shortest head (in global order) of its kept
-    * rows whose weight leaves less than cmin in the tail. Only prefix rows
-    * enter the candidate self-join, so its fan-out is Σ C(df_prefix, 2)
-    * instead of Σ C(df, 2) — at a Jaccard-0.8 operating point the prefix
-    * is ~(1−τ/(1+…))·k ≈ 20% of each doc, and the rare-first order
-    * (df asc, then shingle) puts the least-colliding shingles there.
-    * Exact: candidates are a superset of every qualifying pair; callers
-    * recompute the true overlap via [[candidateCommonCounts]].
-    *
-    * keptIdx: (doc_id, sh, df[, w]) — the df-bounded index (w = per-doc
-    * multiset count when `weighted`); sizes: (doc_id, n) — FULL sizes (the
-    * threshold's denominator counts un-kept shingles too); cminOfN(n) =
-    * the smallest overlap a qualifying pair involving a size-n doc can
-    * carry. Proof of the weighted form: if no common shingle sits in A's
-    * prefix, every common shingle is in A's tail, so
-    * Σ min(wA,wB) ≤ tail weight ≤ cmin−1 < cmin. */
-  private[graft] def prefixCandidates(keptIdx: DataFrame, sizes: DataFrame,
-                                      cminOfN: Column => Column,
-                                      weighted: Boolean): DataFrame = {
-    val wc: Column = if (weighted) col("w") else lit(1L)
-    val ord = Window.partitionBy("doc_id").orderBy(col("df"), col("sh"))
-    // materialize the prefix ONCE (localCheckpoint): it enters the
-    // candidate self-join on BOTH sides, and an unmaterialized plan
-    // re-executes the index scan + both windows per side (the 14-window
-    // plan this replaced). The prefix is ~(1−τ/(1+τ)) of the kept index.
-    val pre = keptIdx
-      .withColumn("_cum", sum(wc).over(ord) - wc) // exclusive running weight
-      .withColumn("_kw", sum(wc).over(Window.partitionBy("doc_id")))
-      .join(sizes, "doc_id")
-      .filter(col("_cum") <= col("_kw") - cminOfN(col("n")))
-      .select("doc_id", "sh")
-      .localCheckpoint(false)
-    // candidates feed the verify stage twice (a-side join + b-side semi):
-    // checkpoint the pair set — it is output-sized (true pairs + prefix
-    // collisions), the thing the whole operator materializes anyway
-    pre.select(col("doc_id").as("ia"), col("sh"))
-      .join(pre.select(col("doc_id").as("ib"), col("sh").as("_sh2")),
-        col("sh") === col("_sh2") && col("ia") < col("ib"))
-      .select("ia", "ib").distinct()
-      .localCheckpoint(false)
-  }
-
-  /** Containment's asymmetric prefix filter: C(A,B) = c/min(na,nb) ≥ τ
-    * bounds c only through the SMALLER side (c ≥ ⌈τ·min(na,nb)⌉ says
-    * nothing about the larger doc's size), so the prefix lemma applies to
-    * the (n, id)-lex smaller endpoint only and the larger side must stay
-    * fully indexed: candidates = smaller-side prefix ⋈ full kept index. */
-  private[graft] def prefixCandidatesContainment(
-      keptIdx: DataFrame, sizes: DataFrame,
-      cminOfN: Column => Column): DataFrame = {
-    val ord = Window.partitionBy("doc_id").orderBy(col("df"), col("sh"))
-    val pre = keptIdx
-      .withColumn("_r", row_number().over(ord))
-      .withColumn("_ka", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .join(sizes, "doc_id")
-      .filter(col("_r") <= col("_ka") - cminOfN(col("n")) + lit(1))
-      .select(col("doc_id").as("_pid"), col("sh").as("_psh"),
-        col("n").as("_pn"))
-      .localCheckpoint(false) // see prefixCandidates: one window pass, not two
-    val full = keptIdx.join(sizes, "doc_id")
-      .select(col("doc_id").as("_fid"), col("sh").as("_fsh"),
-        col("n").as("_fn"))
-    pre.join(full, col("_psh") === col("_fsh") &&
-        (col("_pn") < col("_fn") ||
-          (col("_pn") === col("_fn") && col("_pid") < col("_fid"))))
-      .select(least(col("_pid"), col("_fid")).as("ia"),
-        greatest(col("_pid"), col("_fid")).as("ib"))
-      .distinct()
-      .localCheckpoint(false) // feeds the verify stage twice
-  }
-
-  /** Exact overlap of each candidate pair over the kept index — the
-    * adjacency-array shape (the graph_triangle_count trick), NOT a
-    * per-pair replication join: the kept index collapses to ONE row per
-    * doc (sorted shingle array, or shingle→count map when `weighted`),
-    * candidates take two doc-keyed joins to attach both docs' sets, and
-    * c = |A∩B| (resp. Σ min(wA, wB)) evaluates as one codegen'd
-    * array/map intersection per pair. The replication alternative
-    * (index ⋈ cand per side, then re-agg) shuffles Σ_cand(kA+kB) rows —
-    * measured 6.3 s vs this shape's sub-second at sf0.1 with 119 k
-    * candidates (r15 forensics). The doc-array relation is doc-sized;
-    * AQE broadcasts it under the threshold and shuffles on the doc key
-    * past it — never a data-sized replication. */
-  private[graft] def candidateCommonCounts(keptIdx: DataFrame,
-                                           cand: DataFrame,
-                                           weighted: Boolean): DataFrame = {
-    // Intersect LONG surrogate ids, not 3-token strings: |A∩B| and
-    // Σ min(wA,wB) are invariant under any injective relabeling, and the
-    // candidate join must shuffle one side's doc set attached per pair —
-    // long arrays are ~3× smaller and free of per-element object churn
-    // (string-array rows through this exchange were the sf1 GC term).
-    // Staged graded indexes carry `shid`; ad-hoc library inputs derive
-    // one here (an extra distinct + join, correct for any corpus).
-    val idx =
-      if (keptIdx.columns.contains("shid")) keptIdx
-      else keptIdx.join(
-        keptIdx.select("sh").distinct()
-          .withColumn("shid", monotonically_increasing_id()), "sh")
-    if (!weighted) {
-      // r17: sort the per-doc id arrays ONCE at collect time (O(k log k)
-      // per doc) so every candidate-pair evaluation is the allocation-free
-      // codegen'd sorted-merge count instead of array_intersect's
-      // per-pair hash-set build — a doc in many pairs pays the sort once
-      // and the merge per pair. |A∩B| identical (unique ids either way).
-      graft.functions.GraftFunctions.register(cand.sparkSession)
-      val docArr = idx.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("shid"))).as("_arr"))
-      cand
-        .join(docArr.select(col("doc_id").as("ia"), col("_arr").as("_aa")), "ia")
-        .join(docArr.select(col("doc_id").as("ib"), col("_arr").as("_ab")), "ib")
-        .select(col("ia"), col("ib"),
-          call_function("sorted_intersect_count",
-            col("_aa"), col("_ab")).as("c"))
-    } else {
-      val docMap = idx.groupBy("doc_id")
-        .agg(map_from_entries(
-          collect_list(struct(col("shid"), col("w")))).as("_m"))
-      cand
-        .join(docMap.select(col("doc_id").as("ia"), col("_m").as("_ma")), "ia")
-        .join(docMap.select(col("doc_id").as("ib"), col("_m").as("_mb")), "ib")
-        .select(col("ia"), col("ib"),
-          // Σ min(wA, wB) over A's entries; absent-in-B keys contribute
-          // least(wA, 0) = 0 (weights are ≥ 1). NOT least(wA, NULL):
-          // Spark's least SKIPS nulls, which would count wA itself.
-          expr("""aggregate(map_entries(_ma), 0L,
-                 |  (acc, e) -> acc + least(e.value,
-                 |    coalesce(element_at(_mb, e.key), 0L)))""".stripMargin)
-            .cast(LongType).as("c"))
-    }
+  /** Exact shingle-Jaccard near-duplicate pairs (ia < ib, jac ≥ threshold)
+    * via the df-bounded inverted-index self-join ([[dfBounded]]). */
+  def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
+                   n: Int = 3, threshold: Double = 0.8,
+                   dfCap: Int = 10000): DataFrame = {
+    val sh = shingles(df, idCol, textCol, n)
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      .localCheckpoint(false) // doc-sized; read by both size joins
+    jaccardPairs(dfBounded(sh, dfCap).select("doc_id", "sh"), "sh", sizes, threshold)
   }
 
   /** MinHash band signatures from a (doc_id, sh) shingle-row relation:
@@ -386,37 +262,47 @@ object Pipelines {
       .select("ia", "ib", "jac")
   }
 
-  /** Connected components over an (ia, ib) pair graph, diameter-INDEPENDENT:
-    * each round interleaves a min-label hop (adopt the smallest label in the
-    * closed neighborhood) with a pointer jump (label ← label-of-label), so
-    * the distance a label has travelled roughly doubles per round —
-    * convergence in O(log diameter) rounds instead of O(diameter). Every
-    * node converges to the smallest reachable id (the canonical
-    * representative a dedup pipeline keeps).
+  /** Connected components over an (ia, ib) pair graph, diameter-INDEPENDENT
+    * (Shiloach–Vishkin): every node carries a label, a node id of its own
+    * component, and between rounds every label is a ROOT (a node labelled
+    * with itself). Each round HOOKS every root to the least label adjacent
+    * to its tree, then SHORTCUTS (label ← label-of-label) to a fixpoint,
+    * so every node points at a root again. Every node converges to the
+    * smallest reachable id (the canonical representative a dedup pipeline
+    * keeps).
     *
-    * Invariants that make the jump sound: labels are always node ids of the
-    * same component (hop takes a neighbor's label, jump takes a label's
-    * label — both reachable by transitivity) and monotonically
-    * non-increasing (lbl(u) ≤ u always, so lbl(lbl(u)) ≤ lbl(u)), bounded
-    * below by the component min; at the changed==0 fixpoint every edge has
-    * equal labels on both ends and the min node still holds its own id, so
-    * the common label IS the component min. A 100 TB near-dup chain (the
-    * worst-case shape scraped corpora actually produce) labels in ~log₂(d)
-    * rounds where min-label propagation alone needs d. */
+    * Hooking whole trees — not single nodes — is what makes the round
+    * count independent of how ids are laid out along a path: a chain whose
+    * ids are shuffled along it (i·37 mod 64) labels in 6 rounds, where a
+    * per-node min-label hop plus one jump needs 28 (and 752 at 1024
+    * nodes). Labels only ever decrease and always name a node of the same
+    * component, so hooks never form a cycle; when a round hooks nothing,
+    * every edge has equal labels on both ends and the component min, which
+    * can never adopt a smaller label, is the common label. */
   def clusterComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val (lbl, rounds, converged) = ccPointerDoubling(pairs, maxRounds)
+    val (lbl, rounds, converged) = ccHookShortcut(pairs, maxRounds)
     require(converged,
-      s"clusterComponents did not converge in $rounds pointer-doubling rounds")
+      s"clusterComponents did not converge in $rounds hook-and-shortcut rounds")
     lbl
   }
 
-  /** Pointer-doubling CC core: returns (labels, roundsUsed, converged).
-    * Exposed for DedupSpec's round-count pin. */
-  private[graft] def ccPointerDoubling(pairs: DataFrame,
-                                       maxRounds: Int): (DataFrame, Int, Boolean) = {
-    // lazy checkpoints (r16): lineage truncation is unchanged; the first
-    // consuming job of each generation materializes + caches it, instead
-    // of a dedicated eager caching job per round
+  /** `df` as a new generation of an iterative loop: lazily checkpointed,
+    * with the planner's size estimate reset to the session default. A
+    * checkpoint keeps its source plan's estimate, and the planner multiplies
+    * the two sides' estimates at every join, so a loop that joins each
+    * generation with itself squares the estimate per step: the CC loop's
+    * reached 27.8M decimal digits after 5 rounds on a 1024-node chain
+    * (141 s, nearly all of it BigInt arithmetic in planning). Rebuilding
+    * the rows from the RDD drops it; AQE still sizes joins at run time. */
+  private def generation(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema).localCheckpoint(false)
+
+  /** The hook-and-shortcut CC loop: returns (labels, roundsUsed,
+    * converged). Exposed for DedupSpec's round-count pins. */
+  private[graft] def ccHookShortcut(pairs: DataFrame,
+                                    maxRounds: Int): (DataFrame, Int, Boolean) = {
+    // lazy checkpoints: lineage truncation per generation; the first
+    // consuming job of each generation materializes + caches it
     val edges = pairs.select(col("ia").as("a"), col("ib").as("b"))
       .unionByName(pairs.select(col("ib").as("a"), col("ia").as("b")))
       .distinct().localCheckpoint(false)
@@ -425,30 +311,33 @@ object Pipelines {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
-      // hop: adopt the min label over the closed neighborhood
-      val neigh = edges.join(lbl.select(col("id").as("b"), col("lbl").as("nl")),
-          Seq("b"))
-        .groupBy(col("a").as("id")).agg(min(col("nl")).as("minNl"))
-      // r16 optimization: the round-start label rides along as `_old`
-      // (the hop join already touches `lbl`, so this adds a column, not a
-      // join), and the convergence count becomes a FILTER over the
-      // materializing generation — the old node-sized `next ⋈ lbl` shuffle
-      // join per round is gone, counts identical.
-      val hopped = lbl.join(neigh, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("minNl"), col("lbl"))).as("lbl"),
+      // hook: each root adopts the least smaller label adjacent to its tree
+      // (only roots are labels, so the hook rows land on roots alone)
+      val hook = edges
+        .join(lbl.select(col("id").as("a"), col("lbl").as("la")), "a")
+        .join(lbl.select(col("id").as("b"), col("lbl").as("lb")), "b")
+        .filter(col("lb") < col("la"))
+        .groupBy(col("la").as("id")).agg(min(col("lb")).as("_m"))
+      var cur = lbl.join(hook, Seq("id"), "left")
+        .select(col("id"), coalesce(col("_m"), col("lbl")).as("lbl"),
           col("lbl").as("_old"))
-      // jump: label ← label's label. Labels are node ids present in `hopped`,
-      // so this node-sized self-join resolves every row; coalesce only
-      // guards isolated self-labels.
-      val next = hopped.join(
-          hopped.select(col("id").as("lbl"), col("lbl").as("_ll")),
-          Seq("lbl"), "left")
-        .select(col("id"), coalesce(col("_ll"), col("lbl")).as("lbl"),
-          col("_old"))
-        .localCheckpoint(false) // the changed-count job materializes it
-      changed = next.filter(col("lbl") =!= col("_old")).count()
-      lbl = next.select("id", "lbl")
+      // shortcut to a fixpoint; the first jump's count against the
+      // round-start label is the convergence test (no hook ⇒ no change)
+      var moved = 1L
+      var jumps = 0
+      while (moved > 0) {
+        val next = generation(cur.join(
+            cur.select(col("id").as("lbl"), col("lbl").as("_ll")),
+            Seq("lbl"), "left")
+          .select(col("id"), coalesce(col("_ll"), col("lbl")).as("lbl"),
+            col("_old"), col("lbl").as("_prev"))) // the count job materializes it
+        moved = next.filter(col("lbl") =!= (
+          if (jumps == 0) col("_old") else col("_prev"))).count()
+        if (jumps == 0) changed = moved
+        cur = next.select("id", "lbl", "_old")
+        jumps += 1
+      }
+      lbl = cur.select("id", "lbl")
       rounds += 1
     }
     (lbl.select(col("id").as("doc_id"), col("lbl").as("cluster_rep")),
@@ -865,41 +754,17 @@ object Pipelines {
   /** Near-containment pairs (ia < ib): fraction of the SMALLER document's
     * shingle set inside the larger ≥ `threshold` — the asymmetric
     * decontamination test symmetric Jaccard misses (a doc quoted inside a
-    * bigger one has low Jaccard but containment ~1). Same df≥2-pruned
+    * bigger one has low Jaccard but containment ~1). Same df-bounded
     * inverted-index self-join as [[nearDupPairs]]; the threshold is decided
     * by an exact integer cross-multiplication. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.9,
-                       dfCap: Int = 10000,
-                       prefixFilter: Boolean = false): DataFrame = {
+                       dfCap: Int = 10000): DataFrame = {
     val sh = shingles(df, idCol, textCol, n)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
-    // df ∈ [2, dfCap] — see nearDupPairs for the hot-shingle argument;
-    // prefixFilter ditto (asymmetric form: only the (n,id)-lex SMALLER
-    // endpoint may consult a prefix — see prefixCandidatesContainment)
-    val keptIdx = sh.join(
-      sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= dfCap), "sh")
-      .localCheckpoint(false)
     val thNum = math.round(threshold * 1000)
-    val common =
-      if (prefixFilter) {
-        // 1000·c ≥ thNum·min(na,nb) ⟹ c ≥ ⌈thNum·n_small/1000⌉, exact ints
-        val cmin = (nn: Column) =>
-          floor((lit(thNum) * nn + lit(999)) / lit(1000.0)).cast(LongType)
-        val cand = prefixCandidatesContainment(keptIdx, sizes, cmin)
-        candidateCommonCounts(keptIdx, cand, weighted = false)
-      } else {
-        val idx = keptIdx.select("doc_id", "sh")
-        idx.select(col("doc_id").as("ia"), col("sh"))
-          .join(idx.select(col("doc_id").as("ib"), col("sh").as("sh2")),
-            col("sh") === col("sh2") && col("ia") < col("ib"))
-          .groupBy("ia", "ib").agg(count(lit(1)).as("c"))
-      }
-    common
-      .join(sizes.select(col("doc_id").as("ia"), col("n").as("na")), "ia")
-      .join(sizes.select(col("doc_id").as("ib"), col("n").as("nb")), "ib")
+    indexOverlaps(dfBounded(sh, dfCap).select("doc_id", "sh"), "sh", sizes)
       .filter(lit(1000) * col("c") >= lit(thNum) * least(col("na"), col("nb")))
       .select(col("ia"), col("ib"),
         (col("c").cast(DoubleType) / least(col("na"), col("nb"))).as("containment"))
@@ -971,53 +836,23 @@ object Pipelines {
 
   /** Exact weighted (multiset) Jaccard near-dup pairs: shingle COUNTS
     * instead of sets — J_w = Σmin(cA,cB)/Σmax(cA,cB) ≥ threshold, decided
-    * by integer cross-multiplication. Same df≥2-pruned index join as
+    * by integer cross-multiplication. Same df-bounded index join as
     * [[nearDupPairs]]; catches repetition-structure similarity the set
     * form flattens. */
   def weightedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.8,
-                           dfCap: Int = 10000,
-                           prefixFilter: Boolean = false): DataFrame = {
+                           dfCap: Int = 10000): DataFrame = {
     val shc = df.withColumn("_toks", split(col(textCol), " "))
       .filter(size(col("_toks")) >= n)
-      .select(col(idCol).as("doc_id"),
-        explode(expr(
-          s"transform(sequence(0, size(_toks)-$n), i -> concat_ws(' ', ${(0 until n).map(j => s"_toks[i+$j]").mkString(", ")}))"))
-          .as("sh"))
-      .groupBy("doc_id", "sh").agg(count(lit(1)).as("c"))
-    val lens = shc.groupBy("doc_id").agg(sum("c").as("n"))
-      .localCheckpoint(false)
-    // df ∈ [2, dfCap] — see nearDupPairs for the hot-shingle argument;
-    // prefixFilter ditto (weighted form: the prefix bound runs over
-    // cumulative multiset weight — see prefixCandidates)
-    val keptIdx = shc.withColumnRenamed("c", "w").join(
-      shc.groupBy("sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= dfCap), "sh")
+      .select(col(idCol).as("doc_id"), explode(shingleArray(col("_toks"), n)).as("sh"))
+      .groupBy("doc_id", "sh").agg(count(lit(1)).as("w"))
+    val lens = shc.groupBy("doc_id").agg(sum("w").as("n"))
       .localCheckpoint(false)
     val thNum = math.round(threshold * 1000)
-    val mins =
-      if (prefixFilter) {
-        // 1000·smin ≥ thNum·(la+lb−smin), lb ≥ smin ⟹ smin ≥ ⌈thNum·la/1000⌉
-        val cmin = (nn: Column) =>
-          floor((lit(thNum) * nn + lit(999)) / lit(1000.0)).cast(LongType)
-        val cand = prefixCandidates(keptIdx, lens, cmin, weighted = true)
-        candidateCommonCounts(keptIdx, cand, weighted = true)
-          .withColumnRenamed("c", "_smin")
-      } else {
-        keptIdx.select(col("doc_id").as("ia"), col("sh"), col("w").as("_ca"))
-          .join(keptIdx.select(col("doc_id").as("ib"), col("sh").as("_sh2"),
-              col("w").as("_cb")),
-            col("sh") === col("_sh2") && col("ia") < col("ib"))
-          .groupBy("ia", "ib").agg(sum(least(col("_ca"), col("_cb"))).as("_smin"))
-      }
-    mins
-      .join(lens.select(col("doc_id").as("ia"), col("n").as("_la")), "ia")
-      .join(lens.select(col("doc_id").as("ib"), col("n").as("_lb")), "ib")
-      .filter(lit(1000) * col("_smin") >=
-        lit(thNum) * (col("_la") + col("_lb") - col("_smin")))
+    indexOverlaps(dfBounded(shc, dfCap).select("doc_id", "sh", "w"), "sh", lens)
+      .filter(lit(1000) * col("c") >= lit(thNum) * (col("na") + col("nb") - col("c")))
       .select(col("ia"), col("ib"),
-        (col("_smin").cast(DoubleType) / (col("_la") + col("_lb") - col("_smin")))
-          .as("wjac"))
+        (col("c").cast(DoubleType) / (col("na") + col("nb") - col("c"))).as("wjac"))
   }
 
   /** Point-in-time enrichment (the feature-store PIT join): for each probe
@@ -1105,15 +940,10 @@ object Pipelines {
     * edge-iterator: orient each edge toward the (degree, id)-larger
     * endpoint, build per-node out-neighbor arrays (bounded at O(√m) by the
     * orientation), and sum |N⁺(u) ∩ N⁺(v)| over edges — each triangle
-    * counted exactly once, no wedge set ever materialized. `broadcastAdj`
-    * controls whether the node-sized adjacency table broadcasts (default)
-    * or shuffle-joins (graphs whose adjacency outgrows the budget). */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
-                    broadcastAdj: Boolean = true): DataFrame = {
-    val e0 = edges.select(
-        least(col(srcCol), col(dstCol)).as("pa"),
-        greatest(col(srcCol), col(dstCol)).as("pb"))
-      .filter(col("pa") < col("pb")).distinct().localCheckpoint(false)
+    * counted exactly once, no wedge set ever materialized. The node-sized
+    * adjacency table broadcasts. */
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val e0 = undirectedPairs(edges, srcCol, dstCol).localCheckpoint(false)
     val deg = e0.select(col("pa").as("node"))
       .unionAll(e0.select(col("pb").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -1128,9 +958,8 @@ object Pipelines {
           || (col("da") === col("db") && col("pa") < col("pb")), col("pb"))
           .otherwise(col("pa")).as("dst"))
     val adj = ed.groupBy("src").agg(collect_list(col("dst")).as("nbrs"))
-    def maybeB(d: DataFrame) = if (broadcastAdj) broadcast(d) else d
-    ed.join(maybeB(adj.select(col("src"), col("nbrs").as("nu"))), "src")
-      .join(maybeB(adj.select(col("src").as("dst"), col("nbrs").as("nv"))),
+    ed.join(broadcast(adj.select(col("src"), col("nbrs").as("nu"))), "src")
+      .join(broadcast(adj.select(col("src").as("dst"), col("nbrs").as("nv"))),
         Seq("dst"), "left")
       .select(size(array_intersect(col("nu"),
         coalesce(col("nv"), array().cast(
@@ -1145,14 +974,10 @@ object Pipelines {
     * token-budgeted). Returns one row per (group, ctx_ix) with `n_docs`
     * and `n_tokens`. */
   def contextPack(df: DataFrame, groupCol: String, idCol: String,
-                  tokensCol: String, budgetTokens: Long = 2048L): DataFrame = {
-    val w = Window.partitionBy(groupCol).orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("_off", sum(col(tokensCol)).over(w) - col(tokensCol))
-      .withColumn("ctx_ix", expr(s"_off div ${budgetTokens}L"))
-      .groupBy(col(groupCol), col("ctx_ix"))
-      .agg(count(lit(1)).as("n_docs"), sum(col(tokensCol)).as("n_tokens"))
-  }
+                  tokensCol: String, budgetTokens: Long = 2048L): DataFrame =
+    shardManifest(df, groupCol, idCol, tokensCol, budgetTokens)
+      .withColumnRenamed("shard_ix", "ctx_ix")
+      .withColumnRenamed("n_bytes", "n_tokens")
 
   /** Bounded-hop weighted single-source shortest paths over (src, dst,
     * cost) edges: `maxHops` Bellman-Ford relaxation layers — well-defined
@@ -1190,27 +1015,58 @@ object Pipelines {
 
   /** k-core peeling of an undirected (src, dst) edge set: `rounds`
     * iterations of degree-filter + subgraph restriction, returning the
-    * per-round (round, n_nodes, n_edges) peel curve. Node-sized keep sets
-    * broadcast under `T.broadcastExact`'s known-size cap (their byte size
-    * is exact — rows are counted for the audit anyway); each layer
-    * localCheckpoints so lineage stays one round deep. */
+    * per-round (round, n_nodes, n_edges) peel curve. Direction and
+    * duplicates are normalized here; the loop is [[peelUndirected]]. */
   def kcorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int = 4): DataFrame = {
-    val s = edges.sparkSession
-    val e0 = edges.select(
+                k: Int, rounds: Int = 4): DataFrame =
+    peelUndirected(undirectedPairs(edges, srcCol, dstCol), k, rounds)
+
+  /** An edge list as DISTINCT undirected pairs (pa < pb): direction and
+    * duplicates dropped, self-loops removed. */
+  private def undirectedPairs(edges: DataFrame, srcCol: String,
+                              dstCol: String): DataFrame =
+    edges.select(
         least(col(srcCol), col(dstCol)).as("pa"),
         greatest(col(srcCol), col(dstCol)).as("pb"))
       .filter(col("pa") < col("pb")).distinct()
-    // generation storage is size-branched: per-round localCheckpoint at
-    // fixture scales, columnar persist + PROMPT unpersist (≤2 generations
-    // live) past ~50M directed edges (see the graded key's measured
-    // rationale — GroupEight graph_kcore_peel, r13 ×100 probe)
+
+  /** The k-core peel loop over DISTINCT undirected (pa < pb) pairs — the
+    * body behind [[kcorePeel]] and the graded `graph_kcore_peel`, whose
+    * staged pair artifact already has this shape (no normalization
+    * shuffle). Each round recomputes degrees over the current edge set,
+    * keeps nodes with degree ≥ k and restricts both endpoints to them.
+    *
+    * Generations are stored UNDIRECTED (|E| rows instead of both
+    * orientations' 2|E|): the per-round degree agg derives the node
+    * stream by exploding both endpoints BEFORE the map-side partial agg —
+    * a generator inside the same stage, no new exchange — so keep sets
+    * and the peel curve are value-identical while the restriction joins
+    * and every per-round cache touch half the rows.
+    *
+    * Generation storage is SIZE-BRANCHED (measured at sf0.1/sf1/sf10 and
+    * the ×100 fixture): per-round localCheckpoint (deserialized row cache,
+    * async ContextCleaner release) is the fast shape at fixture scales,
+    * but at ×100 ~5 live generations × 240M rows overflowed the heap and
+    * the loop went eviction/GC-bound (522–756 s reps, executor heartbeat
+    * timeouts). Past `T.bigRunEdgeThreshold` (calibrated in DIRECTED
+    * edges, hence the 2×) the loop switches to columnar-compressed
+    * persist (~4× smaller) with PROMPT unpersist of the previous
+    * generation — at most two generations live — 68.8 s at ×100 (7.6×
+    * faster). The persist chain costs ~3× at sf0.1 (per-round cached-plan
+    * overhead dominates small data), hence the branch instead of one
+    * strategy. Measured dead end: pre-partitioning the edge list on src
+    * (exchange-free degree aggs) cost 2.3×/2.9× at sf0.1/sf1.
+    *
+    * The keep set is NODE-sized (exactly 16 bytes/row, counted for the
+    * audit anyway): under `T.broadcastExact`'s known-size cap both
+    * restriction joins broadcast it and the edge list never shuffles
+    * in-round; past the cap they are unhinted shuffle joins. (A
+    * session-budget gate un-broadcast a 32 MB keep set at 2M nodes and
+    * pushed 8 edge-list shuffles per run.) */
+  private[graft] def peelUndirected(und: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val s = und.sparkSession
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // r16 optimization: generations are stored UNDIRECTED (pa < pb, |E|
-    // rows, half the bytes of the old both-orientations form); the degree
-    // agg explodes both endpoints before its map-side partial agg — same
-    // keep sets and peel curve, half the join/cache volume per round.
-    var cur = e0.localCheckpoint(false)
+    var cur = und.select("pa", "pb").localCheckpoint(false)
     val bigRun = 2L * cur.count() > graft.T.bigRunEdgeThreshold(s)
     val audit = Seq.newBuilder[(Int, Long, Long)]
     for (r <- 1 to rounds) {
@@ -1219,6 +1075,8 @@ object Pipelines {
         .groupBy("node")
         .agg(count(lit(1)).as("dg")).filter(col("dg") >= k)
         .select("node")
+      // lazy checkpoint: nKeep's count materializes + caches it in the
+      // same job, not a separate caching job per round
       val keep = if (bigRun) keep0.persist(mad) else keep0.localCheckpoint(false)
       val nKeep = keep.count()
       val maybeB: DataFrame => DataFrame =
@@ -1229,13 +1087,14 @@ object Pipelines {
         .select("pa", "pb")
       if (bigRun) {
         val next = next0.persist(mad)
-        val nEdges = next.count()
+        val nEdges = next.count() // materializes next; prior gen now free
+        // blocking=false; Dataset.unpersist never cascades
         cur.unpersist(false)
         keep.unpersist(false)
         cur = next
         audit += ((r, nKeep, nEdges))
       } else {
-        cur = next0.localCheckpoint(false)
+        cur = next0.localCheckpoint(false) // the audit count materializes it
         audit += ((r, nKeep, cur.count()))
       }
     }
@@ -1323,12 +1182,8 @@ object Pipelines {
                     idCol: String, textCol: String, n: Int = 5): DataFrame = {
     def sh(df: DataFrame, outId: String): DataFrame = df
       .select(col(idCol).as(outId), split(col(textCol), " ").as("_t"))
-      .withColumn("_n", size(col("_t")))
-      .where(col("_n") >= n)
-      .select(col(outId), explode(sequence(lit(0), col("_n") - n)).as("_i"),
-        col("_t"))
-      .select(col(outId),
-        concat_ws(" ", slice(col("_t"), col("_i") + 1, lit(n))).as("sh"))
+      .where(size(col("_t")) >= n)
+      .select(col(outId), explode(shingleArray(col("_t"), n)).as("sh"))
       .distinct()
     sh(corpus, "doc_id").join(broadcast(sh(eval, "eval_id")), "sh")
       .groupBy("doc_id")

@@ -19,7 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * set, no boxing. Result order (ascending) differs from array_intersect's
   * (left-operand order) but every consumer is order-invariant (size() or
   * explode-then-aggregate). Same result MULTISET for sorted unique null-free
-  * inputs — the precondition every call site's staged artifact guarantees.
+  * inputs — the precondition every call site's staged artifact guarantees,
+  * and which both eval paths check over every element of both operands
+  * ([[SortedArrays.requireAscending]]): an unsorted or duplicate-bearing
+  * array would silently over- or under-count, so it raises instead.
   *
   * VERDICT r16 #2 realized (the VecDot precedent: SURVEY §2-J
   * expression_custom_note).
@@ -43,6 +46,8 @@ case class SortedIntersect(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    SortedArrays.requireAscending(x, prettyName, "left")
+    SortedArrays.requireAscending(y, prettyName, "right")
     val (n1, n2) = (x.numElements(), y.numElements())
     val buf = new Array[Long](math.min(n1, n2))
     var i = 0; var j = 0; var k = 0
@@ -63,6 +68,7 @@ case class SortedIntersect(left: Expression, right: Expression)
       val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
       val buf = ctx.freshName("buf")
       s"""
+         |${SortedArrays.checkCode(a, b, prettyName)}
          |final int $n1 = $a.numElements();
          |final int $n2 = $b.numElements();
          |final long[] $buf = new long[java.lang.Math.min($n1, $n2)];
@@ -107,6 +113,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    SortedArrays.requireAscending(x, prettyName, "left")
+    SortedArrays.requireAscending(y, prettyName, "right")
     val (n1, n2) = (x.numElements(), y.numElements())
     var i = 0; var j = 0; var k = 0L
     while (i < n1 && j < n2) {
@@ -125,6 +133,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val n1 = ctx.freshName("n1"); val n2 = ctx.freshName("n2")
       val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
       s"""
+         |${SortedArrays.checkCode(a, b, prettyName)}
          |final int $n1 = $a.numElements();
          |final int $n2 = $b.numElements();
          |int $i = 0, $j = 0;
@@ -143,4 +152,27 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
+}
+
+/** The precondition of [[SortedIntersect]] and [[SortedIntersectCount]]:
+  * each operand strictly ascending over ALL of its elements (sorted and
+  * duplicate-free). Checked on every evaluation, interpreted and codegen'd
+  * alike — one O(n) pass per operand beside the O(n1+n2) merge. */
+object SortedArrays {
+  def requireAscending(arr: ArrayData, fn: String, side: String): Unit = {
+    var i = 1
+    while (i < arr.numElements()) {
+      if (arr.getLong(i) <= arr.getLong(i - 1))
+        throw new IllegalArgumentException(
+          s"$fn requires strictly ascending (sorted, duplicate-free) arrays: " +
+            s"$side operand element $i (${arr.getLong(i)}) does not exceed " +
+            s"element ${i - 1} (${arr.getLong(i - 1)})")
+      i += 1
+    }
+  }
+
+  /** The codegen call of [[requireAscending]] on both operands. */
+  private[functions] def checkCode(a: String, b: String, fn: String): String =
+    s"""graft.functions.SortedArrays.requireAscending($a, "$fn", "left");
+       |graft.functions.SortedArrays.requireAscending($b, "$fn", "right");""".stripMargin
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -580,16 +581,12 @@ object GroupAnalytics {
         |SELECT zval // 64 AS zblock, count(*) AS cnt,
         |  min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
         |FROM z GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      def bit(c: org.apache.spark.sql.Column, i: Int, out: Int) =
-        shiftleft(shiftrightunsigned(c, i).bitwiseAND(lit(1L)), out)
       val b = T.t(s, dir, "orders").select(
         col("o_custkey").bitwiseAND(lit(255L)).as("x"),
         expr("cast(round(o_totalprice * 100) as bigint) DIV 2500000")
           .bitwiseAND(lit(255L)).as("y"))
-      val z = b.withColumn("zval",
-        (0 until 8).map(i =>
-          bit(col("x"), i, 2 * i) + bit(col("y"), i, 2 * i + 1)).reduce(_ + _))
-      z.withColumn("zblock", expr("zval DIV 64"))
+      b.withColumn("zval", Pipelines.zorderKey(col("x"), col("y"), 8))
+        .withColumn("zblock", expr("zval DIV 64"))
         .groupBy("zblock")
         .agg(count(lit(1)).as("cnt"),
           min("x").as("min_x"), max("x").as("max_x"),
@@ -897,8 +894,7 @@ object GroupAnalytics {
         |    CROSS JOIN tot WHERE cxy.c >= 5))
         |WHERE rn <= 20 ORDER BY rn""") { (s, dir) =>
       val dd = T.t(s, dir, "documents").select(split(col("text"), " ").as("arr"))
-      val bg = dd.select(explode(expr(
-        "transform(sequence(0, size(arr)-2), i -> concat_ws(' ', arr[i], arr[i+1]))")).as("bigram"))
+      val bg = dd.select(explode(Pipelines.shingleArray(col("arr"), 2)).as("bigram"))
       val cxy = bg.groupBy("bigram").agg(count(lit(1)).as("c_xy"))
       val uni = dd.select(explode(col("arr")).as("tok"))
       val cx = uni.groupBy("tok").agg(count(lit(1)).as("c"))

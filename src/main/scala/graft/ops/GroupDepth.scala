@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -237,47 +238,30 @@ object GroupDepth {
         T.t(s, dir, "documents")
           .withColumn("toks", split(col("text"), " "))
           .filter(size(col("toks")) >= 3)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("sh"))
+          .select(col("doc_id"), explode(Pipelines.shingleArray(col("toks"))).as("sh"))
           .groupBy("doc_id", "sh").agg(count(lit(1)).as("c"))
           .write.mode("overwrite").parquet(o)
       }
       val shc = T.parquet(s, stage)
-      val lens = shc.groupBy("doc_id").agg(sum("c").as("n"))
       // df ∈ [2, dfCap]: singletons can't pair; the hot-shingle ceiling
       // bounds self-join fan-out at dfCap² per shingle (see
-      // GroupPipeline.exactJaccardPairs for the recall argument). The
-      // df-joined index is staged like shingle_df — the prefix-filtered
-      // plan scans it three times (prefix, a-verify, b-verify).
+      // GroupPipeline.exactJaccardPairs for the recall argument), staged
+      // like shingle_df with the same long surrogate `shid` (Σ min(wA,wB)
+      // is invariant under the relabeling; long keys ship narrower rows
+      // through the self-join exchange than 3-token strings)
       val wIdx = T.staged("wshingle_df", dir) { o =>
         val kept = shc.withColumnRenamed("c", "w").join(
           shc.groupBy("sh").agg(count(lit(1)).as("df"))
             .filter(col("df") >= 2 && col("df") <= GroupPipeline.dfCap), "sh")
-        // shid: see GroupPipeline.shingleDfRows — Σ min(wA,wB) is
-        // invariant under the relabeling and long-keyed maps beat
-        // string-keyed ones through the candidate-join exchange
         val dict = kept.select("sh").distinct()
           .withColumn("shid", monotonically_increasing_id())
         kept.join(dict, "sh").write.mode("overwrite").parquet(o)
       }
-      // (prefix filtering tried and measured out here in r15 — see
-      // GroupPipeline.exactJaccardPairs; the index-agg stream wins on
-      // this co-sharing geometry at every scale)
-      val idx = T.parquet(s, wIdx)
-      // join on shid (the staged long surrogate), not the shingle string:
-      // Σ min(wA,wB) is relabeling-invariant and the self-join exchange
-      // ships longs instead of 3-token strings (the comment above built
-      // shid for exactly this; the join itself never used it until r16)
-      val mins = idx.select(col("doc_id").as("ia"), col("shid"), col("w").as("ca"))
-        .join(idx.select(col("doc_id").as("ib"), col("shid").as("shid2"), col("w").as("cb")),
-          col("shid") === col("shid2") && col("ia") < col("ib"))
-        .groupBy("ia", "ib").agg(sum(least(col("ca"), col("cb"))).as("smin"))
-      mins
-        .join(lens.select(col("doc_id").as("ia"), col("n").as("la")), "ia")
-        .join(lens.select(col("doc_id").as("ib"), col("n").as("lb")), "ib")
-        .filter(lit(5) * col("smin") >= lit(4) * (col("la") + col("lb") - col("smin")))
+      Pipelines.indexOverlaps(T.parquet(s, wIdx).select("doc_id", "shid", "w"), "shid",
+          shc.groupBy("doc_id").agg(sum("c").as("n")))
+        .filter(lit(5) * col("c") >= lit(4) * (col("na") + col("nb") - col("c")))
         .select(col("ia"), col("ib"),
-          T.r6("smin", "la + lb - smin").as("wjac")) // exact-int HALF_UP 6dp
+          T.r6("c", "na + nb - c").as("wjac")) // exact-int HALF_UP 6dp
         .orderBy("ia", "ib")
     },
 
@@ -343,25 +327,11 @@ object GroupDepth {
         |  FROM s)
         |WHERE rnk <= 5 ORDER BY q_id, rnk""") { (s, dir) =>
       graft.functions.GraftFunctions.register(s)
-      def quant(c: Column) = transform(c, x => floor(x * 127.0 + 0.5).cast(IntegerType))
       val e = T.t(s, dir, "embeddings")
-      val qs = e.filter(col("vec_id") >= 20 && col("vec_id") < 40)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          quant(col("embedding")).as("qq"))
-      val cs = e.filter(col("vec_id") >= 40)
-        .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-          quant(col("embedding")).as("cq"))
-      val coarse = cs.crossJoin(broadcast(qs))
-        .withColumn("isim", call_function("vec_dot_int", col("qq"), col("cq")))
-        .withColumn("crnk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("isim").desc, col("c_id"))))
-        .filter(col("crnk") <= 50)
-      coarse
-        .withColumn("sim", round(call_function("vec_dot", col("qe"), col("ce")), 6))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))).cast(IntegerType))
-        .filter(col("rnk") <= 5)
-        .select("q_id", "rnk", "c_id", "sim")
+      Pipelines.cosineTopKReranked(
+          e.filter(col("vec_id") >= 20 && col("vec_id") < 40),
+          e.filter(col("vec_id") >= 40), "vec_id", "vec_id", "embedding",
+          k = 5, coarseK = 50)
         .orderBy("q_id", "rnk")
     },
 
@@ -503,22 +473,12 @@ object GroupDepth {
         |FROM common JOIN sizes sa ON sa.doc_id = ia JOIN sizes sb ON sb.doc_id = ib
         |WHERE 10 * c >= 9 * least(sa.n, sb.n)
         |ORDER BY ia, ib""") { (s, dir) =>
-      val sizes = GroupPipeline.shingleSizes(s, dir)
-      // df ∈ [2, dfCap]: see GroupPipeline.exactJaccardPairs for the
-      // hot-shingle-ceiling recall argument. (Prefix filtering tried and
-      // measured out in r15 — see that function's note.)
-      // join on the staged long surrogate, not the shingle string — same
-      // |A∩B| under the injective relabeling, ~3× narrower exchange rows
-      // (see GroupPipeline.exactJaccardPairs)
-      val idx = GroupPipeline.shingleDfRows(s, dir)
-        .filter(col("df") <= GroupPipeline.dfCap).select("doc_id", "shid")
-      val common = idx.select(col("doc_id").as("ia"), col("shid"))
-        .join(idx.select(col("doc_id").as("ib"), col("shid").as("shid2")),
-          col("shid") === col("shid2") && col("ia") < col("ib"))
-        .groupBy("ia", "ib").agg(count(lit(1)).as("c"))
-      common
-        .join(sizes.select(col("doc_id").as("ia"), col("n").as("na")), "ia")
-        .join(sizes.select(col("doc_id").as("ib"), col("n").as("nb")), "ib")
+      // df ∈ [2, dfCap] over the staged long-surrogate index: see
+      // GroupPipeline.exactJaccardPairs for the hot-shingle-ceiling recall
+      // argument and the measured-out prefix filtering
+      Pipelines.indexOverlaps(GroupPipeline.shingleDfRows(s, dir)
+          .filter(col("df") <= GroupPipeline.dfCap).select("doc_id", "shid"),
+          "shid", GroupPipeline.shingleSizes(s, dir))
         .filter(lit(10) * col("c") >= lit(9) * least(col("na"), col("nb")))
         .select(col("ia"), col("ib"),
           T.r6("c", "least(na, nb)").as("containment")) // exact-int HALF_UP 6dp
@@ -628,16 +588,8 @@ object GroupDepth {
         |  WHERE a.d + CAST(x.o AS INT) <= span.d1)
         |SELECT wd AS day_end, count(DISTINCT user_id) AS users_7d
         |FROM rep GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val act = T.t(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-      val span = act.agg(max(col("d")).as("d1"))
-      act.crossJoin(broadcast(span))
-        .select(col("user_id"), explode(sequence(lit(0), lit(6))).as("o"),
-          col("d"), col("d1"))
-        .withColumn("wd", date_add(col("d"), col("o")))
-        .filter(col("wd") <= col("d1"))
-        .groupBy(col("wd").as("day_end"))
-        .agg(countDistinct(col("user_id")).as("users_7d"))
+      Pipelines.slidingDistinct(T.t(s, dir, "events"), "user_id", "ts", 7)
+        .withColumnRenamed("distinct_7d", "users_7d")
         .orderBy("day_end")
     },
 

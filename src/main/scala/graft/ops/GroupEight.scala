@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -494,14 +495,9 @@ object GroupEight {
         |SELECT lang, CAST(off // 2048 AS BIGINT) AS ctx_ix,
         |  count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS n_tokens
         |FROM w GROUP BY 1, 2 ORDER BY lang, ctx_ix""") { (s, dir) =>
-      val w = T.t(s, dir, "documents")
-        .withColumn("toks", size(split(col("text"), " ")).cast(LongType))
-        .withColumn("off",
-          sum(col("toks")).over(Window.partitionBy("lang").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            - col("toks"))
-      w.groupBy(col("lang"), expr("off div 2048L").as("ctx_ix"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
+      Pipelines.contextPack(T.t(s, dir, "documents")
+          .withColumn("toks", size(split(col("text"), " ")).cast(LongType)),
+          "lang", "doc_id", "toks", 2048L)
         .orderBy("lang", "ctx_ix")
     },
 
@@ -590,80 +586,9 @@ object GroupEight {
          |    CAST((SELECT count(*) FROM l4) // 2 AS BIGINT)
          |) ORDER BY round"""
     }) { (s, dir) =>
-      val e = GroupSeven.pairSupport(s, dir) // staged artifact, shared
-        .select("pa", "pb")
-      // Generation storage is SIZE-BRANCHED (r13 ×100 probe, all three
-      // variants measured at sf0.1/sf1/sf10). Per-round localCheckpoint
-      // (deserialized row cache, async ContextCleaner release) is the
-      // fast shape at fixture scales — but at the ×100 fixture ~5 live
-      // generations × 240M rows × ~80 B/object overflowed the heap and
-      // the key went eviction/GC-bound (522–756 s reps, executor
-      // heartbeat timeouts). Past the threshold the loop switches to
-      // columnar-compressed persist (~4× smaller) with PROMPT unpersist
-      // of the previous generation — at most two generations live —
-      // measured 68.8 s at ×100 (7.6× faster; second decade 5.2× for
-      // ×10 data = sub-linear). The persist chain costs ~3× at sf0.1
-      // (per-round cached-plan overhead dominates small data), hence the
-      // branch instead of one strategy. Measured dead end, recorded so
-      // the next reader doesn't retry it: pre-partitioning the edge list
-      // on src (exchange-free degree aggs) cost 2.3×/2.9× at sf0.1/sf1.
-      val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // r16 optimization (guide §2.3 — shuffle/cache fewer bytes): loop
-      // generations are stored UNDIRECTED (pa < pb, |E| rows) instead of
-      // both orientations (2|E|). The per-round degree agg derives the
-      // node stream by exploding both endpoints BEFORE the map-side
-      // partial agg — a generator inside the same stage, no new exchange
-      // — so keep sets, the peel curve, and the broadcast decision are
-      // value-identical while the restriction joins and every per-round
-      // cache/checkpoint touch HALF the rows. (The audit's n_edges is the
-      // undirected count directly — the directed form divided by 2.)
-      var und = e.select(col("pa"), col("pb")).localCheckpoint(false)
-      // threshold shared + test-overridable via T.bigRunEdgeThreshold
-      // (the threshold is calibrated in DIRECTED edges, hence the 2×)
-      val bigRun = 2L * und.count() > T.bigRunEdgeThreshold(s)
-      val audit = Seq.newBuilder[(Int, Long, Long)]
-      for (r <- 1 to 4) {
-        val keep0 = und
-          .select(explode(array(col("pa"), col("pb"))).as("node"))
-          .groupBy("node")
-          .agg(count(lit(1)).as("dg")).filter(col("dg") >= 10)
-          .select("node") // 2 joins + a count below
-        // lazy checkpoint (r16): nKeep's count below materializes + caches
-        // it in the same job — the eager form ran a separate caching job
-        // per round (2 extra jobs/round over data this small is real wall)
-        val keep = if (bigRun) keep0.persist(mad)
-          else keep0.localCheckpoint(false)
-        // the keep set is NODE-sized (exactly 16 bytes/row, counted here —
-        // the audit needs the count anyway): under T.broadcastExact's
-        // known-size cap both restriction joins broadcast it and the edge
-        // list never shuffles in-round; past the cap → unhinted shuffle
-        // joins on src/dst. (The r13 ×100 probe caught the old
-        // session-budget gate un-broadcasting a 32 MB keep set at 2M
-        // nodes, pushing 8 edge-list shuffles per run.)
-        val nKeep = keep.count()
-        val maybeB: DataFrame => DataFrame =
-          if (T.broadcastExact(s, 16L * nKeep)) broadcast
-          else identity
-        val next0 = und
-          .join(maybeB(keep.withColumnRenamed("node", "pa")), "pa")
-          .join(maybeB(keep.withColumnRenamed("node", "pb")), "pb")
-          .select("pa", "pb")
-        if (bigRun) {
-          val next = next0.persist(mad)
-          val nEdges = next.count() // materializes next; prior gen now free
-          // blocking=false; Dataset.unpersist never cascades, next keeps its data
-          und.unpersist(false)
-          keep.unpersist(false)
-          und = next
-          audit += ((r, nKeep, nEdges))
-        } else {
-          und = next0.localCheckpoint(false) // the audit count materializes
-          audit += ((r, nKeep, und.count()))
-        }
-      }
-      if (bigRun) und.unpersist(false)
-      import s.implicits._
-      audit.result().toDF("round", "n_nodes", "n_edges")
+      // the staged pair artifact is already distinct and pa < pb, so the
+      // key enters the library's peel loop directly (no normalization)
+      Pipelines.peelUndirected(GroupSeven.pairSupport(s, dir), 10, 4)
         .orderBy("round")
     },
 

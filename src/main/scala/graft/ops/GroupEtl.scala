@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -54,10 +55,7 @@ object GroupEtl {
         |FROM orders
         |WHERE CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0
         |ORDER BY o_orderkey""") { (s, dir) =>
-      T.t(s, dir, "orders")
-        .filter(
-          conv(substring(md5(col("o_orderkey").cast(StringType)), 1, 8), 16, 10)
-            .cast(LongType) % 10 === 0)
+      Pipelines.hashSample(T.t(s, dir, "orders"), "o_orderkey", 10, 0)
         .select(col("o_orderkey"),
           col("o_totalprice").cast(T.dec).cast(DoubleType).as("price"))
         .orderBy("o_orderkey")

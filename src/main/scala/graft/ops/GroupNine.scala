@@ -406,9 +406,8 @@ object GroupNine {
         .where(size(col("arr")) >= 2)
         .select(col("source"),
           (size(col("arr")) - 1).cast(LongType).as("nb"),
-          (size(col("arr")) - 1 - expr(
-            "size(array_distinct(transform(sequence(0, size(arr)-2)," +
-              " i -> concat(arr[i], ' ', arr[i+1]))))"))
+          (size(col("arr")) - 1 -
+            size(array_distinct(graft.api.Pipelines.shingleArray(col("arr"), 2))))
             .cast(LongType).as("ndup"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("nb").as("n_bigrams"),

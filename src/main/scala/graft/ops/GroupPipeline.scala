@@ -69,8 +69,7 @@ object GroupPipeline {
   }
 
   private[ops] def exactJaccardPairs(s: SparkSession, dir: String,
-                                     threshold: Double): DataFrame = {
-    val sizes = shingleSizes(s, dir)
+                                     threshold: Double): DataFrame =
     // df pruning, both ends (VERDICT r6 #6):
     // - df ≥ 2: a shingle in exactly one document can never contribute to a
     //   common count; in a real corpus MOST shingles are unique, so this
@@ -99,27 +98,16 @@ object GroupPipeline {
     // per-candidate verification (O(kA+kB) each, however implemented —
     // replication joins 6.3 s, long-array intersects still 2-3× this
     // plan) costs more than the count-only stream it replaced at EVERY
-    // scale (sf0.1/sf1/sf10 = 2-3× slower; BASELINE.md has the record).
-    // The library keeps the
-    // machinery behind Pipelines.nearDupPairs(prefixFilter = true) for
-    // near-dup-dense corpora where candidates ≈ true pairs.
+    // scale (sf0.1/sf1/sf10 = 2-3× slower; BASELINE.md has the record,
+    // and the removed library path is in git history).
     // Self-join on the staged dense LONG surrogate (shid), not the 3-token
     // shingle string: |A∩B| is invariant under the injective relabeling and
     // the candidate-join exchange ships 8-byte longs instead of ~30-byte
     // strings (guide §2.3 narrower types; the r15 sf1 forensics already
     // named string rows through this exchange as the GC term).
-    val shJ = shingleDfRows(s, dir)
-      .filter(col("df") <= dfCap).select("doc_id", "shid")
-    val common = shJ.select(col("doc_id").as("ia"), col("shid"))
-      .join(shJ.select(col("doc_id").as("ib"), col("shid").as("shid2")),
-        col("shid") === col("shid2") && col("ia") < col("ib"))
-      .groupBy("ia", "ib").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col("doc_id").as("ia"), col("n").as("na")), "ia")
-      .join(sizes.select(col("doc_id").as("ib"), col("n").as("nb")), "ib")
-      .withColumn("jac", col("c").cast(DoubleType) / (col("na") + col("nb") - col("c")))
-      .filter(col("jac") >= threshold)
-  }
+    graft.api.Pipelines.jaccardPairs(
+      shingleDfRows(s, dir).filter(col("df") <= dfCap).select("doc_id", "shid"),
+      "shid", shingleSizes(s, dir), threshold)
 
   /** SimHash near-dup pairs (ia, ib, hamming): 60-bit portable-poly_hash
     * SimHash, banded 4×15 for candidates, verified at Hamming ≤ 8. Shared
@@ -264,13 +252,14 @@ object GroupPipeline {
     },
 
     // Near-dup CLUSTERING: connected components over the exact-Jaccard pair
-    // graph via min-label propagation INTERLEAVED WITH POINTER JUMPING
-    // (label ← label-of-label), so label reach doubles per round —
-    // O(log diameter) rounds, diameter-INDEPENDENT. A 100 TB scraped corpus
-    // produces long near-dup chains; the former plain propagation needed
-    // O(diameter) rounds and refused past its cap. Each round is two
-    // node-sized shuffle joins + a min-agg, lineage truncated per step, and
-    // the driver only sees the changed-label count.
+    // graph by hook-and-shortcut (Shiloach–Vishkin, api.Pipelines.
+    // clusterComponents): each round hooks every label root to the least
+    // adjacent label, then shortcuts label ← label-of-label to a fixpoint —
+    // O(log n) rounds whatever the chain's id layout. A 100 TB scraped
+    // corpus produces long near-dup chains; plain propagation needs
+    // O(diameter) rounds. Every step is node-sized shuffle joins + a
+    // min-agg, lineage truncated per step, and the driver only sees
+    // changed-label counts.
     q("dedup_cluster_components",
       """WITH RECURSIVE dd AS (SELECT doc_id, string_split(text,' ') AS arr FROM documents),
         |sh AS (SELECT DISTINCT doc_id,
@@ -294,9 +283,8 @@ object GroupPipeline {
         |SELECT a AS doc_id, min(b) AS cluster_rep FROM reach
         |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val pairs = exactJaccardPairs(s, dir, 0.8).select("ia", "ib")
-      // pointer-doubling CC (api.Pipelines): O(log diameter) rounds, fails
-      // loudly if the round budget is ever exceeded rather than returning
-      // partially-propagated labels
+      // fails loudly if the round budget is ever exceeded rather than
+      // returning partially-propagated labels
       graft.api.Pipelines.clusterComponents(pairs).orderBy("doc_id")
     },
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -311,14 +312,14 @@ object GroupSeven {
         .orderBy("doc_id")
     },
 
-    // Connected components in O(log diameter) rounds (round 9, VERDICT r8
-    // #1 sibling): pointer-doubling CC — min-label hop + label←label-of-
-    // label jump per round (api.Pipelines.clusterComponents) — over the
-    // support-top-500 co-purchase edges (deterministic TakeOrdered cut:
+    // Connected components in O(log n) rounds (round 9, VERDICT r8 #1
+    // sibling): hook-and-shortcut CC (api.Pipelines.clusterComponents) over
+    // the support-top-500 co-purchase edges (deterministic TakeOrdered cut:
     // support desc, then pair ids). Unlike plain min-label propagation the
     // round count is diameter-INDEPENDENT, so a 100 TB chain-shaped
-    // component converges in ~log₂(d) rounds instead of d (DedupSpec
-    // proves the planted-chain case). Oracle = DuckDB recursive closure.
+    // component converges in a few rounds instead of d (DedupSpec pins
+    // chains in id order and shuffled, a star and a binary tree). Oracle =
+    // DuckDB recursive closure.
     q("graph_cc_logrounds",
       """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |sup AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS sup
@@ -442,14 +443,8 @@ object GroupSeven {
         |SELECT source, CAST(off // 100000 AS BIGINT) AS shard_ix,
         |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_bytes
         |FROM w GROUP BY 1, 2 ORDER BY source, shard_ix""") { (s, dir) =>
-      val w = T.t(s, dir, "documents")
-        .withColumn("off",
-          sum(col("n_chars")).over(Window.partitionBy("source").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            - col("n_chars"))
-      w.groupBy(col("source"),
-          expr("off div 100000L").as("shard_ix"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_bytes"))
+      Pipelines.shardManifest(T.t(s, dir, "documents"),
+          "source", "doc_id", "n_chars", 100000L)
         .orderBy("source", "shard_ix")
     },
 
@@ -664,15 +659,10 @@ object GroupSeven {
         |FROM ex CROSS JOIN kth""") { (s, dir) =>
       graft.functions.GraftFunctions.register(s)
       val toks = T.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok")).distinct()
-      val h = toks.select(call_function("poly_hash", col("tok")).as("hv"))
-      val kth = h.orderBy("hv").limit(64) // TakeOrdered k-min merge
-        .agg(max(col("hv")).as("hk"), count(lit(1)).as("k"))
-      toks.agg(count(lit(1)).as("n_exact"))
-        .crossJoin(broadcast(kth))
-        .select(col("n_exact"), col("hk").cast(LongType).as("kth_hash"),
-          expr("(cast(k - 1 as decimal(38,0)) * 2305843009213693951L) div hk")
-            .as("est_kmv"))
+        .select(explode(split(col("text"), " ")).as("tok"))
+      toks.distinct().agg(count(lit(1)).as("n_exact"))
+        .crossJoin(broadcast(Pipelines.kmvDistinct(toks, "tok", 64)))
+        .select("n_exact", "kth_hash", "est_kmv")
     },
 
     // CUSUM changepoint scan over the daily purchase series — the shift

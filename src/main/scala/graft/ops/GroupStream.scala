@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, sqlKey}
+import graft.api.Pipelines
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,19 +87,11 @@ object GroupStream {
         |  FROM s GROUP BY 1,2)
         |SELECT user_id, count(*) AS n_sessions, CAST(SUM(dur_s) AS BIGINT) AS total_dur_s
         |FROM g GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val run = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T.t(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        // >= gap: session_window windows are half-open [ts, ts+gap), so an
-        // event exactly at prev+gap starts a NEW session (ADVICE r2)
-        .withColumn("new_s",
-          when(col("prev_ts").isNull ||
-            expr("unix_micros(cast(ts as timestamp)) - unix_micros(cast(prev_ts as timestamp))") >= 1800000000L, 1)
-            .otherwise(0))
-        .withColumn("sid", sum(col("new_s")).over(run))
-        .groupBy("user_id", "sid")
+      // >= gap: session_window windows are half-open [ts, ts+gap), so an
+      // event exactly at prev+gap starts a NEW session (ADVICE r2)
+      Pipelines.sessionize(T.t(s, dir, "events"), "user_id", "ts", 1800L,
+          tieBreak = Seq("event_id"))
+        .groupBy("user_id", "session_id")
         .agg(expr("(unix_micros(cast(max(ts) as timestamp)) - unix_micros(cast(min(ts) as timestamp))) DIV 1000000")
           .as("dur_s"))
         .groupBy("user_id")

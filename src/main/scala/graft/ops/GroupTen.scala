@@ -5259,9 +5259,8 @@ object GroupTen {
       val tk = docs
         .select(col("doc_id"), split(col("text"), " ").as("arr"))
         .where(expr("size(arr) >= 2"))
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(arr) - 2)," +
-            " i -> concat(arr[i], ' ', arr[i+1]))")).as("term"))
+        .select(col("doc_id"),
+          explode(graft.api.Pipelines.shingleArray(col("arr"), 2)).as("term"))
       val ft = tk.groupBy("term").agg(min("doc_id").as("fd"))
       val vb = ft.crossJoin(broadcast(nd))
         .groupBy(expr("(fd * 10) div nd").as("dec"))

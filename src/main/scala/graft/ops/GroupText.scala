@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q, qNoOracle}
+import graft.api.Pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,9 +20,7 @@ object GroupText {
     T.t(s, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
-      .withColumn("sh",
-        array_distinct(expr(
-          "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
+      .withColumn("sh", array_distinct(Pipelines.shingleArray(col("toks"))))
 
   /** The materialized shingle inverted index (doc_id, sh) — staged to
     * parquet once per (JVM, sfDir) and shared by every shingle consumer

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.T.{Q, q}
+import graft.api.Pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,14 +47,8 @@ object GroupVector {
         |  FROM s)
         |WHERE rnk <= 5 ORDER BY q_id, rnk""") { (s, dir) =>
       val e = emb(s, dir)
-      val qs = e.filter(col("vec_id") < 20).select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      val cs = e.filter(col("vec_id") >= 20).select(col("vec_id").as("c_id"), col("embedding").as("ce"))
-      cs.crossJoin(broadcast(qs))
-        .withColumn("sim", round(dot(col("qe"), col("ce")), 6))
-        .withColumn("rnk",
-          row_number().over(Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))))
-        .filter(col("rnk") <= 5)
-        .select("q_id", "rnk", "c_id", "sim")
+      Pipelines.cosineTopK(e.filter(col("vec_id") < 20), e.filter(col("vec_id") >= 20),
+          "vec_id", "vec_id", "embedding", 5)
         .orderBy("q_id", "rnk")
     },
 

@@ -11,7 +11,7 @@ class DedupSpec extends AnyFunSuite {
   private def run(key: String) = SparkEntry.queries(key)(s, sf)
 
   /** LEGACY min-label propagation (O(diameter) rounds) — kept only so
-    * this suite can demonstrate the failure mode pointer doubling fixes:
+    * this suite can demonstrate the failure mode hook-and-shortcut fixes:
     * a chain whose diameter exceeds the round budget never converges here.
     * Returns (labels, converged). */
   private def ccMinLabelLegacy(pairs: DataFrame,
@@ -70,18 +70,15 @@ class DedupSpec extends AnyFunSuite {
       s"missing planted dups: ${planted -- atZero}")
   }
 
-  test("prefix filtering is exact AT the threshold boundary (r15): a pair " +
-    "with jac/wjac/containment EXACTLY at its cut survives the shortest " +
-    "possible prefix") {
+  test("the inverted-index dedup family is exact AT the threshold " +
+    "boundary: a pair with jac/wjac/containment EXACTLY at its cut survives") {
     import s.implicits._
     // A/B: 1 unique + 8 shared trigrams each → jac = 8/(9+9−8) = 0.8
     // EXACTLY. The unique trigram is df=1 (dropped from the kept index but
-    // still counted in n), so ka=8, cmin=⌈0.8·9⌉=8 and the prefix is ONE
-    // row per doc — the tightest prefix the lemma permits. C/D: identical
-    // repeated text (weighted counts 2 per trigram) → wjac = 1.0.
+    // still counted in n). C/D: identical repeated text (weighted counts 2
+    // per trigram) → wjac = 1.0.
     // E (10 trigrams) ⊂ F (30 trigrams) with exactly 9 shared →
-    // containment = 9/min(10,30) = 0.9 EXACTLY, and F is 3× E's size so
-    // only the smaller-side prefix may be consulted.
+    // containment = 9/min(10,30) = 0.9 EXACTLY, although F is 3× E's size.
     val shared = (1 to 10).map(i => s"s$i").mkString(" ")
     // E = "ex e1..e11": 10 trigrams, 1 unique (ex e1 e2) + 9 shared with F
     val eTok = "ex" +: (1 to 11).map(i => s"e$i")
@@ -95,28 +92,20 @@ class DedupSpec extends AnyFunSuite {
       (5L, fTok.mkString(" "))).toDF("doc_id", "text")
     def trip(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val jac = api.Pipelines.nearDupPairs(corpus, "doc_id", "text",
-      prefixFilter = true).collect().map(trip)
+    val jac = api.Pipelines.nearDupPairs(corpus, "doc_id", "text")
+      .collect().map(trip)
     assert(jac.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 0.8),
       s"boundary jac-0.8 pair missing: ${jac.toSeq}")
-    // both candidate strategies must agree exactly (the prefix path is a
-    // recall-exact rewrite, not an approximation)
-    assert(jac.toSet == api.Pipelines.nearDupPairs(corpus, "doc_id", "text")
-      .collect().map(trip).toSet)
-    val wj = api.Pipelines.weightedJaccardPairs(corpus, "doc_id", "text",
-      prefixFilter = true).collect().map(trip)
+    val wj = api.Pipelines.weightedJaccardPairs(corpus, "doc_id", "text")
+      .collect().map(trip)
     assert(wj.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 0.8),
       s"boundary wjac-0.8 pair missing: ${wj.toSeq}")
     assert(wj.exists(p => p._1 == 2L && p._2 == 3L && p._3 == 1.0),
       s"repeated-text weighted pair missing: ${wj.toSeq}")
-    assert(wj.toSet == api.Pipelines
-      .weightedJaccardPairs(corpus, "doc_id", "text").collect().map(trip).toSet)
-    val cont = api.Pipelines.containmentPairs(corpus, "doc_id", "text",
-      prefixFilter = true).collect().map(trip)
+    val cont = api.Pipelines.containmentPairs(corpus, "doc_id", "text")
+      .collect().map(trip)
     assert(cont.exists(p => p._1 == 4L && p._2 == 5L && p._3 == 0.9),
       s"boundary containment-0.9 pair missing: ${cont.toSeq}")
-    assert(cont.toSet == api.Pipelines
-      .containmentPairs(corpus, "doc_id", "text").collect().map(trip).toSet)
   }
 
   test("dedup_ngram_jaccard pairs are symmetric-free and above threshold") {
@@ -216,14 +205,30 @@ class DedupSpec extends AnyFunSuite {
     val farEnd = oldLbl.filter(col("doc_id") === 63L).collect().head
     assert(farEnd.getAs[Long]("cluster_rep") > 0L,
       "legacy labels at the far end must still be wrong after 15 rounds")
-    // pointer doubling: reach doubles per round → ~log2(63) rounds
-    val (lbl, rounds, converged) = api.Pipelines.ccPointerDoubling(chain, 30)
-    assert(converged, s"pointer doubling did not converge ($rounds rounds)")
-    assert(rounds <= 10, s"expected O(log d) rounds, got $rounds")
-    val reps = lbl.collect().map(r =>
-      (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_rep")))
-    assert(reps.length == 64 && reps.forall(_._2 == 0L),
-      "every chain node must label to the component min (0)")
+    // hook-and-shortcut: O(log d) rounds whatever the id layout — the
+    // ascending chain (the old loop's best case), the same chain with its
+    // ids shuffled along it (i·37 mod 64: 28 rounds for a per-node hop +
+    // one jump), a 64-leaf star and a 63-node complete binary tree
+    val shuffled = (0 until 63).map(i => ((i * 37 % 64).toLong,
+      ((i + 1) * 37 % 64).toLong)).toDF("ia", "ib")
+    val star = (1L to 64L).map(i => (64L, i - 1)).toDF("ia", "ib")
+    val tree = (1L until 63L).map(i => ((i - 1) / 2, i)).toDF("ia", "ib")
+    Seq("chain" -> (chain, 64), "shuffled chain" -> (shuffled, 64),
+        "star" -> (star, 65), "binary tree" -> (tree, 63)).foreach {
+      case (name, (pairs, nodes)) =>
+        val (lbl, rounds, converged) = api.Pipelines.ccHookShortcut(pairs, 30)
+        assert(converged, s"$name: did not converge ($rounds rounds)")
+        assert(rounds <= 10, s"$name: expected O(log d) rounds, got $rounds")
+        val reps = lbl.collect().map(r =>
+          (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_rep")))
+        assert(reps.length == nodes && reps.forall(_._2 == 0L),
+          s"$name: every node must label to the component min (0)")
+        // a size estimate carried across checkpoints is squared by every
+        // shortcut self-join (27.8M digits after 5 rounds at 1024 nodes)
+        val est = lbl.queryExecution.optimizedPlan.stats.sizeInBytes
+        assert(est.bitLength <= 128, s"$name: size estimate compounds " +
+          s"across generations (${est.bitLength} bits)")
+    }
   }
 
   test("dfCap sensitivity: a planted viral shingle (df >> cap) has its " +

@@ -69,11 +69,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(c("Exchange") - c("ReusedExchange") - c("BroadcastExchange") > 1)
   }
 
-  test("FaultProbe soak rejects fewer than 2 rounds before it runs a board") {
-    // its verdict compares the last round with round 2, which one round
-    // lacks; the check must fire before the board runs, not after
+  test("FaultProbe soak rejects fewer than 3 rounds before it runs a board") {
+    // its verdict compares the last round with round 2, so two rounds would
+    // compare round 2 with itself; the check must fire before the board
+    // runs, not after
     val e = intercept[IllegalArgumentException](
-      FaultProbe.main(Array("soak", TestSpark.sf, "1")))
-    assert(e.getMessage.contains("rounds must be at least 2"))
+      FaultProbe.main(Array("soak", TestSpark.sf, "2")))
+    assert(e.getMessage.contains("rounds must be at least 3"))
   }
 }

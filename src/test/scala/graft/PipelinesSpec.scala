@@ -6,6 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Parity pins for the fixture-independent library API (graft.api.Pipelines):
   * each generic operator reproduces the corresponding graded fixture query
   * on the fixture tables at sf0.001.
+  *
+  * Graded keys that call their `Pipelines` function for the algorithm
+  * (the dedup family, k-core, sessionize, context/shard packing, cosine
+  * top-k and rerank, sliding distinct, KMV, hash sample, z-order) keep
+  * only fixture selection, column shaping and ordering, so for them PARITY
+  * holds by construction, as SqlParitySpec's does for `T.sqlKey` keys:
+  * those tests pin the shaping and the library's own defaults. For the
+  * keys that keep their own body (sssp, triangles, as-of, exact dedup,
+  * and the rest) they still pin two programs.
   */
 class PipelinesSpec extends AnyFunSuite {
   private val s = TestSpark.spark

@@ -67,5 +67,26 @@ class SortedIntersectSpec extends AnyFunSuite {
       val cnt = SortedIntersectCount(lit(a), lit(b)).eval(null)
       assert(cnt == expect.length.toLong)
     }
+    // the precondition is checked over EVERY element of both operands, in
+    // the interpreted and the codegen'd path alike: an unsorted or
+    // duplicate-bearing side raises instead of silently miscounting
+    // (a merge over Seq(3, 1) vs Seq(1, 3) finds 1 common element, not 2)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    val bad = Seq(
+      (Seq(3L, 1L), Seq(1L, 3L)),           // unsorted left
+      (Seq(1L, 2L, 9L), Seq(2L, 2L, 9L)),   // duplicate right
+      (Seq(1L, 5L, 4L), Seq(1L)))           // disorder after the merge ends
+    bad.foreach { case (a, b) =>
+      Seq(SortedIntersect(lit(a), lit(b)),
+          SortedIntersectCount(lit(a), lit(b))).foreach { e =>
+        val interp = intercept[IllegalArgumentException](e.eval(null))
+        assert(interp.getMessage.contains("strictly ascending"), interp.getMessage)
+        val codegen = intercept[IllegalArgumentException](
+          GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty))
+        assert(codegen.getMessage.contains(s"${e.prettyName} requires strictly ascending"),
+          codegen.getMessage)
+      }
+    }
   }
 }
